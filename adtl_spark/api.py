@@ -216,19 +216,7 @@ class Parser:
     def show_report(self) -> None:
         if not self.report_available:
             return
-        report = self.build_report()
-        print("\n|table       \t|valid\t|total\t|percentage_valid|")
-        print("|---------------|-------|-------|----------------|")
-        for table, total in report["total"].items():
-            valid = report["total_valid"][table]
-            pct = (valid / total * 100) if total else 0.0
-            print(f"|{table:14s}\t|{valid}\t|{total}\t|{pct:.6f}% |")
-        for table, errors in report["validation_errors"].items():
-            if not errors:
-                continue
-            print(f"\n## {table}\n")
-            for message, count in sorted(errors.items(), key=lambda kv: -kv[1]):
-                print(f"* {count}: {message}")
+        print_report(self.build_report())
 
     # ------------------------------------------------------------------ check
 
@@ -289,6 +277,22 @@ def parse_rows(
 ):
     parser = Parser(spec, spark=spark).parse_rows(rows)
     return parser.data
+
+
+def print_report(report: dict[str, Any]) -> None:
+    """Print a validation report as the reference's markdown summary."""
+    print("\n|table       \t|valid\t|total\t|percentage_valid|")
+    print("|---------------|-------|-------|----------------|")
+    for table, total in report["total"].items():
+        valid = report["total_valid"][table]
+        pct = (valid / total * 100) if total else 0.0
+        print(f"|{table:14s}\t|{valid}\t|{total}\t|{pct:.6f}% |")
+    for table, errors in report["validation_errors"].items():
+        if not errors:
+            continue
+        print(f"\n## {table}\n")
+        for message, count in sorted(errors.items(), key=lambda kv: -kv[1]):
+            print(f"* {count}: {message}")
 
 
 def validate_specification(spec: str | Path | StrDict) -> None:

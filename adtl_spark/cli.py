@@ -15,7 +15,7 @@ from pathlib import Path
 
 
 def handle_parse(args: argparse.Namespace) -> int:
-    from adtl_spark.api import Parser
+    from adtl_spark.api import Parser, print_report
 
     if getattr(args, "parquet", False):
         args.format = "parquet"
@@ -34,10 +34,12 @@ def handle_parse(args: argparse.Namespace) -> int:
     parser.parse(args.file, encoding=args.encoding)
     output = args.output or parser.name
     parser.save(output, format=args.format)
+    if args.quiet and not args.save_report:
+        return 0
+    report = parser.build_report()
     if not args.quiet:
-        parser.show_report()
+        print_report(report)
     if args.save_report:
-        report = parser.build_report()
         Path(args.save_report).write_text(json.dumps(report, indent=2, default=int))
     return 0
 

@@ -35,7 +35,7 @@ from adtl_spark.operators import joins as J
 from adtl_spark.operators import monitor as MO
 from adtl_spark.operators import retrieval as R
 from adtl_spark.operators import text as X
-from adtl_spark.session import configure_for_engine, scan_parallel
+from adtl_spark.session import configure_for_engine, cut, scan_parallel
 
 DEC = "decimal(18,4)"
 
@@ -91,9 +91,7 @@ def _ckpt_order(df: DataFrame, *cols) -> DataFrame:
     session.cut: reliable checkpoint under
     spark.adtl.reliableCheckpoint (r14 — local blocks are not
     fault-tolerant on a real cluster)."""
-    from adtl_spark.session import cut as _cut
-
-    return _cut(df).orderBy(*cols)
+    return cut(df).orderBy(*cols)
 
 
 def _dec_sum(col, alias: str):
@@ -5067,13 +5065,11 @@ def multimodal_dhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1/sf0.01 + the unchanged doc-level oracle.  Before: the band
     # join exploded ~5000 docs over 18 hot hash values into ~1.4M
     # doc-level candidates; after: <= C(18,2) rep candidates.
-    uh = (
-        classed.groupBy("dhash_hi", "dhash_lo")
-        .agg(
+    uh = cut(
+        classed.groupBy("dhash_hi", "dhash_lo").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.min("media_id").alias("media_id"),
         )
-        .localCheckpoint()
     )
     ph = M.dhash_pairs(
         uh.select("media_id", "dhash_hi", "dhash_lo"), max_hamming=8

@@ -119,14 +119,22 @@ def scan_parallel(df, factor: int = 2, by=None, barrier: bool = False):
 RELIABLE_CKPT_CONF = "spark.adtl.reliableCheckpoint"
 
 
+class CheckpointDirNotSetError(RuntimeError):
+    """Reliable cuts are on but the context has no checkpoint directory."""
+
+
 def cut(df):
     """Cut ``df``'s lineage eagerly: ``localCheckpoint()`` by default,
     reliable ``checkpoint()`` when RELIABLE_CKPT_CONF is true (see the
     conf comment above for the fault-tolerance trade)."""
-    if (
-        df.sparkSession.conf.get(RELIABLE_CKPT_CONF, "false").lower()
-        == "true"
-    ):
+    session = df.sparkSession
+    if session.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true":
+        if session.sparkContext.getCheckpointDir() is None:
+            raise CheckpointDirNotSetError(
+                f"{RELIABLE_CKPT_CONF}=true needs a checkpoint directory: "
+                "call spark.sparkContext.setCheckpointDir(<durable path>) "
+                f"first, or unset {RELIABLE_CKPT_CONF}"
+            )
         return df.checkpoint()
     return df.localCheckpoint()
 

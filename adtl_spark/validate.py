@@ -32,6 +32,7 @@ the integer 25 (the reference's dynamic typing), so it fails a
 from __future__ import annotations
 
 import warnings
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -49,6 +50,11 @@ _NATIVE_KEYWORDS = {
     "anyOf", "allOf", "oneOf", "not",
     # annotations with no validation semantics
     "description", "title", "default", "examples", "category", "PrimaryKey",
+}
+
+# keywords that compare the cell as a number
+_NUMERIC_KEYWORDS = {
+    "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum", "multipleOf",
 }
 
 
@@ -108,7 +114,8 @@ def _keyword_checks(
         parsed = F.try_to_timestamp(col, F.lit("yyyy-M-d"))
         checks.append((parsed.isNull(), f"{label} must be date"))
 
-    num = F.when(R.is_numeric_string(col), col.cast("double"))
+    if not is_arr and not _NUMERIC_KEYWORDS.isdisjoint(prop):
+        num = F.when(R.is_numeric_string(col), col.cast("double"))
     if "minimum" in prop and not is_arr:
         checks.append(
             (
@@ -335,15 +342,19 @@ def _subschema_violations(
     return checks
 
 
-def _discriminator_subschemas(schema: StrDict, discriminator: str) -> dict[str, StrDict] | None:
+def _discriminator_subschemas(
+    schema: StrDict, discriminator: str
+) -> list[tuple[list[str], StrDict]] | None:
     """Expand oneOf options keyed by discriminator const/enum
-    (mirrors util.expand_schema semantics)."""
+    (mirrors util.expand_schema semantics): one (keys, subschema) pair per
+    option.  A key listed in several options belongs to the last of them."""
     options = schema.get("oneOf", [])
     if not any("properties" in o for o in options):
         return None
     general_props = schema.get("properties", {})
     general_req = schema.get("required", [])
-    expanded: dict[str, StrDict] = {}
+    subs: list[StrDict] = []
+    owner: dict[str, int] = {}
     for option in options:
         props = option.get("properties", {})
         disc = props.get(discriminator, {})
@@ -353,13 +364,18 @@ def _discriminator_subschemas(schema: StrDict, discriminator: str) -> dict[str, 
             keys = list(disc["enum"])
         else:
             return None  # fall back to unexpanded mode
-        sub = {
-            "properties": {**general_props, **props},
-            "required": general_req + option.get("required", []),
-        }
         for k in keys:
-            expanded[str(k)] = sub
-    return expanded or None
+            owner[str(k)] = len(subs)
+        subs.append(
+            {
+                "properties": {**general_props, **props},
+                "required": general_req + option.get("required", []),
+            }
+        )
+    expanded = [
+        ([k for k, i in owner.items() if i == n], sub) for n, sub in enumerate(subs)
+    ]
+    return [(keys, sub) for keys, sub in expanded if keys] or None
 
 
 def annotate_validation(
@@ -378,60 +394,72 @@ def annotate_validation(
         expanded = _discriminator_subschemas(schema, meta["discriminator"])
         if expanded is not None:
             disc_col = F.col(meta["discriminator"])
-            error: Column = F.lit(None).cast("string")
-            # build per-discriminator error expressions, innermost last
-            for key, sub in expanded.items():
-                sub_err = _first_error(_subschema_violations(sub, df, array_cols))
-                error = F.when(disc_col == F.lit(key), sub_err).otherwise(error)
-            known = F.lit(None).cast("string")
+            # each option's checks compiled once, selected by its keys;
+            # unknown and null discriminators fall through to the message
+            cases = [
+                (disc_col.isin(*keys), _first_error(_subschema_violations(sub, df, array_cols)))
+                for keys, sub in expanded
+            ]
             unknown_msg = F.concat(
                 F.lit("No validator found for attribute '"),
                 F.coalesce(disc_col, F.lit("None")),
                 F.lit(f"' in table '{table}'"),
             )
-            is_known = disc_col.isin(*expanded.keys())
-            error = F.when(is_known, error).otherwise(unknown_msg)
-            return _attach(df, error)
+            return _attach(df, _first_match(cases, unknown_msg))
 
     error = _first_error(_subschema_violations(schema, df, array_cols))
     return _attach(df, error)
 
 
+def _first_match(cases: list[tuple[Column, Column]], default: Column) -> Column:
+    """CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ... ELSE default END."""
+    out = None
+    for cond, value in cases:
+        out = F.when(cond, value) if out is None else out.when(cond, value)
+    return default if out is None else out.otherwise(default)
+
+
 def _first_error(checks: list[tuple[Column, str]]) -> Column:
-    error: Column = F.lit(None).cast("string")
-    for cond, msg in reversed(checks):
-        error = F.when(cond, F.lit(msg)).otherwise(error)
-    return error
+    return _first_match(
+        [(cond, F.lit(msg)) for cond, msg in checks], F.lit(None).cast("string")
+    )
 
 
 def _attach(df: DataFrame, error: Column) -> DataFrame:
-    annotated = df.withColumn("adtl_error", error).withColumn(
-        "adtl_valid", F.col("adtl_error").isNull()
-    )
-    return annotated.select(
-        "adtl_valid", "adtl_error", *[c for c in df.columns]
+    """Prepend adtl_valid / adtl_error in one projection."""
+    return df.select(
+        error.isNull().alias("adtl_valid"), error.alias("adtl_error"), *df.columns
     )
 
 
 def validation_report(tables: dict[str, DataFrame]) -> dict[str, Any]:
     """S9 validation counters: totals + error histogram per table
-    (reference: parser.py:845-863, cli.py:78-90) — computed as aggregations,
-    not a second row-wise pass."""
+    (reference: parser.py:845-863, cli.py:78-90) — one error histogram
+    per validated table, all of them computed by a single action."""
     report: dict[str, Any] = {"total": {}, "total_valid": {}, "validation_errors": {}}
-    for name, df in tables.items():
-        if "adtl_valid" not in df.columns:
-            continue
-        counts = df.agg(
-            F.count(F.lit(1)).alias("total"),
+    names = [name for name, df in tables.items() if "adtl_valid" in df.columns]
+    if not names:
+        return report
+    # grouped by adtl_error alone (its null key holds the valid rows): a
+    # table's messages then come back in the order a groupBy of its error
+    # column gives, which adding adtl_valid to the key would change
+    histograms = [
+        tables[name]
+        .groupBy("adtl_error")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
             F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
-        ).collect()[0]
-        report["total"][name] = counts["total"]
-        report["total_valid"][name] = counts["valid"] or 0
-        errors = (
-            df.filter(F.col("adtl_error").isNotNull())
-            .groupBy("adtl_error")
-            .count()
-            .collect()
         )
-        report["validation_errors"][name] = {r["adtl_error"]: r["count"] for r in errors}
+        .select(F.lit(name).alias("table"), "adtl_error", "n", "valid")
+        for name in names
+    ]
+    for name in names:
+        report["total"][name] = 0
+        report["total_valid"][name] = 0
+        report["validation_errors"][name] = {}
+    for table, error, n, valid in reduce(DataFrame.union, histograms).collect():
+        report["total"][table] += n
+        report["total_valid"][table] += valid or 0
+        if error is not None:
+            report["validation_errors"][table][error] = n
     return report

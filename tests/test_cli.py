@@ -84,6 +84,36 @@ def test_cli_save_report(workdir, tmp_path):
     assert set(report) == {"total", "total_valid", "validation_errors"}
 
 
+def test_cli_report_built_once(workdir, tmp_path, capsys, monkeypatch):
+    """Printing the report and saving it reuse one computed report."""
+    from adtl_spark.api import Parser
+
+    calls = []
+    real_build = Parser.build_report
+
+    def counting_build(self):
+        calls.append(self)
+        return real_build(self)
+
+    monkeypatch.setattr(Parser, "build_report", counting_build)
+    report_file = tmp_path / "report.json"
+    rc = main(
+        [
+            "parse",
+            str(workdir / "spec.toml"),
+            str(workdir / "data.csv"),
+            "-o",
+            str(workdir / "once"),
+            "--save-report",
+            str(report_file),
+        ]
+    )
+    assert rc == 0
+    assert len(calls) == 1
+    assert "|percentage_valid|" in capsys.readouterr().out
+    assert json.loads(report_file.read_text()) == calls[0].report
+
+
 def test_bom_in_source_header(workdir, spark):
     from adtl_spark.api import Parser
 

@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from adtl_spark.session import RELIABLE_CKPT_CONF, cut
+from adtl_spark.session import RELIABLE_CKPT_CONF, CheckpointDirNotSetError, cut
 
 
 def test_cluster_pairs_fused_rounds_min_label(spark):
@@ -53,6 +53,25 @@ def test_cut_reliable_checkpoint_path(spark, tmp_path):
     out2 = cut(df)
     assert out2.count() == 100
     assert sum(len(fs) for _, _, fs in os.walk(ckpt_dir)) == before
+
+
+def test_cut_reliable_without_checkpoint_dir_names_the_fix(spark, monkeypatch):
+    """Reliable mode with no checkpoint dir fails with a named error that
+    says which conf is on and how to give it a directory; the default
+    mode still cuts locally without one."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda self: None)
+    df = spark.range(10)
+    try:
+        spark.conf.set(RELIABLE_CKPT_CONF, "true")
+        with pytest.raises(CheckpointDirNotSetError) as err:
+            cut(df)
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
+    assert RELIABLE_CKPT_CONF in str(err.value)
+    assert "setCheckpointDir" in str(err.value)
+    assert cut(df).count() == 10
 
 
 def test_cluster_pairs_reliable_cut_same_output(spark, tmp_path):

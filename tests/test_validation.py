@@ -127,3 +127,225 @@ def test_validation_counts_and_messages(spark, tmp_path):
     errs = {e for ok, e in got if not ok}
     assert "data.age must be bigger than or equal to 0" in errs
     assert "data.age must be smaller than or equal to 120" in errs
+
+
+# ------------------------------------------------------------ oneOf + report
+
+OBS_ONEOF_SCHEMA = {
+    "properties": {
+        "name": {"type": "string"},
+        "phase": {"type": "string", "enum": ["admission", "followup"]},
+        "value": {"type": "number"},
+        "is_present": {"type": "boolean"},
+    },
+    "required": ["name", "phase"],
+    "oneOf": [
+        {
+            "properties": {"name": {"enum": ["cough", "fever", "rash"]}},
+            "required": ["is_present"],
+        },
+        # "rash" is also listed above: the later option is its validator
+        {
+            "properties": {"name": {"const": "rash"}, "value": {"minimum": 0}},
+            "required": ["value"],
+        },
+        {
+            "properties": {"name": {"const": "oxygen"}, "value": {"maximum": 100}},
+            "required": ["value"],
+        },
+    ],
+}
+
+OBS_ROWS = [
+    {"n": "cough", "ph": "admission", "v": "", "p": "1"},
+    {"n": "cough", "ph": "admission", "v": "", "p": ""},
+    {"n": "fever", "ph": "nowhere", "v": "", "p": "0"},
+    {"n": "rash", "ph": "followup", "v": "3", "p": ""},
+    {"n": "rash", "ph": "followup", "v": "", "p": "1"},
+    {"n": "rash", "ph": "followup", "v": "-1", "p": ""},
+    {"n": "oxygen", "ph": "admission", "v": "150", "p": ""},
+    {"n": "oxygen", "ph": "admission", "v": "95", "p": ""},
+    {"n": "headache", "ph": "admission", "v": "", "p": "1"},
+    {"n": "", "ph": "admission", "v": "", "p": "1"},
+]
+
+
+def _obs_block(if_cond):
+    return [
+        {
+            "name": {"field": "n"},
+            "phase": {"field": "ph"},
+            "value": {"field": "v"},
+            "is_present": {"field": "p", "values": {"1": True, "0": False}},
+            "if": if_cond,
+        }
+    ]
+
+
+def _write_schema(tmp_path, name, schema):
+    f = tmp_path / f"{name}.schema.json"
+    f.write_text(json.dumps(schema))
+    return str(f)
+
+
+def test_discriminator_options_pinned(spark, tmp_path):
+    """A oneOf long table validates each row against the option its
+    discriminator selects: an enum option covers three keys, a key listed
+    in two options takes the later one, and unknown or missing keys get
+    the 'No validator found' error."""
+    spec = {
+        "adtl": {
+            "name": "d",
+            "description": "",
+            "tables": {
+                "obs": {
+                    "kind": "oneToMany",
+                    "schema": _write_schema(tmp_path, "obs", OBS_ONEOF_SCHEMA),
+                    "discriminator": "name",
+                }
+            },
+        },
+        "obs": _obs_block({"ph": {"!=": ""}}),
+    }
+    df = Parser(spec, spark=spark).parse_rows(OBS_ROWS).table("obs")
+    got = sorted(
+        ((r["name"], r["value"], r["is_present"], r["adtl_valid"], r["adtl_error"])
+         for r in df.collect()),
+        key=str,
+    )
+    no_validator = "No validator found for attribute '{}' in table 'obs'"
+    want = sorted(
+        [
+            ("cough", None, "True", True, None),
+            ("cough", None, None, False, "data must contain ['is_present'] properties"),
+            ("fever", None, "False", False,
+             "data.phase must be one of ['admission', 'followup']"),
+            ("rash", "3.0", None, True, None),
+            ("rash", None, "True", False, "data must contain ['value'] properties"),
+            ("rash", "-1.0", None, False, "data.value must be bigger than or equal to 0"),
+            ("oxygen", "150.0", None, False,
+             "data.value must be smaller than or equal to 100"),
+            ("oxygen", "95.0", None, True, None),
+            ("headache", None, "True", False, no_validator.format("headache")),
+            (None, None, "True", False, no_validator.format("None")),
+        ],
+        key=str,
+    )
+    assert got == want
+
+
+def _report_two_aggregates_per_table(tables):
+    """The report as two separate aggregations per table (totals, then the
+    error histogram) — the oracle for the single-action report."""
+    from pyspark.sql import functions as F
+
+    report = {"total": {}, "total_valid": {}, "validation_errors": {}}
+    for name, df in tables.items():
+        if "adtl_valid" not in df.columns:
+            continue
+        counts = df.agg(
+            F.count(F.lit(1)).alias("total"),
+            F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
+        ).collect()[0]
+        report["total"][name] = counts["total"]
+        report["total_valid"][name] = counts["valid"] or 0
+        errors = (
+            df.filter(F.col("adtl_error").isNotNull())
+            .groupBy("adtl_error")
+            .count()
+            .collect()
+        )
+        report["validation_errors"][name] = {r["adtl_error"]: r["count"] for r in errors}
+    return report
+
+
+def _multi_table_parser(spark, tmp_path):
+    subject_schema = {
+        "properties": {
+            "subject_id": {"type": "string"},
+            "age": {"type": "integer", "minimum": 0, "maximum": 120},
+            "sex": {"enum": ["male", "female"]},
+        },
+        "required": ["subject_id"],
+    }
+    empty_schema = {
+        "properties": {"name": {"type": "string"}, "phase": {"type": "string"}},
+        "required": ["name"],
+    }
+    spec = {
+        "adtl": {
+            "name": "multi",
+            "description": "",
+            "tables": {
+                "plain": {"kind": "oneToOne"},
+                "subject": {
+                    "kind": "oneToOne",
+                    "schema": _write_schema(tmp_path, "subject", subject_schema),
+                },
+                "empty": {
+                    "kind": "oneToMany",
+                    "schema": _write_schema(tmp_path, "empty", empty_schema),
+                    "discriminator": "name",
+                },
+                "obs": {
+                    "kind": "oneToMany",
+                    "schema": _write_schema(tmp_path, "obs", OBS_ONEOF_SCHEMA),
+                    "discriminator": "name",
+                },
+            },
+        },
+        "plain": {"subject_id": {"field": "sid"}},
+        "subject": {
+            "subject_id": {"field": "sid"},
+            "age": {"field": "age"},
+            "sex": {"field": "sex"},
+        },
+        "empty": _obs_block({"ph": "never"}),
+        "obs": _obs_block({"ph": {"!=": ""}}),
+    }
+    ages = ["34", "150", "-3", "x", "61", "", "29", "130", "45", "7"]
+    sexes = ["male", "female", "other", "male", "", "female", "?", "male", "female", "male"]
+    rows = [
+        {"sid": f"S{i}", "age": ages[i], "sex": sexes[i], **OBS_ROWS[i]}
+        for i in range(len(OBS_ROWS))
+    ]
+    return Parser(spec, spark=spark).parse_rows(rows)
+
+
+def test_report_matches_two_aggregates_per_table(spark, tmp_path):
+    """The single-action report equals the per-table two-aggregate
+    computation, key order included; tables without a schema are absent
+    and an empty validated table reports 0 / 0 / {}."""
+    from adtl_spark.validate import validation_report
+
+    p = _multi_table_parser(spark, tmp_path)
+    got = validation_report(p.data)
+    want = _report_two_aggregates_per_table(p.data)
+    assert got == want
+    assert json.dumps(got) == json.dumps(want)  # key order, nested too
+    assert list(got["total"]) == ["subject", "empty", "obs"]
+    assert got["total"]["empty"] == 0
+    assert got["total_valid"]["empty"] == 0
+    assert got["validation_errors"]["empty"] == {}
+    assert got["total"]["obs"] == 10 and got["total_valid"]["obs"] == 3
+    assert got["validation_errors"]["obs"][
+        "No validator found for attribute 'headache' in table 'obs'"
+    ] == 1
+
+
+def test_report_is_one_collect(spark, tmp_path, monkeypatch):
+    from adtl_spark.validate import validation_report
+
+    p = _multi_table_parser(spark, tmp_path)
+    df_class = type(p.table("obs"))
+    calls = []
+    real_collect = df_class.collect
+
+    def counting_collect(self):
+        calls.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(df_class, "collect", counting_collect)
+    report = validation_report(p.data)
+    assert len(calls) == 1
+    assert set(report["total"]) == {"subject", "empty", "obs"}
