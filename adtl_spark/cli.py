@@ -149,15 +149,15 @@ def handle_clean(args: argparse.Namespace) -> int:
         )
     else:
         docs = spark.read.parquet(args.data)
-    clean, report = corpus_clean(
+    report = corpus_clean(
         docs,
+        args.output,
         min_quality=args.min_quality,
         max_top_bigram_frac=args.max_repetition,
         threshold=args.dedup_threshold,
         text_col=args.text_col,
         id_col=args.id_col,
     )
-    clean.write.mode("overwrite").parquet(args.output)
     print(json.dumps(report))
     return 0
 

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from adtl_spark.operators.graph import _gated_broadcast
+from adtl_spark.session import cut, cut_and_release
 
 # deterministic 31-bit modulus for minhash permutations (fits multiplication
 # by 31-bit coefficients inside int64)
@@ -60,27 +61,6 @@ def minhash_coefficients(k: int, seed: int = 7) -> list[tuple[int, int]]:
         b = state
         coeffs.append((a % MERSENNE_31, b % MERSENNE_31))
     return coeffs
-
-
-def _materialize_and_release(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    """Materialize ``result`` (localCheckpoint cuts its lineage off the
-    cached intermediates), then unpersist the intermediates.
-
-    persist() without a matching unpersist leaks executor memory across
-    queries in a long-lived session; but the caches can only be released
-    once nothing will recompute through them.  The result of every dedup
-    operator is a pair/canonical list orders of magnitude smaller than the
-    corpus, so materializing it is cheap at any scale.
-
-    The cut is session.cut: executor-local checkpoint by default,
-    reliable checkpoint under spark.adtl.reliableCheckpoint (r14) —
-    local blocks are NOT fault-tolerant, see session.RELIABLE_CKPT_CONF."""
-    from adtl_spark.session import cut
-
-    out = cut(result)
-    for c in caches:
-        c.unpersist()
-    return out
 
 
 # --------------------------------------------------------------------- exact
@@ -517,7 +497,7 @@ def dedup_ngram_jaccard(
             F.round("jaccard", 4).alias("jaccard"),
         )
     )
-    return _materialize_and_release(result, [canon_full, membership, doc_arr])
+    return cut_and_release(result, [canon_full, membership, doc_arr])
 
 
 def ngram_jaccard_oracle_sql(
@@ -608,13 +588,30 @@ def dedup_minhash_lsh(
     b bands of r=k/b rows; docs sharing any full band collide.  Estimated
     similarity = (#equal minhashes)/k over candidates only.  At 100 TB the
     band join shuffles (band_idx, band_signature) — a short key — and never
-    materializes all pairs.
+    materializes all pairs.  The pair list is materialized and the
+    signature cache released before returning.
     """
+    pairs, sig = minhash_lsh_plan(df, k, bands, threshold, n, text_col, id_col)
+    return cut_and_release(pairs, [sig])
+
+
+def minhash_lsh_plan(
+    df: DataFrame,
+    k: int,
+    bands: int,
+    threshold: float,
+    n: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`dedup_minhash_lsh` without the cut: returns (pairs, sig),
+    ``pairs`` still lazy and ``sig`` the persisted signature table the
+    caller releases once ``pairs`` has been materialized."""
     assert k % bands == 0
     # persisted: the signature table feeds the band explode AND the two
     # scoring joins below; without it the whole shingle+minhash pipeline
     # would run three times.  k doubles per doc (k*8 B) — tiny relative to
-    # the corpus.  Released after the result is materialized.
+    # the corpus.
     sig = minhash_signatures(df, k=k, n=n, text_col=text_col, id_col=id_col).persist()
     # the band self-join shuffles ONLY (id, band, sig) — the k mh_i columns
     # are joined back onto the (much smaller) candidate list afterwards, so
@@ -649,7 +646,7 @@ def dedup_minhash_lsh(
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
     )
-    return _materialize_and_release(result, [sig])
+    return result, sig
 
 
 def shingle_cte_sql(table: str, n: int) -> str:
@@ -852,7 +849,7 @@ def simhash_components(
     """
     # one eager cut: the tokenize+48-bit-vote pipeline computes once and
     # feeds the signature aggregation AND the final doc-level join
-    sig = simhash(df, text_col=text_col, id_col=id_col).localCheckpoint()
+    sig = cut(simhash(df, text_col=text_col, id_col=id_col))
     usig = sig.groupBy("simhash").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("doc_id").alias("min_id")
     )
@@ -915,7 +912,6 @@ def cluster_pairs(
     max_iterations: int = 20,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list: every member
     labeled with the smallest id in its component (the canonical doc).
@@ -928,43 +924,24 @@ def cluster_pairs(
     checkpointed: iterative plans otherwise grow lineage (and codegen)
     exponentially.
 
-    FUSED ROUND (r14 optimization round, guide §2.1/§2.4): adoption's
-    own-label term rides the edge relation as a SELF-LOOP row per node
-    (the label_propagation trick), so the old ``labels LEFT JOIN
-    neighbor_min`` merge disappears — one edge-scan aggregation yields
-    min(self, neighbors) directly.  The pointer jump then reads the
-    PREVIOUS round's already-checkpointed label table instead of
-    self-joining the adoption subtree (which executed the edge scan
-    twice per round).  A stale parent is still monotone — every label
-    is a node id in the same component and labels only decrease — so
-    the loop converges to the identical fixpoint (node -> component min
-    id; any converging monotone variant does), one round later at worst
-    (radius 2r+1 per round instead of 2r+2).  Measured at sf0.1: the
-    loop fell from 3.2 s / 5 rounds x (3 joins, 2 edge scans) to
-    1.6-2.1 s / 6 rounds x (1 join + 1 edge scan), output bit-identical.
+    Fused round: adoption's own-label term rides the edge relation as a
+    self-loop row per node (the label_propagation trick), so one
+    edge-scan aggregation yields min(self, neighbors) with no merge
+    join.  The pointer jump reads the previous round's checkpointed
+    label table rather than the adoption subtree, so a round scans the
+    edges once.  A stale parent is still monotone — every label is a
+    node id in the same component and labels only decrease — so the loop
+    converges to the same fixpoint (node -> component min id), at worst
+    one round later (radius 2r+1 per round instead of 2r+2).  At sf0.1
+    that is 6 rounds of 1 join + 1 edge scan, 1.6-2.1 s.
 
-    ``checkpoint_dir`` selects the cut strategy.  Default (None) uses
-    ``localCheckpoint`` — blocks live on executors, fastest, but an
-    executor loss mid-iteration kills the job.  Passing a directory (HDFS/
-    object store on a real cluster) switches to reliable ``checkpoint()``:
-    every iteration's labels survive executor loss, the right default for
-    multi-hour 100 TB runs.
+    Every cut goes through ``session.cut``: executor-local checkpoints by
+    default, reliable ``checkpoint()`` files under
+    ``spark.adtl.reliableCheckpoint`` (so each iteration's labels survive
+    executor loss once the context has a durable checkpoint dir).
 
     Returns (doc_id, canonical_id) for every node appearing in ``pairs``.
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-
-    else:
-        # session.cut: localCheckpoint by default, reliable checkpoint
-        # under spark.adtl.reliableCheckpoint (r14) — same switch the
-        # explicit checkpoint_dir parameter has always offered, now
-        # reachable session-wide without threading the parameter
-        from adtl_spark.session import cut
-
     # checkpointed: every iteration joins against edges — without cutting
     # lineage here each round would re-execute the whole upstream
     # pair-generation pipeline.  The pair list normalizes to (lo, hi)
@@ -1200,7 +1177,7 @@ def dedup_minhash_incremental(
         .filter(F.col("est_jaccard") >= threshold)
         .select("new_id", "corpus_id", F.round("est_jaccard", 4).alias("est_jaccard"))
     )
-    return _materialize_and_release(result, [sig_new, *ours])
+    return cut_and_release(result, [sig_new, *ours])
 
 
 def minhash_incremental_oracle_sql(
@@ -1625,7 +1602,7 @@ def tfidf_cosine_pairs(
             (F.col("__dot__").cast("double") / 1e12).alias("cosine"),
         )
     )
-    return _materialize_and_release(result, [canon_full, membership, unit])
+    return cut_and_release(result, [canon_full, membership, unit])
 
 
 def tfidf_cosine_oracle_sql(
@@ -1855,7 +1832,7 @@ def containment_pairs(
             ).alias("containment_q4"),
         )
     )
-    return _materialize_and_release(
+    return cut_and_release(
         result, [canon_full, membership, doc_arr]
     )
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut, cut_and_release
+
 __all__ = [
     "bradley_terry",
     "winrate_wilson",
@@ -57,8 +59,6 @@ def bradley_terry(
     count), e.g. a maintained streaming store — through the identical
     math: the MM update only ever sees sufficient statistics, so the
     weighted fit equals the row-per-comparison fit exactly."""
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     w = F.col(winner_col).alias("i")
     l = F.col(loser_col).alias("j")
     # per-ordered-pair win counts, then symmetric games n_ij.  Only
@@ -114,7 +114,7 @@ def bradley_terry(
         )
         # few iterations, item-sized state: cut the growing lineage so
         # round k+1 doesn't recompute rounds 1..k
-        scores = scores.localCheckpoint(eager=True)
+        scores = cut(scores)
     tot_games = games.groupBy("i").agg(F.sum("n_ij").alias("games"))
     result = (
         scores.join(wins, "i", "left")
@@ -127,7 +127,7 @@ def bradley_terry(
         )
     )
     # item-sized result — materialize, then release the statistics cache
-    return _materialize_and_release(result, [wins_ij])
+    return cut_and_release(result, [wins_ij])
 
 
 def winrate_wilson(

@@ -33,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from adtl_spark.session import cut as _cut
+from adtl_spark.session import cut, cut_and_release
 
 PR_SCALE = 1_000_000_000
 
@@ -210,7 +210,7 @@ def pagerank(
                 )
                 .select(F.col("dst").alias("v"), "rq")
             )
-            ranks = _cut(ranks)
+            ranks = cut(ranks)
         return ranks.select(
             F.col("v"),
             (
@@ -338,21 +338,17 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         F.least(F.col("e3.u"), F.col("e3.x")).alias("a2"),
         F.greatest(F.col("e3.u"), F.col("e3.x")).alias("b2"),
     )
-    try:
-        # one row; the eager checkpoint cuts the result off the caches so
-        # they can be released before returning (pagerank's pattern)
-        out = (
-            wedges.select(
-                F.least(F.col("a"), F.col("b")).alias("a2"),
-                F.greatest(F.col("a"), F.col("b")).alias("b2"),
-            )
-            .join(closing, ["a2", "b2"])
-            .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    # one row; the eager checkpoint cuts the result off the caches so
+    # they can be released before returning (pagerank's pattern)
+    out = (
+        wedges.select(
+            F.least(F.col("a"), F.col("b")).alias("a2"),
+            F.greatest(F.col("a"), F.col("b")).alias("b2"),
         )
-        return _cut(out)
-    finally:
-        o.unpersist()
-        und.unpersist()
+        .join(closing, ["a2", "b2"])
+        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    )
+    return cut_and_release(out, [o, und])
 
 
 def triangle_count_cooccurrence_oracle_sql(
@@ -479,7 +475,7 @@ def label_propagation(
                 )
                 .select(F.col("dst").alias("v"), F.col("lab"))
             )
-        labels = _cut(labels)
+        labels = cut(labels)
         return labels.select(
             "v", F.col("lab").alias("community")
         ).orderBy("community", "v")
@@ -610,32 +606,29 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     n_comm = labels.agg(
         F.countDistinct("community").cast("long").alias("n_communities")
     )
-    try:
-        out = (
-            n_comm.crossJoin(w_tot)
-            .crossJoin(num)
-            .select(
-                "n_communities",
-                F.coalesce(F.col("wt"), F.lit(0))
-                .cast("long")
-                .alias("w_total"),
-                F.when(
-                    F.coalesce(F.col("wt"), F.lit(0)) > 0,
-                    F.floor(
-                        F.col("num").cast("double")
-                        / (F.col("wt").cast("double") * F.col("wt"))
-                        * 1000000
-                        + F.lit(0.5)
-                    )
-                    / 1000000.0,
+    out = (
+        n_comm.crossJoin(w_tot)
+        .crossJoin(num)
+        .select(
+            "n_communities",
+            F.coalesce(F.col("wt"), F.lit(0))
+            .cast("long")
+            .alias("w_total"),
+            F.when(
+                F.coalesce(F.col("wt"), F.lit(0)) > 0,
+                F.floor(
+                    F.col("num").cast("double")
+                    / (F.col("wt").cast("double") * F.col("wt"))
+                    * 1000000
+                    + F.lit(0.5)
                 )
-                .otherwise(F.lit(0.0))
-                .alias("modularity"),
+                / 1000000.0,
             )
+            .otherwise(F.lit(0.0))
+            .alias("modularity"),
         )
-        return _cut(out)
-    finally:
-        edges.unpersist()
+    )
+    return cut_and_release(out, [edges])
 
 
 def modularity_lpa_oracle_sql(

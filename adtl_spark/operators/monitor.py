@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut_and_release
+
 
 def _q6(x: Column) -> Column:
     return F.floor(x * 1000000 + F.lit(0.5)).cast("long")
@@ -208,7 +210,6 @@ def ks_drift(
             .alias("g_q6"),
         )
     )
-    from adtl_spark.operators.dedup import _materialize_and_release
 
     dmax = q.agg(F.max("g_q6").alias("d_q6"))
     result = (
@@ -224,7 +225,7 @@ def ks_drift(
         )
     )
     # one-row result; release the persisted value-grain relation
-    return _materialize_and_release(result, [counts])
+    return cut_and_release(result, [counts])
 
 
 def ks_drift_oracle_sql(
@@ -301,7 +302,6 @@ def vocab_js_drift(
     sum(js_q6)/1e6 is the headline divergence.  Both-sides-empty input
     yields the single zero-drift OOV row.
     """
-    from adtl_spark.operators.dedup import _materialize_and_release
     from adtl_spark.operators.text import tokens
 
     tagged = ref.select(
@@ -354,7 +354,7 @@ def vocab_js_drift(
         _q6(q).alias("q_q6"),
         _q6(js).alias("js_q6"),
     ).orderBy("token")
-    return _materialize_and_release(out, [counts])
+    return cut_and_release(out, [counts])
 
 
 def vocab_js_drift_oracle_sql(

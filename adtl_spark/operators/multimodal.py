@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from adtl_spark.session import cut_and_release
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -2268,9 +2270,8 @@ def dhash_pairs(hashes: DataFrame, max_hamming: int = 8) -> DataFrame:
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
     )
-    from adtl_spark.operators.dedup import _materialize_and_release
 
-    return _materialize_and_release(pairs, [sig])
+    return cut_and_release(pairs, [sig])
 
 
 def resize_image_nn(df: DataFrame, factor: int = 2) -> DataFrame:

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut_and_release
+
 
 def skew_report(df: DataFrame, key: Column | str, top_k: int = 10) -> DataFrame:
     """One-row skew diagnostic for ``key``:
@@ -349,8 +351,6 @@ def robust_outliers(
     """
     from pyspark.sql import Window
 
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     v = F.col(value) if isinstance(value, str) else value
     base = df.select(F.col(id_col).alias("id"), v.cast("long").alias("x"))
     counts = base.groupBy("x").agg(F.count(F.lit(1)).alias("c")).persist()
@@ -396,7 +396,7 @@ def robust_outliers(
         )
         .orderBy("id")
     )
-    return _materialize_and_release(out, [counts])
+    return cut_and_release(out, [counts])
 
 
 def robust_outliers_oracle_sql(

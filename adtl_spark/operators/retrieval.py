@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from adtl_spark.operators.similarity import cosine, cosine_topk
 from adtl_spark.operators.text import tokens
+from adtl_spark.session import cut, cut_and_release
 
 QL_SCALE = 1_000_000          # quantum of the per-term ln() factors
 RRF_SCALE = 1_000_000_000_000  # 1/(k0+rank) quantized as SCALE DIV (k0+rank)
@@ -85,8 +86,6 @@ def ql_topk(
     on (id, token) for tf; query terms broadcast; the scored relation is
     bounded by postings matches, and dl joins map-side (AQE broadcasts
     the match-bounded side)."""
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.col(text_col))).alias("token"),
@@ -158,7 +157,7 @@ def ql_topk(
         )
     )
     # queries x k rows — materialize, then release the postings cache
-    return _materialize_and_release(result, [tf])
+    return cut_and_release(result, [tf])
 
 
 def ql_topk_oracle_sql(
@@ -496,13 +495,14 @@ def mmr_topk(
     1..k, mmr the decision score at the moment of selection, displayed
     at the 1e-7 quantum (the 10x lambda scaling over 1e-6)."""
     cand = cosine_topk(corpus, queries, k=pool, id_col=id_col, vec_col=vec_col)
-    cand = cand.select(
-        "query_id",
-        F.col("corpus_id").alias("cid"),
-        (F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long") * 100).alias(
-            "relq"
-        ),
-    ).localCheckpoint(eager=True)
+    cand = cut(
+        cand.select(
+            "query_id",
+            F.col("corpus_id").alias("cid"),
+            (F.floor(F.col("cos") * 10000 + F.lit(0.5)).cast("long") * 100)
+            .alias("relq"),
+        )
+    )
     # ^ the pool is the ONLY corpus-sized subtree; checkpointing it here
     # (before candv/pairs/sel derive from it) is what makes the k-1 greedy
     # iterations queries x pool sized — without it every per-step eager
@@ -510,13 +510,13 @@ def mmr_topk(
     cv = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("v"))
     candv = cv.join(F.broadcast(cand), "cid").select("query_id", "cid", "v")
     a, b = candv.alias("a"), candv.alias("b")
-    pairs = (
+    # pool^2 x queries rows; reused k-1 times
+    pairs = cut(
         a.join(
             b,
             (F.col("a.query_id") == F.col("b.query_id"))
             & (F.col("a.cid") != F.col("b.cid")),
-        )
-        .select(
+        ).select(
             F.col("a.query_id").alias("query_id"),
             F.col("a.cid").alias("ca"),
             F.col("b.cid").alias("cb"),
@@ -524,10 +524,9 @@ def mmr_topk(
             .cast("long")
             .alias("simq"),
         )
-        .localCheckpoint(eager=True)  # pool^2 x queries rows; reused k-1 times
     )
     w1 = Window.partitionBy("query_id").orderBy(F.desc("relq"), F.asc("cid"))
-    sel = (
+    sel = cut(
         cand.withColumn("__rn", F.row_number().over(w1))
         .filter(F.col("__rn") == 1)
         .select(
@@ -536,7 +535,6 @@ def mmr_topk(
             F.lit(1).cast("long").alias("pick"),
             (7 * F.col("relq")).alias("mmrq"),
         )
-        .localCheckpoint(eager=True)
     )
     for t in range(2, k + 1):
         rem = cand.join(sel.select("query_id", "cid"), ["query_id", "cid"], "left_anti")
@@ -566,7 +564,7 @@ def mmr_topk(
                 "mmrq",
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = cut(sel.unionByName(pick))
     return sel.select(
         "query_id",
         F.col("cid").alias("vec_id"),
@@ -1260,7 +1258,7 @@ def append_to_search_index(
     tf = toks.groupBy("id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
-    tf = tf.localCheckpoint(eager=True)  # read twice (postings + lexicon delta)
+    tf = cut(tf)  # read twice (postings + lexicon delta)
     tf.withColumn("bucket", bucket).write.mode("overwrite").partitionBy(
         "bucket"
     ).parquet(f"{gdir}/postings")
@@ -1483,11 +1481,11 @@ def best_snippet(
         F.col(id_col).alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "token"),
     )
-    hits = (
+    # tiny; read twice by the self-join
+    hits = cut(
         pos.join(F.broadcast(cand), "id")
         .join(F.broadcast(qterms), ["query_id", "token"])
         .select("query_id", "id", "pos", "token")
-        .localCheckpoint(eager=True)  # tiny; read twice by the self-join
     )
     a = hits.select("query_id", "id", F.col("pos").alias("apos"))
     b = hits.select(

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from adtl_spark.operators.dedup import md5_60, md5_60_sql
+from adtl_spark.session import cut_and_release
 
 # md5_60 yields 60-bit non-negative values; thresholds scale against this
 HASH_SPACE = 1 << 60
@@ -853,7 +854,6 @@ def dsir_select(
             F.sum("qdiff").alias("weight_q4"),
         )
     )
-    from adtl_spark.operators.dedup import _materialize_and_release
 
     result = (
         scored.orderBy(F.desc("weight_q4"), F.asc("id"))
@@ -863,7 +863,7 @@ def dsir_select(
     # the selection is top_n rows — materialize it and release the
     # persisted bucket models (standalone dsir_bucket_counts callers keep
     # their persisted model: it IS the reusable artifact)
-    return _materialize_and_release(result, caches)
+    return cut_and_release(result, caches)
 
 
 def dsir_select_oracle_sql(

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut_and_release
+
 
 def _lcg_floats(count: int, seed: int) -> list[float]:
     """Deterministic pseudo-random values in [-1, 1) from a fixed LCG —
@@ -1309,9 +1311,8 @@ def semantic_dedup(
         )
         .select("vec_id", "cluster")
     )
-    from adtl_spark.operators.dedup import _materialize_and_release
 
-    return _materialize_and_release(result, [d])
+    return cut_and_release(result, [d])
 
 
 def semantic_dedup_oracle_sql(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from adtl_spark.operators.dedup import md5_60, md5_60_sql
+from adtl_spark.session import cut_and_release
 
 HLL_P = 8  # 2^8 = 256 registers per group
 HLL_M = 1 << HLL_P
@@ -553,8 +554,6 @@ def hll_rollup(
     Output: one (grp, n_set, est_distinct) row per group plus a
     ``total_label`` row whose estimate comes from the merged registers.
     """
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     key = F.col(key) if isinstance(key, str) else key
     group = F.col(group) if isinstance(group, str) else group
     # the register table feeds BOTH grouping levels; Catalyst does not
@@ -568,7 +567,7 @@ def hll_rollup(
         .select(F.lit(total_label).alias(group_name), "register", "m_rho")
     )
     out = hll_estimate(regs.unionByName(merged), group_name)
-    return _materialize_and_release(out, [regs])
+    return cut_and_release(out, [regs])
 
 
 def hll_rollup_oracle_sql(
@@ -720,8 +719,6 @@ def bitmap_distinct_rollup(
     Output: one (grp, n_words, n_distinct) row per group plus the
     ``total_label`` row from the merged bitmaps, ordered by grp.
     """
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     key = F.col(key) if isinstance(key, str) else key
     group = F.col(group) if isinstance(group, str) else group
     base = df.select(
@@ -756,7 +753,7 @@ def bitmap_distinct_rollup(
         )
         .orderBy(group_name)
     )
-    return _materialize_and_release(out, [bm])
+    return cut_and_release(out, [bm])
 
 
 def bitmap_distinct_rollup_oracle_sql(

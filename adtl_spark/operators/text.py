@@ -19,6 +19,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut, cut_and_release
+
 # BPE-ish pre-tokenizer: letter runs, single digits, single punctuation —
 # a cheap stand-in for byte-pair pre-segmentation rules
 BPE_ISH_REGEX = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -382,23 +384,27 @@ def quality_repetition_keep(
     duplicate rows otherwise, which no dedup pipeline wants).  The score
     expressions are the operators' own builders (_quality_cols /
     _repetition_staged), so the kept set is decided by bit-identical
-    arithmetic, rounding included."""
-    staged = df.select(
-        "*",
-        tokens(F.col(text_col)).alias("__toks"),
-    )
-    q = _quality_cols(F.col(text_col), F.col("__toks"))
-    rep = _repetition_staged(F.col(text_col), F.col("__toks"))
+    arithmetic, rounding included.
+
+    The internal score columns take a prefix no input column starts
+    with, so any input schema resolves unambiguously."""
+    p = "__"
+    while any(c.startswith(p) for c in df.columns):
+        p += "_"
+    toks, q_col, bg = f"{p}toks", f"{p}q", f"{p}bg"
+    staged = df.select("*", tokens(F.col(text_col)).alias(toks))
+    q = _quality_cols(F.col(text_col), F.col(toks))
+    rep = _repetition_staged(F.col(text_col), F.col(toks))
     staged2 = staged.select(
-        "*", q["quality"].alias("__q"), rep["__bg"].alias("__bg")
+        "*", q["quality"].alias(q_col), rep["__bg"].alias(bg)
     )
     return staged2.filter(
-        (F.col("__q") >= F.lit(quality_min))
+        (F.col(q_col) >= F.lit(quality_min))
         & (
-            _rep_frac(_max_multiplicity(F.col("__bg")), F.size("__bg"))
+            _rep_frac(_max_multiplicity(F.col(bg)), F.size(bg))
             <= F.lit(top_bigram_max)
         )
-    ).select(*df.columns)
+    ).drop(toks, q_col, bg)
 
 
 def vocab_topk(df: DataFrame, k: int = 100, text_col: str = "text") -> DataFrame:
@@ -805,8 +811,6 @@ def bm25_topk(
     shuffled except on (id, token) for the tf agg."""
     from pyspark.sql import Window
 
-    from adtl_spark.operators.dedup import _materialize_and_release
-
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(tokens(F.col(text_col))).alias("token"),
@@ -880,7 +884,7 @@ def bm25_topk(
     )
     # queries x k rows — materializing is cheap at any scale and lets the
     # postings caches release deterministically (dedup-operator pattern)
-    return _materialize_and_release(result, [tf, dl])
+    return cut_and_release(result, [tf, dl])
 
 
 def bm25_topk_oracle_sql(
@@ -2124,17 +2128,18 @@ def schedule_frontier(
         # usual deterministic-input caveat applies (see apply_robots).
         sc = urls.sparkSession.sparkContext
         bands = int(n_bands) if n_bands else sc.defaultParallelism * 4
-        # localCheckpoint pins the band ids: the ranged relation feeds
+        # An eager cut pins the band ids: the ranged relation feeds
         # BOTH the count aggregate and the numbering join, and without
         # materialization the range exchange is evaluated twice — AQE
         # may coalesce its partitions differently per evaluation, and
         # spark_partition_id would then disagree between the two
         # consumers (observed: wrong offsets on a 20k-row run).  One
-        # bounded materialization of the frontier buys consistency.
-        ranged = (
+        # bounded materialization of the frontier buys consistency.  The
+        # cut must be eager: a lazy reliable checkpoint writes its files
+        # in a second job that re-runs the range exchange.
+        ranged = cut(
             out.repartitionByRange(bands, F.col("host"), *order)
             .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint(eager=False)
         )
         within = F.row_number().over(
             Window.partitionBy("host", "__pid").orderBy(*order)

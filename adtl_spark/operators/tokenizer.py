@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adtl_spark.operators.text import tokens
+from adtl_spark.session import cut
 
 
 def _spaced(col):
@@ -580,7 +581,7 @@ def unigram_train(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    word_df = word_df.localCheckpoint(eager=True)  # reused every round
+    word_df = cut(word_df)  # reused every round
 
     # substring explode, natively: positions s in 1..len, e in s..s+L-1
     subs = word_df.select(

@@ -1,17 +1,17 @@
 """Reusable corpus-cleaning pipeline (the CLI-facing form of the
 ``pipeline_corpus_clean`` gate query): quality filter -> repetition
-filter -> MinHash near-dup removal, as one lazily-composed DataFrame DAG
-plus an eager per-stage report.
+filter -> MinHash near-dup removal, written out in one Spark action
+plus a per-stage report.
 
-The stages are exactly the oracle-gated operators
-(text.quality_score / text.repetition_stats / dedup.dedup_minhash_lsh);
-this module only composes them and counts survivors, so the CLI path and
+The stages are the oracle-gated operators
+(text.quality_repetition_keep / dedup.dedup_minhash_lsh's plan); this
+module only composes them and counts survivors, so the CLI path and
 the correctness-gated path cannot drift apart.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from adtl_spark.operators import dedup as D
@@ -20,6 +20,7 @@ from adtl_spark.operators import text as X
 
 def corpus_clean(
     docs: DataFrame,
+    output: str,
     min_quality: float = 0.5,
     max_top_bigram_frac: float = 0.2,
     minhash_k: int = 16,
@@ -28,47 +29,42 @@ def corpus_clean(
     shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-) -> tuple[DataFrame, dict[str, int]]:
-    """Clean a document corpus; returns (clean_df, report).
+) -> dict[str, int]:
+    """Clean a document corpus into parquet at ``output``; returns the
+    report.
 
-    The report counts documents surviving each stage.  The input and
-    post-filter counts ride on ``Observation``s — metrics collected as a
-    side effect of the ONE materializing action, not separate count()
-    jobs re-running each stage (two fewer corpus passes than the naive
-    form; the same trick `dedup.cluster_pairs` uses for zero-job
-    convergence checks).  The returned frame is the cleaned corpus with
-    the original columns.
+    The cleaned corpus keeps the original columns.  ``id_col`` must be a
+    unique, non-null key: near-dup removal drops documents by id, so
+    two documents sharing an id share one fate.
+
+    Nothing runs before the write: the report counts documents
+    surviving each stage through ``Observation``s, metrics collected as
+    a side effect of that one action.  The working-corpus and signature
+    caches are released after it.
     """
-    from pyspark.sql import Observation
-
     obs_in = Observation("corpus_clean_input")
     obs_kept = Observation("corpus_clean_kept")
-    docs = docs.observe(obs_in, F.count(F.lit(1)).alias("n"))
-    good = X.quality_score(docs, text_col).filter(
-        F.col("quality") >= min_quality
-    )
-    rep_ok = X.repetition_stats(docs, text_col).filter(
-        F.col("top_bigram_frac") <= max_top_bigram_frac
-    )
+    obs_out = Observation("corpus_clean_output")
+    n = F.count(F.lit(1)).alias("n")
     kept = (
-        docs.join(good.select(id_col), id_col)
-        .join(rep_ok.select(id_col), id_col)
-        .observe(obs_kept, F.count(F.lit(1)).alias("n"))
+        X.quality_repetition_keep(
+            docs.observe(obs_in, n), min_quality, max_top_bigram_frac, text_col
+        )
+        .observe(obs_kept, n)
         .persist()
     )
-    pairs = D.dedup_minhash_lsh(
-        kept,
-        k=minhash_k,
-        bands=minhash_bands,
-        threshold=threshold,
-        n=shingle_n,
-        text_col=text_col,
-        id_col=id_col,
+    pairs, sig = D.minhash_lsh_plan(
+        kept, minhash_k, minhash_bands, threshold, shingle_n, text_col, id_col
     )
     drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    clean = kept.join(drop, id_col, "left_anti")
-    report: dict[str, int] = {"after_near_dedup": clean.count()}
-    report["input"] = int(obs_in.get["n"])
-    report["after_quality_and_repetition"] = int(obs_kept.get["n"])
-    kept.unpersist()
-    return clean, report
+    clean = kept.join(drop, id_col, "left_anti").observe(obs_out, n)
+    try:
+        clean.write.mode("overwrite").parquet(output)
+    finally:
+        sig.unpersist()
+        kept.unpersist()
+    return {
+        "after_near_dedup": int(obs_out.get["n"]),
+        "input": int(obs_in.get["n"]),
+        "after_quality_and_repetition": int(obs_kept.get["n"]),
+    }

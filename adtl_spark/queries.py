@@ -35,7 +35,12 @@ from adtl_spark.operators import joins as J
 from adtl_spark.operators import monitor as MO
 from adtl_spark.operators import retrieval as R
 from adtl_spark.operators import text as X
-from adtl_spark.session import configure_for_engine, cut, scan_parallel
+from adtl_spark.session import (
+    configure_for_engine,
+    cut,
+    cut_and_release,
+    scan_parallel,
+)
 
 DEC = "decimal(18,4)"
 
@@ -2180,10 +2185,10 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed: BOTH measured paths grade against the same all-pairs
     # truth — without the cut the quadratic truth join would execute once
     # per measure() call (Spark plans trees, not DAGs)
-    truth = (
-        S.embedding_neardup(emb, tau=NEARDUP_TAU, planes=0)
-        .select("id_a", "id_b", F.lit(1).alias("t"))
-        .localCheckpoint()
+    truth = cut(
+        S.embedding_neardup(emb, tau=NEARDUP_TAU, planes=0).select(
+            "id_a", "id_b", F.lit(1).alias("t")
+        )
     )
 
     def measure(path: str, **kw) -> DataFrame:
@@ -2624,12 +2629,8 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the (tiny) per-language summary, then release BOTH
     # caches — the working corpus and the barrier scan (scan_parallel's
-    # barrier mode hands cache ownership to the caller); persists without
-    # unpersist accumulate across queries in a long-lived session
-    out = result.localCheckpoint()
-    kept.unpersist()
-    docs.unpersist()
-    return out
+    # barrier mode hands cache ownership to the caller)
+    return cut_and_release(result, [kept, docs])
 
 
 # ------------------------------------------------------------------- oracles
@@ -2802,7 +2803,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     claimed here, only recall against the capped truth."""
     docs = _t(spark, sf_dir, "documents")
     # truth and found are INDEPENDENT eagerly-materialized pipelines
-    # (each ends in _materialize_and_release's localCheckpoint), so run
+    # (each ends in a session.cut_and_release cut), so run
     # them from two driver threads (r14, guide §2.6 — overlap
     # independent jobs): the found side's tail back-fills executors the
     # truth side leaves idle.  Results are checkpoint-backed and
@@ -6939,9 +6940,8 @@ def olap_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lift"),
         )
     )
-    from adtl_spark.operators.dedup import _materialize_and_release
 
-    return _materialize_and_release(
+    return cut_and_release(
         scored.orderBy(F.desc("lift"), F.asc("pa"), F.asc("pb")).limit(
             BASKET_TOP
         ),
@@ -10898,9 +10898,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list, and each releases its own cache — without the cut
     # the full co-occurrence derivation (lineitem distinct + per-order
     # self-join + weight aggregation) would execute twice in this query
-    edges = G.cooccurrence_edges(
-        li, "l_orderkey", "l_suppkey"
-    ).localCheckpoint()
+    edges = cut(G.cooccurrence_edges(li, "l_orderkey", "l_suppkey"))
     vertices = supplier.select(F.col("s_suppkey").alias("v"))
     labels = G.label_propagation(edges, vertices, iters=LPA_ITERS)
     return G.modularity(edges, labels)

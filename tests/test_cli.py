@@ -277,6 +277,52 @@ def test_cli_clean_corpus(tmp_path, spark, capsys):
     assert kept in ({1, 4}, {2, 4})  # exactly one of the twins survives
 
 
+def test_corpus_clean_runs_nothing_before_its_write(tmp_path, spark, monkeypatch):
+    """corpus_clean starts no Spark job before the write of the cleaned
+    corpus: the report's counts come from that one action's
+    observations, and its caches are released afterwards."""
+    from adtl_spark.pipeline import corpus_clean
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a good document with plenty of distinct readable words here"),
+            (2, "a good document with plenty of distinct readable words here"),
+            (3, "spam spam spam spam spam spam spam spam spam spam"),
+            (4, "another reasonable document about entirely different topics"),
+        ],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    writer_cls = type(docs.write)
+    orig_parquet = writer_cls.parquet
+    jobs_before_write = []
+
+    def parquet(self, *a, **kw):
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+        jobs_before_write.append(
+            len(sc.statusTracker().getJobIdsForGroup("corpus_clean_test"))
+        )
+        return orig_parquet(self, *a, **kw)
+
+    monkeypatch.setattr(writer_cls, "parquet", parquet)
+    n_cached = sc._jsc.sc().getPersistentRDDs().size()
+    out = str(tmp_path / "cleaned")
+    sc.setJobGroup("corpus_clean_test", "corpus_clean")
+    try:
+        report = corpus_clean(docs, out, min_quality=0.3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs_before_write == [0]
+    assert report == {
+        "after_near_dedup": 2,
+        "input": 4,
+        "after_quality_and_repetition": 3,
+    }
+    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    assert kept in ({1, 4}, {2, 4})
+    assert sc._jsc.sc().getPersistentRDDs().size() == n_cached
+
+
 def test_cli_parquet_flag_spelling(workdir):
     """The reference CLI spells parquet output as a --parquet flag; it
     must behave exactly like --format parquet."""

@@ -236,18 +236,54 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_cluster_pairs_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage cuts to reliable checkpoint() files
-    (executor-loss-safe on a real cluster) with identical results."""
+    """spark.adtl.reliableCheckpoint plus a checkpoint dir switches the
+    lineage cuts to reliable checkpoint() files (executor-loss-safe on a
+    real cluster) with identical results."""
+    from adtl_spark.session import RELIABLE_CKPT_CONF
+
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    out = {
-        r["doc_id"]: r["canonical_id"]
-        for r in D.cluster_pairs(pairs, checkpoint_dir=str(tmp_path / "ckpt")).collect()
-    }
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(RELIABLE_CKPT_CONF, "true")
+    try:
+        out = {
+            r["doc_id"]: r["canonical_id"]
+            for r in D.cluster_pairs(pairs).collect()
+        }
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     ckpt_files = list((tmp_path / "ckpt").rglob("*"))
     assert ckpt_files  # reliable checkpoints actually hit the directory
+
+
+def test_quality_repetition_keep_any_input_columns(spark):
+    """Input columns named like the filter's internal ones come back
+    untouched and do not change which documents are kept."""
+    plain = spark.createDataFrame(
+        [
+            (1, "a good document with plenty of distinct readable words here"),
+            (2, "spam spam spam spam spam spam spam spam spam spam"),
+            (3, "another reasonable document about entirely different topics"),
+        ],
+        "doc_id long, text string",
+    )
+    clashing = plain.select(
+        "*",
+        F.lit("x").alias("__toks"),
+        F.col("doc_id").alias("__q"),
+        F.lit(1).alias("__bg"),
+    )
+    keep = sorted(
+        r["doc_id"] for r in X.quality_repetition_keep(plain, 0.3, 0.2).collect()
+    )
+    assert keep == [1, 3]
+    got = X.quality_repetition_keep(clashing, 0.3, 0.2)
+    assert got.columns == clashing.columns
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, clashing.filter(F.col("doc_id").isin(keep)).collect())
+    )
 
 
 def test_dedup_caches_released(spark):

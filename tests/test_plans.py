@@ -304,12 +304,9 @@ def test_semantic_dedup_joins_on_cluster(spark, monkeypatch):
     since the r13 distinct-vector cache change, so the assertion
     inspects the PRE-materialization plan by stubbing the materialize
     helper (the test_bm25_query_side_broadcasts pattern)."""
-    import adtl_spark.operators.dedup as D
     from adtl_spark.operators import similarity as S
 
-    monkeypatch.setattr(
-        D, "_materialize_and_release", lambda result, caches: result
-    )
+    monkeypatch.setattr(S, "cut_and_release", lambda result, caches: result)
     df = spark.createDataFrame(
         [(i, [float(i % 3), 1.0]) for i in range(8)], ["vec_id", "embedding"]
     )
@@ -440,12 +437,9 @@ def test_bm25_query_side_broadcasts(spark, monkeypatch):
     r13 postings-sharing change releases its caches deterministically),
     whose plan is just an ExistingRDD scan — so the assertion inspects
     the PRE-materialization plan by stubbing the materialize helper."""
-    import adtl_spark.operators.dedup as D
     from adtl_spark.operators import text as X
 
-    monkeypatch.setattr(
-        D, "_materialize_and_release", lambda result, caches: result
-    )
+    monkeypatch.setattr(X, "cut_and_release", lambda result, caches: result)
     docs = spark.createDataFrame(
         [(i, "hash join scan filter sort") for i in range(200)],
         ["doc_id", "text"],

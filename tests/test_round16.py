@@ -214,7 +214,7 @@ def test_pagerank_releases_vertex_cache(spark):
 def test_dhash_pairs_releases_hash_cache(spark):
     """dhash_pairs persists the (media_id, hi, lo) relation so the decode
     chain upstream executes once, not once per banding-join side, and
-    materializes the pair list through _materialize_and_release; only
+    materializes the pair list through session.cut_and_release; only
     the result checkpoint may survive."""
     from adtl_spark.operators.multimodal import dhash_pairs
 
