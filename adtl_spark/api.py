@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import importlib.util
 import inspect
+import weakref
 from pathlib import Path
 from typing import Any, Callable, Iterable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
-from adtl_spark.plans.tables import build_all_tables
+from adtl_spark.plans.tables import build_all_tables, order_keys
 from adtl_spark.session import get_spark
 from adtl_spark.sources.io import (
     dataframe_from_rows,
@@ -45,7 +47,19 @@ def load_custom_transformations(filepath: str | Path) -> dict[str, Callable]:
 
 
 class Parser:
-    """Compile a spec once; parse any number of sources against it."""
+    """Compile a spec once; parse any number of sources against it.
+
+    Each ``parse*`` call caches its tables, so the report, the sinks,
+    ``table()`` and ``read_table()`` share one run of each table's plan
+    (source scan, rules, groupBy, validator), whichever comes first.  The
+    cache sits below the row-order sort: the report reads it unsorted, and
+    every ordered consumer sorts on top of it.  The Parser owns the cache
+    and releases it on the next ``parse*``, on ``close()`` (or leaving a
+    ``with`` block), and when it is garbage-collected; tables obtained
+    before then stay valid and recompute from the source.
+    ``ordered_output=False`` skips the sort (a global range exchange) for
+    pipelines that need no row-order parity with the reference.
+    """
 
     def __init__(
         self,
@@ -67,8 +81,22 @@ class Parser:
         self.spark = spark or get_spark()
         self.ordered_output = ordered_output
         self.data: dict[str, DataFrame] = {}
+        # each table before the row-order sort, order keys still as columns
+        self._unsorted: dict[str, DataFrame] = {}
+        self._cached: list[DataFrame] = []
+        weakref.finalize(self, _unpersist_all, self._cached).atexit = False
         self.report: dict[str, Any] = {}
         self.report_available = False
+
+    def __enter__(self) -> "Parser":
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        self.close()
+
+    def close(self) -> None:
+        """Release the cached tables of the last ``parse*`` call."""
+        _unpersist_all(self._cached)
 
     # ------------------------------------------------------------------ parse
 
@@ -95,21 +123,30 @@ class Parser:
         return self._run(source, skip_validation)
 
     def _run(self, source: DataFrame, skip_validation: bool) -> "Parser":
+        self.close()
         tables = build_all_tables(
-            self.spec,
-            source,
-            self.spark,
-            self.custom_transforms,
-            ordered_output=self.ordered_output,
+            self.spec, source, self.spark, self.custom_transforms
         )
         if not skip_validation:
             tables = {
                 name: annotate_validation(self.spec, name, df)
                 for name, df in tables.items()
             }
-        self.data = tables
+        if not source.isStreaming:
+            tables = {name: df.persist() for name, df in tables.items()}
+            self._cached.extend(tables.values())
+        self._unsorted = tables
+        self.data = {name: self._sorted(df) for name, df in tables.items()}
         self.report_available = not skip_validation
         return self
+
+    def _sorted(self, df: DataFrame) -> DataFrame:
+        """``df`` in the reference's row order (when ``ordered_output``),
+        without its order-key columns."""
+        keys = order_keys(df)
+        if keys and self.ordered_output:
+            df = df.orderBy(*keys)
+        return df.drop(*keys)
 
     # ------------------------------------------------------------------ sinks
 
@@ -210,7 +247,8 @@ class Parser:
     # ----------------------------------------------------------------- report
 
     def build_report(self) -> dict[str, Any]:
-        self.report = validation_report(self.data)
+        # counts need no row order: group the cached tables, no sort
+        self.report = validation_report(self._unsorted)
         return self.report
 
     def show_report(self) -> None:
@@ -226,6 +264,18 @@ class Parser:
         file_fields = set(df.columns)
         spec_fields = self.spec.spec_fields()
         return file_fields - spec_fields, spec_fields - file_fields
+
+
+def _unpersist_all(frames: list[DataFrame]) -> None:
+    """Unpersist and forget every frame in ``frames``.  Also runs when its
+    Parser is garbage-collected, possibly after the SparkContext has
+    stopped: there is nothing left to release then."""
+    while frames:
+        df = frames.pop()
+        try:
+            df.unpersist()
+        except (Py4JError, ConnectionError):
+            pass
 
 
 def _restore_dynamic(v: Any):

@@ -26,17 +26,16 @@ def handle_parse(args: argparse.Namespace) -> int:
             file=sys.stderr,
         )
         return 1
-    parser = Parser(
+    with Parser(
         args.spec,
         include_defs=args.include_def or [],
         include_transform=args.include_transform,
-    )
-    parser.parse(args.file, encoding=args.encoding)
-    output = args.output or parser.name
-    parser.save(output, format=args.format)
-    if args.quiet and not args.save_report:
-        return 0
-    report = parser.build_report()
+    ) as parser:
+        parser.parse(args.file, encoding=args.encoding)
+        parser.save(args.output or parser.name, format=args.format)
+        if args.quiet and not args.save_report:
+            return 0
+        report = parser.build_report()
     if not args.quiet:
         print_report(report)
     if args.save_report:

@@ -247,31 +247,6 @@ def paragraph_dedup_oracle_sql(
 # ------------------------------------------------------------ n-gram Jaccard
 
 
-def char_shingles(text: Column, n: int = 5) -> Column:
-    """Distinct character n-grams of the lowercased text, as an array —
-    sequence/substring-based, no UDF."""
-    lowered = F.lower(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(lowered) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: lowered.substr(i, F.lit(n))))
-
-
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (w-shingling) of the lowercased text.  Far more
-    discriminative than character n-grams on natural text: the shingle
-    space is |vocab|^n, so per-shingle document frequency — and with it the
-    shingle-join fan-out — stays small at scale."""
-    toks = F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.try_element_at(toks, i + j) for j in range(n)]
-            ),
-        )
-    )
-
-
 def shingle_df(
     df: DataFrame, text_col: str, id_col: str, n: int, carry: list[str] | None = None
 ) -> DataFrame:

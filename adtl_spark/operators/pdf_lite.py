@@ -427,10 +427,6 @@ def _unescape_literal_bytes(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _unescape_literal(raw: bytes) -> str:
-    return _unescape_literal_bytes(raw).decode("latin-1")
-
-
 _BFCHAR_RE = re.compile(
     rb"beginbfchar(.*?)endbfchar", re.S
 )

@@ -1707,15 +1707,6 @@ def _pq_codebooks(
     return books
 
 
-def _self_dot_sql(vec_name: str) -> str:
-    """Spark-SQL text for dot(col, col) with the exact fold of dot()."""
-    return (
-        f"aggregate(zip_with(`{vec_name}`, `{vec_name}`, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-
-
 def _pq_cell_sql(
     vec_name: str, cells: list[tuple[int, list[float], float]], d_sub: int
 ) -> str:
@@ -3563,11 +3554,6 @@ def ann_truncation_recall_oracle_sql(
              / 10000.0 AS recall_at_k
     FROM t LEFT JOIN a USING (query_id, corpus_id)
     """
-
-
-def _dvec_lit(coords: list[float]) -> str:
-    "Spark-SQL array<double> literal with repr round-tripping."
-    return "array(" + ", ".join(_dlit(c) for c in coords) + ")"
 
 
 def ann_ivfpq_residual(

@@ -159,6 +159,7 @@ class RuleCompiler:
         self.dtypes = dtypes or {}
         self._namespace = spec.namespace_uuid()
         self._stage: dict[str, Column] | None = None
+        self._sources: dict[str, Column] = {}
 
     # ------------------------------------------------------------------ source
 
@@ -194,7 +195,14 @@ class RuleCompiler:
     def source(self, field: str) -> Column:
         """Raw source cell: always a non-null string (CSV semantics — the
         reference's DictReader never yields None; Spark's CSV reader maps
-        empty cells to null, so re-normalize)."""
+        empty cells to null, so re-normalize).  Built once per field: every
+        rule reading the field shares the one Column, which saves the py4j
+        calls of building it again."""
+        if field not in self._sources:
+            self._sources[field] = self._source_column(field)
+        return self._sources[field]
+
+    def _source_column(self, field: str) -> Column:
         if field not in self.columns:
             raise SpecError(f"source column not found: {field!r}")
         if self.dtypes.get(field) == "boolean":

@@ -4,7 +4,7 @@ Reference execution walks every table spec per source row
 (src/adtl/parser.py:685-732); here each table kind becomes one declarative
 plan over the source DataFrame:
 
-- ``constant``  -> single-row createDataFrame       (parser.py:536-537)
+- ``constant``  -> one row of literals, one partition (parser.py:536-537)
 - ``oneToOne``  -> one ``select`` of compiled rules
 - ``groupBy``   -> ``groupBy(key).agg(...)`` with order-aware aggregates
                    reproducing lastNotNull / applyCombinedType semantics
@@ -22,6 +22,10 @@ before any shuffle: a plain monotonic id for single-file/non-file sources,
 and a ``(file, split offset, id)`` composite struct for globbed multi-file
 reads (see ``attach_row_id``) — the reference reads exactly one CSV, so the
 multi-file order is this engine's extension, defined as sorted-path order.
+Tables do not sort themselves: each keeps its order keys (``ORDER_KEYS``)
+as columns, and the caller sorts on them and drops them.  ``api.Parser``
+does so on top of its cached tables, so consumers that need no order (the
+validation report) read the tables without a sort.
 """
 
 from __future__ import annotations
@@ -34,9 +38,11 @@ from pyspark.sql import functions as F
 from adtl_spark.functions import render as R
 from adtl_spark.plans.compiler import RuleCompiler, Value, truthy
 from adtl_spark.session import scan_parallel
-from adtl_spark.spec import CompiledSpec, StrDict
+from adtl_spark.spec import CompiledSpec
 
 ROW_ID = "__adtl_row_id__"
+ROW_POS = "__adtl_row_pos__"  # oneToMany: the block's position within its row
+ORDER_KEYS = (ROW_ID, ROW_POS)
 
 
 _CTR_MASK = (1 << 33) - 1  # monotonic id: partition index << 33 | counter
@@ -145,12 +151,11 @@ def attach_row_id(df: DataFrame) -> DataFrame:
     return df.withColumn(ROW_ID, F.shiftleft(rank, 33).bitwiseOR(ctr))
 
 
-def _valid_cell(value: Value) -> Column:
-    """The group-stage validity filter: cells that are null, "" or [] are
-    ignored by every aggregation (parser.py:574, 600)."""
-    if value.is_array:
-        return value.col.isNotNull() & (F.size(value.col) > 0)
-    return value.col.isNotNull() & (value.col != "")
+def order_keys(df: DataFrame) -> list[str]:
+    """The order-key columns ``df`` carries, in sort order: sorting on them
+    gives the reference's row order (file order; groups in first-encounter
+    order; a oneToMany row's blocks in spec order)."""
+    return [k for k in ORDER_KEYS if k in df.columns]
 
 
 def build_all_tables(
@@ -158,13 +163,11 @@ def build_all_tables(
     df: DataFrame,
     spark: SparkSession,
     custom_transforms: dict[str, Callable] | None = None,
-    ordered_output: bool = True,
 ) -> dict[str, DataFrame]:
-    """``ordered_output`` controls the reference-parity total order on
-    groupBy tables (groups in first-encounter order).  That final sort is
-    correct but costs a global range exchange; pipelines that don't need
-    row-order parity (anything feeding another Spark job) should disable
-    it."""
+    """One unsorted plan per table.  Over a non-streaming source every
+    non-constant table carries its ``order_keys`` columns; sorting on them
+    restores the reference's row order, at the cost of a global range
+    exchange that consumers which need no order can skip."""
     compiler = RuleCompiler(
         spec, df.columns, custom_transforms, dtypes=dict(df.dtypes)
     )
@@ -173,20 +176,20 @@ def build_all_tables(
         # row id BEFORE any exchange (it encodes file order), then spread a
         # low-split scan across all cores — the rule projection is the
         # engine's hot loop and must not run on one task just because the
-        # local file has one row group.  ordered_output restores file order
-        # per table from the row id afterwards; hashing on the unique row id
-        # avoids round-robin's defensive pre-shuffle sort.
+        # local file has one row group.  The row id restores file order
+        # afterwards; hashing on the unique row id avoids round-robin's
+        # defensive pre-shuffle sort.
         df = scan_parallel(attach_row_id(df), by=F.col(ROW_ID))
     for table, meta in spec.tables.items():
         kind = meta.get("kind")
         if kind == "constant":
             out[table] = _constant_table(spec, table, spark)
         elif kind == "oneToMany":
-            out[table] = _one_to_many_table(spec, table, df, compiler, ordered_output)
+            out[table] = _one_to_many_table(spec, table, df, compiler)
         elif meta.get("groupBy"):
-            out[table] = _group_by_table(spec, table, df, compiler, ordered_output)
+            out[table] = _group_by_table(spec, table, df, compiler)
         else:
-            out[table] = _one_to_one_table(spec, table, df, compiler, ordered_output)
+            out[table] = _one_to_one_table(spec, table, df, compiler)
     return out
 
 
@@ -201,20 +204,25 @@ def _schema_type(spec: CompiledSpec, table: str, attr: str) -> Any:
 
 
 def _constant_table(spec: CompiledSpec, table: str, spark: SparkSession) -> DataFrame:
+    """Literal columns over a one-row range: one partition, one task, and
+    no local rows for Python workers to unpickle.  Columns are ``string``,
+    or ``array<string>`` for list values."""
     row = {
         k: R.render_literal(v) if not isinstance(v, list) else [R.render_literal(x) for x in v]
         for k, v in spec.table_specs[table].items()
     }
-    fields = spec.fieldnames[table]
-    return spark.createDataFrame([tuple(row.get(f) for f in fields)], schema=_ddl(row, fields))
-
-
-def _ddl(row: StrDict, fields: list[str]) -> str:
-    parts = []
-    for f in fields:
-        t = "array<string>" if isinstance(row.get(f), list) else "string"
-        parts.append(f"`{f}` {t}")
-    return ", ".join(parts)
+    # CASE WHEN over the range's id keeps the columns nullable, like every
+    # other table's; a bare literal would be planned (and written) NOT NULL
+    first_row = F.col("id") == 0
+    cols = []
+    for f in spec.fieldnames[table]:
+        v = row.get(f)
+        if isinstance(v, list):
+            value = F.array(*[F.lit(x) for x in v]).cast("array<string>")
+        else:
+            value = F.lit(v).cast("string")
+        cols.append(F.when(first_row, value).alias(f))
+    return spark.range(1, numPartitions=1).select(*cols)
 
 
 def _wide_cell(value: Value) -> Column:
@@ -233,11 +241,7 @@ def _with_stage(df: DataFrame, stage: dict[str, Column]) -> DataFrame:
 
 
 def _one_to_one_table(
-    spec: CompiledSpec,
-    table: str,
-    df: DataFrame,
-    compiler: RuleCompiler,
-    ordered_output: bool = True,
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
 ) -> DataFrame:
     stage: dict[str, Column] = {}
     cols = []
@@ -247,23 +251,15 @@ def _one_to_one_table(
             rule, attr, _schema_type(spec, table, attr), stage=stage
         )
         cols.append(_wide_cell(value).alias(attr))
-    if ROW_ID not in df.columns:  # streaming source: no row id, no ordering
-        return _with_stage(df, stage).select(*cols)
-    out = _with_stage(df, stage).select(F.col(ROW_ID), *cols)
-    if ordered_output:
-        out = out.orderBy(ROW_ID)
-    return out.drop(ROW_ID)
+    keys = [ROW_ID] if ROW_ID in df.columns else []  # streaming: no row id
+    return _with_stage(df, stage).select(*keys, *cols)
 
 
 # ---------------------------------------------------------------- groupBy kind
 
 
 def _group_by_table(
-    spec: CompiledSpec,
-    table: str,
-    df: DataFrame,
-    compiler: RuleCompiler,
-    ordered_output: bool = True,
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
 ) -> DataFrame:
     meta = spec.tables[table]
     group_field = meta["groupBy"]
@@ -293,12 +289,11 @@ def _group_by_table(
         )
         aggs.append(_aggregate_attr(attr, v, combined).alias(attr))
 
-    # groups emitted in first-encounter (file) order — the reference's
-    # insertion-ordered dict yields exactly this (parser.py:619-637)
+    # a group's first row id orders groups by first encounter (file order)
+    # — the reference's insertion-ordered dict yields exactly this
+    # (parser.py:619-637)
     grouped = projected.groupBy(F.col(group_field)).agg(*aggs)
-    if ordered_output:
-        grouped = grouped.orderBy(ROW_ID)
-    return grouped.select(group_field, *[a for a in values if a != group_field])
+    return grouped.select(ROW_ID, group_field, *[a for a in values if a != group_field])
 
 
 def _aggregate_attr(attr: str, value: Value, combined: str | None) -> Column:
@@ -426,11 +421,7 @@ def _dynamic_min_max(
 
 
 def _one_to_many_table(
-    spec: CompiledSpec,
-    table: str,
-    df: DataFrame,
-    compiler: RuleCompiler,
-    ordered_output: bool = True,
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
 ) -> DataFrame:
     blocks = spec.table_specs[table]
     fieldnames = list(spec.fieldnames[table])
@@ -484,8 +475,8 @@ def _one_to_many_table(
     # posexplode keeps the block position so (row, block) file order can be
     # restored after the parallelizing repartition
     exploded = _with_stage(df, stage).select(
-        F.col(ROW_ID), F.posexplode(blocks_arr).alias("__pos__", "__row__")
+        F.col(ROW_ID), F.posexplode(blocks_arr).alias(ROW_POS, "__row__")
     )
-    if ordered_output:
-        exploded = exploded.orderBy(ROW_ID, "__pos__")
-    return exploded.select(*[F.col(f"__row__.`{a}`").alias(a) for a in fieldnames])
+    return exploded.select(
+        ROW_ID, ROW_POS, *[F.col(f"__row__.`{a}`").alias(a) for a in fieldnames]
+    )

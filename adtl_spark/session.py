@@ -41,6 +41,9 @@ def get_spark(app_name: str = "adtl_spark", cpus: int | None = None) -> SparkSes
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # delete a reliable checkpoint's files once its RDD is garbage
+        # (see cut); without it they stay for the life of the checkpoint dir
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -160,6 +163,11 @@ def configure_for_engine(spark: SparkSession) -> SparkSession:
     Used when the driver hands us its own SparkSession (the __spark_entry__
     contract): permissive casts + UTC rendering are required for adtl
     semantics; both are runtime-mutable SQL confs.
+
+    ``spark.cleaner.referenceTracking.cleanCheckpoints``, which
+    ``get_spark`` sets so that reliable cuts delete their files once
+    unreferenced, is a static conf: it cannot be set here, and an
+    externally-owned session keeps whatever its owner chose.
     """
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")

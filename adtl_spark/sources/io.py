@@ -119,11 +119,6 @@ def _csv_render(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def write_csv_distributed(df: DataFrame, path: str) -> None:
-    """S6 at scale: parallel CSV part-files."""
-    _csv_render(df).write.option("header", True).mode("overwrite").csv(path)
-
-
 def write_csv_single(df: DataFrame, output: str | None = None) -> str | None:
     """S6 bit-compat: one CSV with the reference's header ordering
     (validation columns first, then sorted field names).  Driver-side —

@@ -114,6 +114,31 @@ def test_cli_report_built_once(workdir, tmp_path, capsys, monkeypatch):
     assert json.loads(report_file.read_text()) == calls[0].report
 
 
+def test_cli_parse_closes_its_parser(workdir, spark, monkeypatch):
+    """``parse`` runs its Parser in a ``with`` block: the cached tables are
+    released when the command returns, also when it fails."""
+    from adtl_spark.api import Parser
+
+    exits = []
+    real_exit = Parser.__exit__
+
+    def recording_exit(self, *exc):
+        exits.append(exc[0])
+        return real_exit(self, *exc)
+
+    monkeypatch.setattr(Parser, "__exit__", recording_exit)
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    base = [str(workdir / "spec.toml"), str(workdir / "data.csv")]
+    assert main(["parse", *base, "-o", str(workdir / "c1")]) == 0
+    with pytest.raises(OSError):
+        main(["parse", *base, "-o", str(workdir / "missing" / "c2"), "-q"])
+    assert exits[0] is None and issubclass(exits[1], OSError) and len(exits) == 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_bom_in_source_header(workdir, spark):
     from adtl_spark.api import Parser
 

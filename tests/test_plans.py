@@ -9,6 +9,12 @@ def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def source_scans(plan: str) -> int:
+    """Scans in ``plan`` that read a source; a Parser's tables also show
+    the scan of their own cache, which reads no source."""
+    return plan.count("Scan") - plan.count("InMemoryTableScan")
+
+
 def test_one_to_many_single_scan(spark):
     """N blocks must compile to ONE source scan (array-of-structs explode),
     not a union of N filtered scans."""
@@ -26,7 +32,7 @@ def test_one_to_many_single_scan(spark):
     rows = [{f"s{i}": "1" for i in range(12)}]
     p = Parser(spec, spark=spark).parse_rows(rows, skip_validation=True)
     plan = physical_plan(p.table("obs"))
-    assert plan.count("Scan") == 1
+    assert source_scans(plan) == 1
     assert "Generate posexplode" in plan
 
 
@@ -106,7 +112,7 @@ def test_wide_spec_compiles_and_runs(spark):
     p = Parser(spec, spark=spark).parse_rows(rows, skip_validation=True)
     assert p.table("wide").count() == 50
     assert p.table("long").count() == 50 * 60
-    assert physical_plan(p.table("long")).count("Scan") == 1
+    assert source_scans(physical_plan(p.table("long"))) == 1
 
 
 def test_typed_fast_path_skips_regex(spark):
@@ -723,3 +729,79 @@ def test_plan_audit_catches_broadcast_regression(spark):
     df2 = Q.q5_local_supplier_volume(spark, "/root/testdata/sf0.001")
     healthy = df2._jdf.queryExecution().executedPlan().toString()
     assert pa.smj_drift("q5_local_supplier_volume", healthy) == []
+
+
+def test_constant_table_is_one_literal_partition(spark):
+    """A constant table is literal columns over a one-row range: one
+    partition, and no local rows shipped to Python workers."""
+    from pyspark.sql import types as T
+
+    spec = {
+        "adtl": {
+            "name": "const",
+            "description": "",
+            "tables": {"metadata": {"kind": "constant"}},
+        },
+        "metadata": {"dataset": "const-fixture", "version": 2, "flag": True},
+    }
+    p = Parser(spec, spark=spark).parse_rows([{"x": "1"}], skip_validation=True)
+    df = p.table("metadata")
+    assert df._jdf.rdd().getNumPartitions() == 1
+    plan = physical_plan(df)
+    assert "ExistingRDD" not in plan and "Python" not in plan
+    assert df.schema == T.StructType(
+        [T.StructField(f, T.StringType(), True) for f in ("dataset", "flag", "version")]
+    )
+    assert [tuple(r) for r in df.collect()] == [("const-fixture", "True", "2")]
+
+
+def _golden_parse(spark, tmp_path):
+    from test_golden_csv import CSV, SPEC
+
+    src = tmp_path / "golden.csv"
+    src.write_text(CSV)
+    return SPEC, str(src)
+
+
+def test_shared_source_columns_keep_plans_equal(spark, tmp_path, monkeypatch):
+    """Sharing one source Column per field changes no plan: every table
+    matches the plan built with a fresh Column per use."""
+    from adtl_spark.plans.compiler import RuleCompiler
+
+    spec, csv = _golden_parse(spark, tmp_path)
+    shared = Parser(spec, spark=spark).parse(csv)
+    monkeypatch.setattr(RuleCompiler, "source", RuleCompiler._source_column)
+    fresh = Parser(spec, spark=spark).parse(csv)
+    for table in shared.tables:
+        assert shared._unsorted[table].sameSemantics(fresh._unsorted[table]), table
+        assert shared.table(table).sameSemantics(fresh.table(table)), table
+
+
+def test_warm_parse_py4j_round_trips(spark, tmp_path):
+    """Pins the py4j call and reflection commands Python sends for one
+    warm parse of the golden spec.  gc stays off while counting: py4j's object
+    deletions ride on garbage collection and are not counted anyway."""
+    import collections
+    import gc
+
+    import py4j.clientserver as cs
+
+    spec, csv = _golden_parse(spark, tmp_path)
+    for _ in range(2):
+        Parser(spec, spark=spark).parse(csv)
+    counts = collections.Counter()
+    real = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        counts[command.split("\n", 1)[0]] += 1
+        return real(self, command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        Parser(spec, spark=spark).parse(csv)
+    finally:
+        cs.ClientServerConnection.send_command = real
+        gc.enable()
+    assert counts["c"] + counts["r"] <= 3950, dict(counts)

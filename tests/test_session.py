@@ -230,3 +230,44 @@ def test_reliable_mode_matches_default(spark, tmp_path, monkeypatch, case):
     assert got == want
     assert _n_files(ckpt) > before
     assert local_cuts == []
+
+
+def test_reliable_cut_files_are_deleted_once_unreferenced(tmp_path):
+    """``get_spark`` turns on checkpoint cleaning (a static conf, so the
+    check runs in a session of its own): a reliable cut's ``rdd-*``
+    directory goes once the cut frame is garbage in Python and the JVM."""
+    import subprocess
+    import sys
+    import textwrap
+
+    ckpt = tmp_path / "ckpt"
+    script = textwrap.dedent(
+        f"""
+        import gc, glob, time
+        from adtl_spark.session import RELIABLE_CKPT_CONF, cut, get_spark
+
+        spark = get_spark("checkpoint_cleaning", cpus=2)
+        spark.conf.set(RELIABLE_CKPT_CONF, "true")
+        spark.sparkContext.setCheckpointDir({str(ckpt)!r})
+        df = cut(spark.range(100).selectExpr("id * 2 AS x"))
+        assert df.count() == 100
+        pattern = {str(ckpt)!r} + "/*/rdd-*"
+        assert glob.glob(pattern), "the cut wrote no checkpoint"
+        del df
+        deadline = time.monotonic() + 60
+        while glob.glob(pattern) and time.monotonic() < deadline:
+            gc.collect()
+            spark.sparkContext._jvm.System.gc()
+            time.sleep(0.5)
+        print("left:", glob.glob(pattern))
+        spark.stop()
+        """
+    )
+    root = PKG.parent
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=600, cwd=root,
+        env={**os.environ, "PYTHONPATH": str(root)},
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "left: []" in proc.stdout, proc.stdout
