@@ -11,7 +11,7 @@ import weakref
 from pathlib import Path
 from typing import Any, Callable, Iterable
 
-from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from adtl_spark.plans.tables import build_all_tables, order_keys
@@ -49,14 +49,21 @@ def load_custom_transformations(filepath: str | Path) -> dict[str, Callable]:
 class Parser:
     """Compile a spec once; parse any number of sources against it.
 
-    Each ``parse*`` call caches its tables, so the report, the sinks,
-    ``table()`` and ``read_table()`` share one run of each table's plan
-    (source scan, rules, groupBy, validator), whichever comes first.  The
-    cache sits below the row-order sort: the report reads it unsorted, and
-    every ordered consumer sorts on top of it.  The Parser owns the cache
-    and releases it on the next ``parse*``, on ``close()`` (or leaving a
-    ``with`` block), and when it is garbage-collected; tables obtained
-    before then stay valid and recompute from the source.
+    The tables of each ``parse*`` call are cached on their first consumer
+    (``build_report()``, ``save()``, ``table()``, ``read_table()`` or a
+    ``write_*``), so all consumers share one run of each table's plan
+    (source scan, rules, groupBy, validator).  A parse whose tables are
+    only read through ``data`` caches nothing.  The cache sits below the
+    row-order sort: the report reads it unsorted, and every ordered
+    consumer sorts on top of it.  Only tables with order keys are cached:
+    a constant table is one literal row, and a streaming table cannot be.
+    The Parser owns the cache and releases it on the next ``parse*``, on
+    ``close()`` (or leaving a ``with`` block), and when it is
+    garbage-collected; tables obtained before then stay valid and
+    recompute from the source.  Spark keys its cache by plan: two Parsers
+    of one spec over one source share the entries, and releasing either
+    drops them for both (results stay correct; the other's tables then
+    recompute).
     ``ordered_output=False`` skips the sort (a global range exchange) for
     pipelines that need no row-order parity with the reference.
     """
@@ -83,6 +90,7 @@ class Parser:
         self.data: dict[str, DataFrame] = {}
         # each table before the row-order sort, order keys still as columns
         self._unsorted: dict[str, DataFrame] = {}
+        self._uncached: list[DataFrame] = []  # cached on the first consumer
         self._cached: list[DataFrame] = []
         weakref.finalize(self, _unpersist_all, self._cached).atexit = False
         self.report: dict[str, Any] = {}
@@ -95,7 +103,9 @@ class Parser:
         self.close()
 
     def close(self) -> None:
-        """Release the cached tables of the last ``parse*`` call."""
+        """Release the cached tables of the last ``parse*`` call; later
+        consumers recompute them from the source."""
+        self._uncached.clear()
         _unpersist_all(self._cached)
 
     # ------------------------------------------------------------------ parse
@@ -132,13 +142,18 @@ class Parser:
                 name: annotate_validation(self.spec, name, df)
                 for name, df in tables.items()
             }
-        if not source.isStreaming:
-            tables = {name: df.persist() for name, df in tables.items()}
-            self._cached.extend(tables.values())
         self._unsorted = tables
+        self._uncached = [df for df in tables.values() if order_keys(df)]
         self.data = {name: self._sorted(df) for name, df in tables.items()}
         self.report_available = not skip_validation
         return self
+
+    def _cache(self) -> None:
+        """Register the last parse's tables in Spark's cache, once.  Runs in
+        every consumer, so a parse that is never consumed pays no cache
+        planning."""
+        while self._uncached:
+            self._cached.append(self._uncached.pop().persist())
 
     def _sorted(self, df: DataFrame) -> DataFrame:
         """``df`` in the reference's row order (when ``ordered_output``),
@@ -153,6 +168,7 @@ class Parser:
     def table(self, table: str) -> DataFrame:
         if table not in self.data:
             raise ValueError(f"Invalid table name: {table}")
+        self._cache()
         return self.data[table]
 
     def read_table(self, table: str, typed: bool = True) -> Iterable[StrDict]:
@@ -248,6 +264,7 @@ class Parser:
 
     def build_report(self) -> dict[str, Any]:
         # counts need no row order: group the cached tables, no sort
+        self._cache()
         self.report = validation_report(self._unsorted)
         return self.report
 
@@ -268,14 +285,12 @@ class Parser:
 
 def _unpersist_all(frames: list[DataFrame]) -> None:
     """Unpersist and forget every frame in ``frames``.  Also runs when its
-    Parser is garbage-collected, possibly after the SparkContext has
-    stopped: there is nothing left to release then."""
+    Parser is garbage-collected, possibly after the frame's SparkContext
+    has stopped: that context holds nothing left to release."""
     while frames:
         df = frames.pop()
-        try:
+        if df.sparkSession.sparkContext is SparkContext._active_spark_context:
             df.unpersist()
-        except (Py4JError, ConnectionError):
-            pass
 
 
 def _restore_dynamic(v: Any):

@@ -394,7 +394,7 @@ def adtl_engine_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = Parser(spec, spark=spark, ordered_output=False).parse_dataframe(
         li, skip_validation=True
     )
-    out = p.table("orders_rollup")
+    out = p.data["orders_rollup"]
     return out.select(
         F.col("order_id").cast("long").alias("order_id"),
         F.col("min_qty"),
@@ -450,7 +450,7 @@ def adtl_engine_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = Parser(spec, spark=spark, ordered_output=False).parse_dataframe(
         li, skip_validation=True
     )
-    out = p.table("orders_rollup")
+    out = p.data["orders_rollup"]
     return out.select(
         F.col("order_id").cast("long").alias("order_id"),
         F.col("min_qty"),
@@ -494,7 +494,7 @@ def adtl_engine_one_to_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = Parser(spec, spark=spark, ordered_output=False).parse_dataframe(
         o, skip_validation=True
     )
-    return p.table("flags").select(
+    return p.data["flags"].select(
         F.col("order_id").cast("long").alias("order_id"),
         "name",
         "value",

@@ -178,16 +178,29 @@ def test_reparse_releases_the_previous_cache(spark, tmp_path):
     p = Parser(_spec(tmp_path), spark=spark)
     p.parse(str(_write_csv(tmp_path / "a.csv")))
     p.build_report()
-    # the constant table's plan does not depend on the source, so the
-    # second parse's cache entry would match it too
-    first = [df for name, df in p._unsorted.items() if name != "metadata"]
+    first = list(p._unsorted.values())
     assert not spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
     p.parse(str(_write_csv(tmp_path / "b.csv", shift=1)))
-    # the first parse's blocks are gone; the second has filled nothing yet
-    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    # the first parse's blocks are gone; the second has no consumer yet
+    _assert_nothing_cached(spark)
     assert all(not df.storageLevel.useMemory for df in first)
     p.build_report()
     p.close()
+    _assert_nothing_cached(spark)
+
+
+def test_cache_is_registered_by_the_first_consumer(spark, tmp_path):
+    """A parse whose tables are read only through ``data`` registers no
+    cache; the first consumer registers every ordered table, and the
+    one-row constant table is never cached."""
+    _clear_caches(spark)
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse(str(_write_csv(tmp_path / "data.csv")))
+        assert p.data["visit"].count() == N_SUBJECTS * VISITS
+        _assert_nothing_cached(spark)
+        p.table("visit")
+        cached = {name for name, df in p._unsorted.items() if df.storageLevel.useMemory}
+        assert cached == {"subject", "visit", "obs"}
     _assert_nothing_cached(spark)
 
 

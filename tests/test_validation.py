@@ -319,10 +319,13 @@ def test_report_matches_two_aggregates_per_table(spark, tmp_path):
     from adtl_spark.validate import validation_report
 
     p = _multi_table_parser(spark, tmp_path)
-    got = validation_report(p.data)
     want = _report_two_aggregates_per_table(p.data)
-    assert got == want
-    assert json.dumps(got) == json.dumps(want)  # key order, nested too
+    # the sorted tables, and the unsorted cached ones build_report() reads
+    for tables in (p.data, p._unsorted):
+        got = validation_report(tables)
+        assert got == want
+        assert json.dumps(got) == json.dumps(want)  # key order, nested too
+    assert p.build_report() == want
     assert list(got["total"]) == ["subject", "empty", "obs"]
     assert got["total"]["empty"] == 0
     assert got["total_valid"]["empty"] == 0
@@ -346,6 +349,8 @@ def test_report_is_one_collect(spark, tmp_path, monkeypatch):
         return real_collect(self)
 
     monkeypatch.setattr(df_class, "collect", counting_collect)
-    report = validation_report(p.data)
-    assert len(calls) == 1
-    assert set(report["total"]) == {"subject", "empty", "obs"}
+    for tables in (p.data, p._unsorted):
+        calls.clear()
+        report = validation_report(tables)
+        assert len(calls) == 1
+        assert set(report["total"]) == {"subject", "empty", "obs"}
