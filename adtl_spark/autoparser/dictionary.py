@@ -155,8 +155,8 @@ def infer_dictionary(
         stat_aggs += [
             F.count(present).alias(f"{c}__n"),
             F.count_distinct(present).alias(f"{c}__distinct"),
-            F.sum(R.is_int_string(present).cast("int")).alias(f"{c}__ints"),
-            F.sum(R.is_numeric_string(present).cast("int")).alias(f"{c}__nums"),
+            F.sum(present.rlike(R.INT_REGEX).cast("int")).alias(f"{c}__ints"),
+            F.sum(present.rlike(R.FLOAT_REGEX).cast("int")).alias(f"{c}__nums"),
             F.sum(
                 (present.startswith("[") | present.contains(",")).cast("int")
             ).alias(f"{c}__listish"),

@@ -1,4 +1,4 @@
 """Scalar function library: date-format translation, canonical rendering,
 unit conversion and the adtl ``apply`` transformation surface
-(reference: src/adtl/transformations.py) re-expressed as native Column
-builders."""
+(reference: src/adtl/transformations.py) re-expressed as native Spark SQL
+expression text."""

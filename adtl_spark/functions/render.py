@@ -20,56 +20,58 @@ magnitudes do not occur in the reference fixtures.
 
 A typed (non-bit-compat) mode is available in the table materializer for
 parquet-native pipelines where a JSON schema pins column types.
+
+The builders below take and return Spark SQL expression text
+(``adtl_spark.functions.sql``); wrap a result in ``F.expr`` where a
+``Column`` is needed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from adtl_spark.functions import sql as S
 
 # Python int()/float() accept surrounding whitespace; keep parity.
 INT_REGEX = r"^\s*[+-]?[0-9]+\s*$"
 FLOAT_REGEX = r"^\s*[+-]?(([0-9]+\.?[0-9]*)|(\.[0-9]+))([eE][+-]?[0-9]+)?\s*$"
 
 
-def is_int_string(col: Column) -> Column:
-    return col.rlike(INT_REGEX)
+def is_int_string(x: str) -> str:
+    return S.rlike(x, INT_REGEX)
 
 
-def is_float_string(col: Column) -> Column:
-    return col.rlike(FLOAT_REGEX)
+def is_float_string(x: str) -> str:
+    return S.rlike(x, FLOAT_REGEX)
 
 
-def is_numeric_string(col: Column) -> Column:
+def is_numeric_string(x: str) -> str:
     """True when Python ``int(v)`` or ``float(v)`` would succeed."""
-    return col.rlike(FLOAT_REGEX)
+    return S.rlike(x, FLOAT_REGEX)
 
 
-def render_double(col: Column) -> Column:
-    """Render a double column the way Python ``str(float)`` does for the
-    common magnitude range: integral doubles keep one trailing ``.0``."""
-    return col.cast("double").cast("string")
+def render_double(x: str) -> str:
+    """Render a double the way Python ``str(float)`` does for the common
+    magnitude range: integral doubles keep one trailing ``.0``."""
+    return S.cast(S.cast(x, "DOUBLE"), "STRING")
 
 
-def render_long(col: Column) -> Column:
-    return col.cast("long").cast("string")
+def render_long(x: str) -> str:
+    return S.cast(S.cast(x, "BIGINT"), "STRING")
 
 
-def render_bool(col: Column) -> Column:
-    return F.when(col, F.lit("True")).when(~col, F.lit("False"))
+def render_bool(x: str) -> str:
+    return S.case([(x, "'True'"), (S.not_(x), "'False'")])
 
 
-def numeric_coerce(col: Column) -> Column:
+def numeric_coerce(x: str) -> str:
     """The reference's final int-then-float coercion on string values
     (src/adtl/get_value.py:162-170), expressed as a canonical re-rendering.
 
     Non-numeric strings pass through unchanged; empty string is left to the
     caller (the reference nulls ``""`` *before* this step).
     """
-    return (
-        F.when(is_int_string(col), render_long(col))
-        .when(is_float_string(col), render_double(col))
-        .otherwise(col)
+    return S.case(
+        [(is_int_string(x), render_long(x)), (is_float_string(x), render_double(x))],
+        x,
     )
 
 
@@ -95,22 +97,25 @@ def render_literal(value: object) -> str | None:
     return str(value)
 
 
-def repr_element(col: Column) -> Column:
+def repr_element(x: str) -> str:
     """Python ``repr`` of a rendered element, for ``str(list)`` CSV parity:
     numbers and booleans bare, everything else single-quoted."""
-    is_bare = col.rlike(FLOAT_REGEX) | col.isin("True", "False", "None")
-    return F.when(is_bare, col).otherwise(F.concat(F.lit("'"), col, F.lit("'")))
+    is_bare = S.or_(S.rlike(x, FLOAT_REGEX), S.isin(x, ["True", "False", "None"]))
+    quote = S.lit("'")
+    return S.case([(is_bare, x)], S.call("concat", quote, x, quote))
 
 
-def render_array_python(col: Column) -> Column:
-    """Render an ArrayType(String) column as Python's ``str(list)``:
+def render_array_python(x: str) -> str:
+    """Render an array<string> as Python's ``str(list)``:
     ``['a', 'b']`` / ``[1, 2]`` — what the reference CSV sink emits for
     combinedType list/set cells."""
-    return F.when(
-        col.isNotNull(),
-        F.concat(
-            F.lit("["),
-            F.array_join(F.transform(col, repr_element), ", ", "None"),
-            F.lit("]"),
+    items = S.call("transform", x, f"__e -> {repr_element('__e')}")
+    return S.when(
+        S.is_not_null(x),
+        S.call(
+            "concat",
+            S.lit("["),
+            S.call("array_join", items, S.lit(", "), S.lit("None")),
+            S.lit("]"),
         ),
     )

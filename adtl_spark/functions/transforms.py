@@ -1,5 +1,5 @@
 """The adtl ``apply`` transformation surface (T1-T16 in SURVEY.md §2.7) as
-native Column builders, plus the custom-transform UDF wrapper (U1/U3).
+native Spark SQL expression text, plus the custom-transform UDF wrapper (U1/U3).
 
 Reference implementations: src/adtl/transformations.py (row-wise Python).
 Here every shipped transformation compiles to JVM-side expressions — no
@@ -17,6 +17,7 @@ one deliberate deviation, documented per builder.
 
 from __future__ import annotations
 
+import re
 import warnings
 from typing import Any, Callable
 
@@ -25,156 +26,163 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from adtl_spark.functions import render as R
+from adtl_spark.functions import sql as S
 from adtl_spark.functions.datefmt import has_two_digit_year, strftime_to_spark
 
 ISO = "%Y-%m-%d"
+NULL = S.NULL_STRING
 
 
-def _lit(p: Any) -> Column:
-    """Params are either spec literals or already-resolved $field Columns."""
-    return p if isinstance(p, Column) else F.lit(p)
-
-def _is_col(p: Any) -> bool:
-    return isinstance(p, Column)
+def _lit(p: Any) -> str:
+    """Params are either spec literals or already-resolved $field SQL."""
+    return p if _is_sql(p) else S.lit(p)
 
 
-def _empty(col: Column) -> Column:
+def _is_sql(p: Any) -> bool:
+    return isinstance(p, S.Sql)
+
+
+def _empty(x: str) -> str:
     "value in [None, ''] — the universal null-tolerance guard"
-    col = col.cast("string")
-    return col.isNull() | (col == "")
+    x = S.cast(x, "STRING")
+    return S.or_(S.is_null(x), f"({x} = '')")
 
 
-def _parse_ts(col: Column, strf_fmt: str) -> Column:
+def _parse_ts(x: str, strf_fmt: str) -> str:
     "strptime -> timestamp, null on failure"
     pattern = strftime_to_spark(strf_fmt, for_parsing=True)
-    return F.try_to_timestamp(F.nullif(col, F.lit("")), F.lit(pattern))
+    return S.call("try_to_timestamp", S.call("nullif", x, "''"), S.lit(pattern))
 
 
-def _pivot_century(ts: Column, epoch: Any, strf_fmt: str) -> Column:
+def _pivot_century(ts: str, epoch: Any, strf_fmt: str) -> str:
     """correctOldDate's century pivot: parsed year >= epoch with a two-digit
     year directive in the format -> subtract 100 years
     (reference: transformations.py:446-489)."""
     if not has_two_digit_year(strf_fmt):
         return ts
-    epoch_col = _lit(epoch).cast("double")
-    return F.when(
-        F.year(ts).cast("double") >= epoch_col, F.add_months(ts, -1200)
-    ).otherwise(ts)
+    year = S.cast(S.call("year", ts), "DOUBLE")
+    return S.case(
+        [(f"({year} >= {S.cast(_lit(epoch), 'DOUBLE')})", S.call("add_months", ts, "-1200"))],
+        ts,
+    )
 
 
-def _iso_offset_render(naive_ts: Column, tz: Any) -> Column:
+def _iso_offset_render(naive_ts: str, tz: Any) -> str:
     """Render a wall-clock timestamp as Python ``datetime.isoformat`` with
     the zone's UTC offset at that instant (DST-aware), seconds precision."""
-    tz_col = _lit(tz)
-    utc_instant = F.to_utc_timestamp(naive_ts, tz_col)
-    offset = naive_ts.cast("long") - utc_instant.cast("long")
-    sign = F.when(offset < 0, F.lit("-")).otherwise(F.lit("+"))
-    abs_off = F.abs(offset)
-    hh = F.lpad((abs_off / 3600).cast("int").cast("string"), 2, "0")
-    mm = F.lpad(((abs_off % 3600) / 60).cast("int").cast("string"), 2, "0")
-    return F.concat(
-        F.date_format(naive_ts, "yyyy-MM-dd'T'HH:mm:ss"), sign, hh, F.lit(":"), mm
+    utc_instant = S.call("to_utc_timestamp", naive_ts, _lit(tz))
+    offset = f"({S.cast(naive_ts, 'BIGINT')} - {S.cast(utc_instant, 'BIGINT')})"
+    sign = S.case([(f"({offset} < 0)", "'-'")], "'+'")
+    abs_off = S.call("abs", offset)
+    hh = S.call("lpad", S.cast(S.cast(f"({abs_off} / 3600)", "INT"), "STRING"), "2", "'0'")
+    minutes = f"(({abs_off} % 3600) / 60)"
+    mm = S.call("lpad", S.cast(S.cast(minutes, "INT"), "STRING"), "2", "'0'")
+    return S.call(
+        "concat",
+        S.call("date_format", naive_ts, S.lit("yyyy-MM-dd'T'HH:mm:ss")),
+        sign,
+        hh,
+        "':'",
+        mm,
     )
 
 
 # --------------------------------------------------------------------------
-# builders — each returns (column, type_hint, is_array)
+# builders — each returns (SQL text, type_hint, is_array)
 
-BuildResult = tuple[Column, str, bool]
-
-
-def t_is_not_null(value: Column, params: list, fail: Column) -> BuildResult:
-    return R.render_bool(~_empty(value)), "bool", False
+BuildResult = tuple[str, str, bool]
 
 
-def t_text_if_not_null(value: Column, params: list, fail: Column) -> BuildResult:
+def t_is_not_null(value: str, params: list, fail: str) -> BuildResult:
+    return R.render_bool(S.not_(_empty(value))), "bool", False
+
+
+def t_text_if_not_null(value: str, params: list, fail: str) -> BuildResult:
     return_val = params[0]
     rendered = (
-        return_val
-        if _is_col(return_val)
-        else F.lit(R.render_literal(return_val))
+        return_val if _is_sql(return_val) else S.lit(R.render_literal(return_val))
     )
-    return F.when(~_empty(value), rendered), "str", False
+    return S.when(S.not_(_empty(value)), rendered), "str", False
 
 
-def t_word_substitute_set(value: Column, params: list, fail: Column) -> BuildResult:
+def t_word_substitute_set(value: str, params: list, fail: str) -> BuildResult:
     branches = []
     for pair in params:
-        if _is_col(pair) or len(pair) != 2 or any(_is_col(x) for x in pair):
+        if _is_sql(pair) or len(pair) != 2 or any(_is_sql(x) for x in pair):
             raise ValueError("wordSubstituteSet: params item not a (word, sub) pair")
         word, subst = pair
-        branches.append(
-            F.when(value.rlike(r"(?i)\b" + word + r"\b"), F.lit(subst))
-        )
-    matches = F.array_sort(
-        F.array_distinct(F.filter(F.array(*branches), lambda x: x.isNotNull()))
-    )
-    no_match = F.size(matches) == 0
+        branches.append(S.when(S.rlike(value, r"(?i)\b" + word + r"\b"), S.lit(subst)))
+    found = S.call("filter", S.call("array", *branches), "__w -> (__w IS NOT NULL)")
+    matches = S.call("array_sort", S.call("array_distinct", found))
+    no_match = f"({S.call('size', matches)} = 0)"
     if _FAIL_IS_PASSTHROUGH.get():
         # returnUnmatched: unmatched values pass through as the raw string, so
         # the whole column is stringly-rendered (mixed-type cell parity with
         # the reference's list-or-str cells)
-        rendered = (
-            F.when(_empty(value), F.lit(None).cast("string"))
-            .when(~no_match, R.render_array_python(matches))
-            .otherwise(fail)
+        rendered = S.case(
+            [(_empty(value), NULL), (S.not_(no_match), R.render_array_python(matches))],
+            fail,
         )
         return rendered, "str", False
     # no match on a non-empty value warns -> null; empty value -> None
-    result = F.when(_empty(value) | no_match, F.lit(None).cast("array<string>")).otherwise(
-        matches
+    result = S.case(
+        [(S.or_(_empty(value), no_match), "CAST(NULL AS ARRAY<STRING>)")], matches
     )
     return result, "str", True
 
 
-def t_get_float(value: Column, params: list, fail: Column) -> BuildResult:
+def t_get_float(value: str, params: list, fail: str) -> BuildResult:
     set_decimal = params[0] if len(params) > 0 else None
     separator = params[1] if len(params) > 1 else None
-    cleaned = F.regexp_replace(value, r'^"+|"+$', "")
-    cleaned = F.regexp_replace(cleaned, " ", "")
+    cleaned = S.call("regexp_replace", value, S.lit(r'^"+|"+$'), "''")
+    cleaned = S.call("regexp_replace", cleaned, "' '", "''")
     if set_decimal and set_decimal != ".":
         # convert the LAST decimal-separator occurrence into a dot
         # (partition splits on the last instance)
-        esc = _re_escape(set_decimal)
-        cleaned = F.when(
-            cleaned.contains(set_decimal),
-            F.regexp_replace(cleaned, esc + r"(?=[^" + esc + r"]*$)", "."),
-        ).otherwise(F.concat(cleaned, F.lit(".")))
+        esc = re.escape(set_decimal)
+        last = S.lit(esc + r"(?=[^" + esc + r"]*$)")
+        cleaned = S.case(
+            [
+                (
+                    S.call("contains", cleaned, S.lit(set_decimal)),
+                    S.call("regexp_replace", cleaned, last, "'.'"),
+                )
+            ],
+            S.call("concat", cleaned, "'.'"),
+        )
     if separator:
         if separator != ".":
-            cleaned = F.regexp_replace(cleaned, _re_escape(separator), "")
+            cleaned = S.call("regexp_replace", cleaned, S.lit(re.escape(separator)), "''")
         else:
             # thousands dot: drop every dot except the last
-            cleaned = F.regexp_replace(cleaned, r"\.(?=.*\.)", "")
-    num_pat = r"[-+]?\d*\.?\d+"
-    n_matches = F.size(F.regexp_extract_all(cleaned, F.lit("(" + num_pat + ")")))
-    single = F.regexp_extract(cleaned, "(" + num_pat + ")", 1)
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(n_matches == 1, R.render_double(single))
-        .when(R.is_float_string(cleaned), R.render_double(cleaned))
-        .otherwise(F.nullif(cleaned, F.lit("")))
+            cleaned = S.call("regexp_replace", cleaned, S.lit(r"\.(?=.*\.)"), "''")
+    num_pat = S.lit(r"([-+]?\d*\.?\d+)")
+    n_matches = S.call("size", S.call("regexp_extract_all", cleaned, num_pat))
+    single = S.call("regexp_extract", cleaned, num_pat, "1")
+    result = S.case(
+        [
+            (_empty(value), NULL),
+            (f"({n_matches} = 1)", R.render_double(single)),
+            (R.is_float_string(cleaned), R.render_double(cleaned)),
+        ],
+        S.call("nullif", cleaned, "''"),
     )
     return result, "dynamic", False
 
 
-def _re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)
-
-
-def t_percentage(value: Column, params: list, fail: Column) -> BuildResult:
-    d = value.cast("double")
-    result = (
-        F.when(~R.is_float_string(value), value)
-        .when(d > 1, R.render_double(d))
-        .otherwise(R.render_double(d * 100))
+def t_percentage(value: str, params: list, fail: str) -> BuildResult:
+    d = S.cast(value, "DOUBLE")
+    result = S.case(
+        [
+            (S.not_(R.is_float_string(value)), value),
+            (f"({d} > 1)", R.render_double(d)),
+        ],
+        R.render_double(f"({d} * 100)"),
     )
-    return F.when(_empty(value), F.lit(None).cast("string")).otherwise(result), "float", False
+    return S.case([(_empty(value), NULL)], result), "float", False
 
 
-def t_years_elapsed(value: Column, params: list, fail: Column) -> BuildResult:
+def t_years_elapsed(value: str, params: list, fail: str) -> BuildResult:
     currentdate = _lit(params[0])
     epoch = params[1]
     bd_format = params[2] if len(params) > 2 else ISO
@@ -182,143 +190,149 @@ def t_years_elapsed(value: Column, params: list, fail: Column) -> BuildResult:
     bd_raw = _parse_ts(value, bd_format)
     bd = _pivot_century(bd_raw, epoch, bd_format)
     cd = _parse_ts(currentdate, cd_format)
-    years = F.datediff(cd, bd) / F.lit(365.25)  # pint: Julian year = 365.25 d
-    result = (
-        F.when(_empty(value) | _empty(currentdate), F.lit(None).cast("string"))
-        .when(bd_raw.isNull(), fail)  # correctOldDate warning site
-        .when(cd.isNull(), F.lit(None).cast("string"))  # reference: uncaught
-        .otherwise(R.render_double(years))
+    years = f"({S.call('datediff', cd, bd)} / 365.25D)"  # pint: Julian year = 365.25 d
+    result = S.case(
+        [
+            (S.or_(_empty(value), _empty(currentdate)), NULL),
+            (S.is_null(bd_raw), fail),  # correctOldDate warning site
+            (S.is_null(cd), NULL),  # reference: uncaught
+        ],
+        R.render_double(years),
     )
     return result, "float", False
 
 
-def t_duration_days(value: Column, params: list, fail: Column) -> BuildResult:
+def t_duration_days(value: str, params: list, fail: str) -> BuildResult:
     currentdate = _lit(params[0])
     fmt = params[1] if len(params) > 1 else ISO
     sd = _parse_ts(value, fmt)
     cd = _parse_ts(currentdate, fmt)
-    result = (
-        F.when(_empty(value) | _empty(currentdate), F.lit(None).cast("string"))
-        .when(sd.isNull() | cd.isNull(), F.lit(None).cast("string"))
-        .otherwise(F.datediff(cd, sd).cast("string"))
+    result = S.case(
+        [
+            (S.or_(_empty(value), _empty(currentdate)), NULL),
+            (S.or_(S.is_null(sd), S.is_null(cd)), NULL),
+        ],
+        S.cast(S.call("datediff", cd, sd), "STRING"),
     )
     return result, "int", False
 
 
-def _shift_days(ts: Column, days: Column, sign: int) -> Column:
-    seconds = (days * 86400).cast("long") * sign
-    return F.timestamp_seconds(ts.cast("long") + seconds)
+def _shift_days(ts: str, days: str, sign: int) -> str:
+    seconds = f"({S.cast(f'({days} * 86400)', 'BIGINT')} * {sign})"
+    return S.call("timestamp_seconds", f"({S.cast(ts, 'BIGINT')} + {seconds})")
 
 
-def t_start_date(value: Column, params: list, fail: Column) -> BuildResult:
-    duration = _lit(params[0])
+def _shift_by_duration(
+    value: str, duration: str, ts: str, sign: int, out_fmt: str
+) -> str:
+    """startDate/endDate: ``ts`` moved by ``duration`` days, formatted."""
+    shifted = _shift_days(ts, S.cast(duration, "DOUBLE"), sign)
+    invalid = S.or_(
+        _empty(value), _empty(duration), S.is_null(ts), S.not_(R.is_float_string(duration))
+    )
+    return S.case([(invalid, NULL)], S.call("date_format", shifted, S.lit(out_fmt)))
+
+
+def t_start_date(value: str, params: list, fail: str) -> BuildResult:
     ed = _parse_ts(value, ISO)
-    shifted = _shift_days(ed, duration.cast("double"), -1)
-    result = F.when(
-        _empty(value) | _empty(duration) | ed.isNull() | ~R.is_float_string(duration),
-        F.lit(None).cast("string"),
-    ).otherwise(F.date_format(shifted, "yyyy-MM-dd"))
-    return result, "str", False
+    return _shift_by_duration(value, _lit(params[0]), ed, -1, "yyyy-MM-dd"), "str", False
 
 
-def t_end_date(value: Column, params: list, fail: Column) -> BuildResult:
-    duration = _lit(params[0])
+def t_end_date(value: str, params: list, fail: str) -> BuildResult:
     fmt = params[1] if len(params) > 1 else ISO
     sd = _parse_ts(value, fmt)
-    shifted = _shift_days(sd, duration.cast("double"), +1)
-    result = F.when(
-        _empty(value) | _empty(duration) | sd.isNull() | ~R.is_float_string(duration),
-        F.lit(None).cast("string"),
-    ).otherwise(F.date_format(shifted, strftime_to_spark(fmt, for_parsing=False)))
-    return result, "str", False
+    out_fmt = strftime_to_spark(fmt, for_parsing=False)
+    return _shift_by_duration(value, _lit(params[0]), sd, +1, out_fmt), "str", False
 
 
-def t_make_date(value: Column, params: list, fail: Column) -> BuildResult:
+def t_make_date(value: str, params: list, fail: str) -> BuildResult:
     month, day = _lit(params[0]), _lit(params[1])
     year = value
-    ints_ok = (
-        R.is_int_string(year) & R.is_int_string(month) & R.is_int_string(day)
-    )
+    ints_ok = S.and_(R.is_int_string(year), R.is_int_string(month), R.is_int_string(day))
     # make_date yields null on invalid components under non-ANSI semantics
-    # (the engine session guarantees ANSI off); try_make_date does not exist
-    # as a PySpark function wrapper
-    made = F.make_date(year.cast("int"), month.cast("int"), day.cast("int"))
-    result = (
-        F.when(_empty(year) | _empty(month) | _empty(day), F.lit(None).cast("string"))
-        .when(~ints_ok | made.isNull(), fail)  # warning sites
-        .otherwise(F.date_format(made, "yyyy-MM-dd"))
+    # (the engine session guarantees ANSI off)
+    made = S.call(
+        "make_date", S.cast(year, "INT"), S.cast(month, "INT"), S.cast(day, "INT")
+    )
+    result = S.case(
+        [
+            (S.or_(_empty(year), _empty(month), _empty(day)), NULL),
+            (S.or_(S.not_(ints_ok), S.is_null(made)), fail),  # warning sites
+        ],
+        S.call("date_format", made, "'yyyy-MM-dd'"),
     )
     return result, "str", False
 
 
-def t_make_datetime_from_seconds(value: Column, params: list, fail: Column) -> BuildResult:
+def t_make_datetime_from_seconds(value: str, params: list, fail: str) -> BuildResult:
     time_seconds, date_format_, timezone_ = params[0], params[1], params[2]
-    secs = _lit(time_seconds)
+    secs = S.cast(_lit(time_seconds), "BIGINT")
     parsed = _parse_ts(value, date_format_)
-    with_time = F.timestamp_seconds(
-        parsed.cast("long")
-        + (secs.cast("long") - secs.cast("long") % 3600)  # whole hours
-        + ((secs.cast("long") % 3600) / 60).cast("long") * 60  # whole minutes
+    whole_hours = f"({secs} - ({secs} % 3600))"
+    whole_minutes = f"({S.cast(f'(({secs} % 3600) / 60)', 'BIGINT')} * 60)"
+    with_time = S.call(
+        "timestamp_seconds",
+        f"(({S.cast(parsed, 'BIGINT')} + {whole_hours}) + {whole_minutes})",
     )
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(parsed.isNull(), fail)  # warning site
-        .when(_empty(secs.cast("string")), F.date_format(parsed, "yyyy-MM-dd"))
-        .otherwise(_iso_offset_render(with_time, timezone_))
+    result = S.case(
+        [
+            (_empty(value), NULL),
+            (S.is_null(parsed), fail),  # warning site
+            (_empty(S.cast(_lit(time_seconds), "STRING")),
+             S.call("date_format", parsed, "'yyyy-MM-dd'")),
+        ],
+        _iso_offset_render(with_time, timezone_),
     )
     return result, "str", False
 
 
-def t_make_datetime(value: Column, params: list, fail: Column) -> BuildResult:
+def t_make_datetime(value: str, params: list, fail: str) -> BuildResult:
     time_24hr, date_format_, timezone_ = params[0], params[1], params[2]
     tm = _lit(time_24hr)
     parsed = _parse_ts(value, date_format_)
-    tm_ts = F.try_to_timestamp(F.nullif(tm, F.lit("")), F.lit("H:m"))
-    combined = F.timestamp_seconds(
-        parsed.cast("long") + F.hour(tm_ts) * 3600 + F.minute(tm_ts) * 60
+    tm_ts = S.call("try_to_timestamp", S.call("nullif", tm, "''"), "'H:m'")
+    seconds = (
+        f"(({S.cast(parsed, 'BIGINT')} + ({S.call('hour', tm_ts)} * 3600))"
+        f" + ({S.call('minute', tm_ts)} * 60))"
     )
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(parsed.isNull(), fail)  # warning site
-        .when(_empty(tm), F.date_format(parsed, "yyyy-MM-dd"))
-        .when(tm_ts.isNull(), F.lit(None).cast("string"))  # reference: uncaught
-        .otherwise(_iso_offset_render(combined, timezone_))
+    result = S.case(
+        [
+            (_empty(value), NULL),
+            (S.is_null(parsed), fail),  # warning site
+            (_empty(tm), S.call("date_format", parsed, "'yyyy-MM-dd'")),
+            (S.is_null(tm_ts), NULL),  # reference: uncaught
+        ],
+        _iso_offset_render(S.call("timestamp_seconds", seconds), timezone_),
     )
     return result, "str", False
 
 
-def t_split_date(value: Column, params: list, fail: Column) -> BuildResult:
+def t_split_date(value: str, params: list, fail: str) -> BuildResult:
     option = params[0]
     epoch = params[1]
     fmt = params[2] if len(params) > 2 else ISO
-    parsed = _parse_ts(value, fmt)
-    pivoted = _pivot_century(parsed, epoch, fmt)
-    extractors = {"year": F.year, "month": F.month, "day": F.dayofmonth}
+    extractors = {"year": "year", "month": "month", "day": "dayofmonth"}
     if not isinstance(option, str) or option not in extractors:
         return fail, "int", False  # invalid option warning site
-    component = extractors[option](pivoted)
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(parsed.isNull(), fail)
-        .otherwise(component.cast("string"))
+    parsed = _parse_ts(value, fmt)
+    component = S.call(extractors[option], _pivot_century(parsed, epoch, fmt))
+    result = S.case(
+        [(_empty(value), NULL), (S.is_null(parsed), fail)], S.cast(component, "STRING")
     )
     return result, "int", False
 
 
-def _first_truthy(currentdate: Any) -> Column:
+def _first_truthy(currentdate: Any) -> str:
     """A list-valued currentdate param is a hierarchy: first truthy entry
     (reference: transformations.py:379-381)."""
     if isinstance(currentdate, list):
-        return F.coalesce(
-            *[F.nullif(_lit(c), F.lit("")) for c in currentdate],
-            F.lit(None).cast("string"),
+        return S.call(
+            "coalesce", *[S.call("nullif", _lit(c), "''") for c in currentdate], NULL
         )
     return _lit(currentdate)
 
 
-def _start_shifted(
-    value: Column, params: list
-) -> tuple[Column, Column, str, Column]:
+def _start_shifted(value: str, params: list) -> tuple[str, str, str, str]:
     """Shared startYear/startMonth machinery: resolve the anchor date and
     shift it back by the duration.  Returns (duration_ok, shifted_ts,
     duration_type, anchor_ts)."""
@@ -330,65 +344,63 @@ def _start_shifted(
 
     if provide_month_day:
         month, day = provide_month_day
-        cd = F.make_date(
-            currentdate.cast("int"), _lit(month).cast("int"), _lit(day).cast("int")
-        ).cast("timestamp")
+        cd = S.cast(
+            S.call(
+                "make_date",
+                S.cast(currentdate, "INT"),
+                S.cast(_lit(month), "INT"),
+                S.cast(_lit(day), "INT"),
+            ),
+            "TIMESTAMP",
+        )
     else:
         cd = _pivot_century(_parse_ts(currentdate, dateformat), epoch, dateformat)
 
-    d = value.cast("double")
-    ok = R.is_float_string(value) & currentdate.isNotNull()
+    d = S.cast(value, "DOUBLE")
+    ok = S.and_(R.is_float_string(value), S.is_not_null(currentdate))
+    floor = S.call("floor", d)
     if duration_type == "years":
-        shifted = F.add_months(cd, (-12 * F.floor(d)).cast("int"))
+        shifted = S.call("add_months", cd, S.cast(f"(-12 * {floor})", "INT"))
     elif duration_type == "months":
-        shifted = F.add_months(cd, (-F.floor(d)).cast("int"))
+        shifted = S.call("add_months", cd, S.cast(f"(- {floor})", "INT"))
     else:  # days
         shifted = _shift_days(cd, d, -1)
-    return ok, shifted.cast("timestamp"), duration_type, cd
+    return ok, S.cast(shifted, "TIMESTAMP"), duration_type, cd
 
 
-def t_start_year(value: Column, params: list, fail: Column) -> BuildResult:
-    ok, shifted, duration_type, cd = _start_shifted(value, params)
-    if duration_type == "years":
-        # cd.year - floor(duration): identical to the shifted year
-        out = F.year(shifted)
-    else:
-        out = F.year(shifted)
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(~ok | cd.isNull(), F.lit(None).cast("string"))
-        .otherwise(out.cast("string"))
+def _start_part(value: str, params: list, part: str) -> str:
+    ok, shifted, _, cd = _start_shifted(value, params)
+    return S.case(
+        [(_empty(value), NULL), (S.or_(S.not_(ok), S.is_null(cd)), NULL)],
+        S.cast(S.call(part, shifted), "STRING"),
     )
-    return result, "int", False
 
 
-def t_start_month(value: Column, params: list, fail: Column) -> BuildResult:
-    ok, shifted, duration_type, cd = _start_shifted(value, params)
+def t_start_year(value: str, params: list, fail: str) -> BuildResult:
+    return _start_part(value, params, "year"), "int", False
+
+
+def t_start_month(value: str, params: list, fail: str) -> BuildResult:
+    duration_type = params[3] if len(params) > 3 else "years"
     if duration_type == "years":
         # reference startMonth has no 'years' branch -> implicit None
-        return F.lit(None).cast("string"), "int", False
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(~ok | cd.isNull(), F.lit(None).cast("string"))
-        .otherwise(F.month(shifted).cast("string"))
-    )
-    return result, "int", False
+        return NULL, "int", False
+    return _start_part(value, params, "month"), "int", False
 
 
-def t_correct_old_date(value: Column, params: list, fail: Column) -> BuildResult:
+def t_correct_old_date(value: str, params: list, fail: str) -> BuildResult:
     epoch = params[0]
     fmt = params[1]
     parsed = _parse_ts(value, fmt)
     pivoted = _pivot_century(parsed, epoch, fmt)
-    result = (
-        F.when(_empty(value), F.lit(None).cast("string"))
-        .when(parsed.isNull(), fail)  # warning site
-        .otherwise(F.date_format(pivoted, "yyyy-MM-dd"))
+    result = S.case(
+        [(_empty(value), NULL), (S.is_null(parsed), fail)],  # warning site
+        S.call("date_format", pivoted, "'yyyy-MM-dd'"),
     )
     return result, "str", False
 
 
-_BUILTINS: dict[str, Callable[[Column, list, Column], BuildResult]] = {
+_BUILTINS: dict[str, Callable[[str, list, str], BuildResult]] = {
     "isNotNull": t_is_not_null,
     "textIfNotNull": t_text_if_not_null,
     "wordSubstituteSet": t_word_substitute_set,
@@ -427,19 +439,22 @@ _FAIL_IS_PASSTHROUGH = _PassthroughFlag()
 
 def build_transform(
     name: str,
-    value: Column,
+    value: str,
     params: list,
-    fail_value: Column,
+    fail_value: str,
+    stage_udf: Callable[[Column], str],
     custom_transforms: dict[str, Callable] | None = None,
     fail_is_passthrough: bool = False,
-) -> tuple[Column, str, bool]:
+) -> BuildResult:
     """Dispatch an ``apply`` rule to a native builder, falling back to a UDF
     wrapper for user-supplied transforms (U1,
-    reference: parser.py:197-226)."""
+    reference: parser.py:197-226).  ``stage_udf`` turns the UDF's Column
+    into a column a preceding projection computes, and returns the SQL
+    that references it."""
     custom_transforms = custom_transforms or {}
     _FAIL_IS_PASSTHROUGH.set(fail_is_passthrough)
     if name in custom_transforms:
-        return _wrap_custom(custom_transforms[name], value, params, fail_value)
+        return _wrap_custom(custom_transforms[name], value, params, fail_value, stage_udf)
     if name in _BUILTINS:
         return _BUILTINS[name](value, params, fail_value)
     raise AttributeError(
@@ -463,18 +478,23 @@ def _py_render(v: Any) -> str | None:
 
 
 def _wrap_custom(
-    fn: Callable, value: Column, params: list, fail_value: Column
-) -> tuple[Column, str, bool]:
+    fn: Callable,
+    value: str,
+    params: list,
+    fail_value: str,
+    stage_udf: Callable[[Column], str],
+) -> BuildResult:
     """User transform -> Arrow-batched pandas UDF.  Column params ($field)
     are passed as UDF arguments; literals are closed over.  The function
     itself is still scalar Python (the reference contract), but data moves
     in Arrow batches instead of per-row pickling.  The
     AdtlTransformationWarning channel maps to (failed, value) so the caller
-    can route to fail_value."""
+    can route to fail_value.  The UDF's result is a staged column: SQL
+    text cannot call an unregistered Python function."""
     import pandas as pd
 
-    col_params = [p for p in params if _is_col(p)]
-    spec: list[tuple[bool, Any]] = [(_is_col(p), p) for p in params]
+    col_params = [p for p in params if _is_sql(p)]
+    spec: list[tuple[bool, Any]] = [(_is_sql(p), p) for p in params]
     out_type = T.StructType(
         [
             T.StructField("failed", T.BooleanType()),
@@ -505,9 +525,9 @@ def _wrap_custom(
     # variadic signature defeats type-hint inference; pass the eval type
     # explicitly (SCALAR pandas UDF)
     run_udf = F.pandas_udf(run, returnType=out_type, functionType=F.PandasUDFType.SCALAR)
-    res = run_udf(value, *col_params)
+    res = stage_udf(run_udf(F.expr(value), *[F.expr(p) for p in col_params]))
     return (
-        F.when(res["failed"], fail_value).otherwise(res["value"]),
+        S.case([(S.field(res, "failed"), fail_value)], S.field(res, "value")),
         "dynamic",
         False,
     )

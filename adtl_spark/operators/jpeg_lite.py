@@ -728,6 +728,10 @@ class _HuffTree:
         k = 0
         for length in range(1, 17):
             for _ in range(bits[length - 1]):
+                # a corrupt DHT (counts that overflow the code space) would
+                # write past tbl8 and shadow valid codes
+                if code >= 1 << length:
+                    raise ValueError("invalid Huffman table")
                 self.lookup[(length, code)] = vals[k]
                 if length <= 8:
                     lo = code << (8 - length)

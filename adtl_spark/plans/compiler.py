@@ -1,10 +1,17 @@
-"""Rule -> pyspark Column compiler.
+"""Rule -> Spark SQL expression compiler.
 
 Compiles every adtl rule form (SURVEY.md §2.2/§2.3 operator IDs P1-P17,
-F1-F8) into native Column expressions.  The reference evaluates these rule
+F1-F8) into native expressions.  The reference evaluates these rule
 dicts per row in Python (src/adtl/get_value.py:137-241 ``get_value`` and
-:244-312 ``parse_if``); here each rule becomes one Column in a single
-``select`` so Catalyst sees the whole projection.
+:244-312 ``parse_if``); here each rule becomes one output column of a
+single projection so Catalyst sees the whole projection.
+
+Rules compile to Spark SQL expression *text* (``adtl_spark.functions.sql``),
+one expression per output column: the table materializers pass a whole
+projection to one ``selectExpr``, so the JVM parser builds each column's
+tree in one call instead of Python building it node by node over py4j.
+Python UDFs (custom ``apply`` transforms) cannot appear in SQL text; they
+are staged columns a preceding projection computes (see ``Stage``).
 
 Scalar cells use the canonical-string representation described in
 ``adtl_spark.functions.render`` (bit-compat with the reference's dynamic
@@ -21,15 +28,14 @@ from __future__ import annotations
 
 import re
 import uuid as uuid_mod
-from dataclasses import dataclass
-from functools import reduce
+from dataclasses import dataclass, field
 from typing import Any, Callable, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from adtl_spark.functions import render as R
+from adtl_spark.functions import sql as S
 from adtl_spark.functions import units as U
 from adtl_spark.functions.datefmt import strftime_to_spark
 from adtl_spark.functions.transforms import build_transform
@@ -37,40 +43,45 @@ from adtl_spark.spec import CompiledSpec, SpecError, StrDict
 
 _COMPARISON_OPS = {">", ">=", "<", "<=", "!=", "=", "==", "=~"}
 _IF_FLAGS = {"can_skip", "caseInsensitive"}
+NULL = S.NULL_STRING
 
 
-def uuid5_column(namespace: uuid_mod.UUID, name: Column) -> Column:
-    """RFC 4122 uuid5 as a native expression — no Python UDF.
+def uuid5_sql(namespace: uuid_mod.UUID, name: str) -> str:
+    """RFC 4122 uuid5 of the SQL string ``name`` as a native expression —
+    no Python UDF.
 
     uuid5 is sha1(namespace_bytes + name) with the version nibble forced to
     5 and the variant bits to 10xx, rendered 8-4-4-4-12.  The variant
     correction maps the 17th hex digit through ``(d & 0x3) | 0x8``, which is
     a 16-char translate table.  Byte-identical to ``uuid.uuid5``
     (verified against CPython in tests)."""
-    digest = F.sha1(F.concat(F.lit(namespace.bytes), F.encode(name, "UTF-8")))
-    return F.concat_ws(
-        "-",
-        F.substring(digest, 1, 8),
-        F.substring(digest, 9, 4),
-        F.concat(F.lit("5"), F.substring(digest, 14, 3)),
-        F.concat(
-            F.translate(
-                F.substring(digest, 17, 1),
-                "0123456789abcdef",
-                "89ab89ab89ab89ab",
-            ),
-            F.substring(digest, 18, 3),
-        ),
-        F.substring(digest, 21, 12),
+    digest = S.call(
+        "sha1", S.call("concat", S.lit(namespace.bytes), S.call("encode", name, "'UTF-8'"))
+    )
+
+    def part(pos: int, length: int) -> str:
+        return S.call("substring", digest, str(pos), str(length))
+
+    variant = S.call(
+        "translate", part(17, 1), S.lit("0123456789abcdef"), S.lit("89ab89ab89ab89ab")
+    )
+    return S.call(
+        "concat_ws",
+        "'-'",
+        part(1, 8),
+        part(9, 4),
+        S.call("concat", "'5'", part(14, 3)),
+        S.call("concat", variant, part(18, 3)),
+        part(21, 12),
     )
 
 
 @dataclass
 class Value:
-    """A compiled rule: the Column plus enough type knowledge for the
-    group-stage aggregator to pick numeric vs lexicographic semantics."""
+    """A compiled rule: its SQL expression plus enough type knowledge for
+    the group-stage aggregator to pick numeric vs lexicographic semantics."""
 
-    col: Column
+    sql: str
     is_array: bool = False
     # one of: int, float, bool, str, dynamic, num (num = known numeric but
     # int/float mixed: already canonically rendered, compares as double)
@@ -78,7 +89,39 @@ class Value:
     combined_type: str | None = None  # set when the rule is a combinedType
 
 
-def truthy(col: Column, hint: str = "dynamic") -> Column:
+@dataclass
+class Stage:
+    """Columns computed ahead of a table's rule projection, which its SQL
+    references by name: Python UDF results first (SQL text cannot call an
+    unregistered UDF), then combinedType sub-values.  Fold expressions
+    reference their input many times inside higher-order functions, which
+    Spark evaluates interpreted and without common-subexpression
+    elimination — inlining a full rule expression there multiplies its cost
+    ~6x per fold (measured 20x wall-clock on the groupBy path)."""
+
+    udfs: dict[str, Column] = field(default_factory=dict)
+    exprs: dict[str, str] = field(default_factory=dict)
+
+    def udf(self, col: Column) -> str:
+        name = f"__adtl_udf_{len(self.udfs)}__"
+        self.udfs[name] = col
+        return S.ident(name)
+
+    def expr(self, sql: str) -> str:
+        name = f"__adtl_stage_{len(self.exprs)}__"
+        self.exprs[name] = sql
+        return S.ident(name)
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        """``df`` widened with the staged columns."""
+        if self.udfs:
+            df = df.select(F.col("*"), *[c.alias(n) for n, c in self.udfs.items()])
+        if self.exprs:
+            df = df.selectExpr("*", *[S.alias(e, n) for n, e in self.exprs.items()])
+        return df
+
+
+def truthy(x: str, hint: str = "dynamic") -> str:
     """Python truthiness of a rendered value, provenance-aware.
 
     The falsy-string set depends on where the render came from (the
@@ -105,7 +148,11 @@ def truthy(col: Column, hint: str = "dynamic") -> Column:
         falsy = ("0", "0.0", "-0.0", "", "False")
     else:  # float / num / dynamic
         falsy = ("0", "0.0", "-0.0", "")
-    return col.isNotNull() & ~col.isin(*falsy)
+    return S.and_(S.is_not_null(x), S.not_(S.isin(x, falsy)))
+
+
+def _non_empty(x: str) -> str:
+    return S.and_(S.is_not_null(x), f"({x} != '')")
 
 
 def _parses_numeric(rendered: str | None) -> bool:
@@ -144,7 +191,7 @@ def _unify_literal_types(values: list[Any]) -> str:
 
 class RuleCompiler:
     """Compiles rules/predicates of one spec against one source DataFrame's
-    column set."""
+    column set, to SQL expression text."""
 
     def __init__(
         self,
@@ -158,8 +205,9 @@ class RuleCompiler:
         self.custom_transforms = custom_transforms or {}
         self.dtypes = dtypes or {}
         self._namespace = spec.namespace_uuid()
-        self._stage: dict[str, Column] | None = None
-        self._sources: dict[str, Column] = {}
+        self._stage: Stage | None = None
+        self._stage_folds = False
+        self._sources: dict[str, str] = {}
 
     # ------------------------------------------------------------------ source
 
@@ -192,30 +240,28 @@ class RuleCompiler:
             return "dynamic"  # emptyFields rewriting happens on the string
         return self._DTYPE_HINTS.get(self.dtypes.get(field, "string"), "dynamic")
 
-    def source(self, field: str) -> Column:
+    def source(self, field: str) -> str:
         """Raw source cell: always a non-null string (CSV semantics — the
         reference's DictReader never yields None; Spark's CSV reader maps
-        empty cells to null, so re-normalize).  Built once per field: every
-        rule reading the field shares the one Column, which saves the py4j
-        calls of building it again."""
+        empty cells to null, so re-normalize).  Built once per field."""
         if field not in self._sources:
             self._sources[field] = self._source_column(field)
         return self._sources[field]
 
-    def _source_column(self, field: str) -> Column:
+    def _source_column(self, field: str) -> str:
         if field not in self.columns:
             raise SpecError(f"source column not found: {field!r}")
         if self.dtypes.get(field) == "boolean":
             # Spark renders booleans 'true'/'false'; the engine's canonical
             # form is Python's 'True'/'False'
-            col = R.render_bool(F.col(field))
+            x = R.render_bool(S.ident(field))
         else:
-            col = F.col(field).cast("string")
+            x = S.cast(S.ident(field), "STRING")
         if self.spec.empty_fields is not None:
             # header emptyFields token rewritten to "" on every cell (S2,
             # reference: parser.py:656-661)
-            col = F.when(col == F.lit(self.spec.empty_fields), F.lit("")).otherwise(col)
-        return F.coalesce(col, F.lit(""))
+            x = S.case([(f"({x} = {S.lit(self.spec.empty_fields)})", "''")], x)
+        return S.call("coalesce", x, "''")
 
     def _skip_rule(self, rule: StrDict) -> bool:
         """True when the rule's source column is absent and skippable
@@ -234,31 +280,36 @@ class RuleCompiler:
         rule: Any,
         attr: str | None = None,
         coerce_type: str | list[str] | None = None,
-        stage: dict[str, Column] | None = None,
+        stage: Stage | None = None,
     ) -> Value:
         """Compile any rule form to a Value (get_value,
         src/adtl/get_value.py:137-170).
 
-        When ``stage`` is given, combinedType sub-rule values are registered
-        there as named staging columns and the fold references them as
-        plain column refs.  Fold expressions reference their input many
-        times inside higher-order functions, which Spark evaluates
-        interpreted and without common-subexpression elimination — inlining
-        a full rule expression there multiplies its cost ~6x per fold
-        (measured 20x wall-clock on the groupBy path).  The table
-        materializers insert one extra projection for the staged columns.
+        When ``stage`` is given, combinedType sub-rule values and custom
+        transform UDFs are registered there as named staging columns and
+        the SQL references them by name; the table materializers compute
+        them with ``Stage.apply`` ahead of the rule projection.  Without a
+        stage, folds inline their sub-values and custom transforms are
+        rejected.
         """
-        self._stage = stage
+        self._stage, self._stage_folds = stage, stage is not None
+        try:
+            return self._value(rule, attr, coerce_type)
+        finally:
+            self._stage, self._stage_folds = None, False
+
+    def _value(
+        self, rule: Any, attr: str | None, coerce_type: str | list[str] | None = None
+    ) -> Value:
         value = self._compile_unhashed(rule, attr)
-        self._stage = None
 
         if isinstance(rule, dict) and rule.get("sensitive") and not value.is_array:
             # hash of str(value) before any numeric coercion (P10)
-            return Value(F.sha2(value.col, 256), type_hint="str")
+            return Value(S.call("sha2", value.sql, "256"), type_hint="str")
 
         if coerce_type is not None and not value.is_array:
             return Value(
-                self._schema_coerce(value.col, coerce_type),
+                self._schema_coerce(value.sql, coerce_type),
                 type_hint=self._coerce_hint(coerce_type),
                 combined_type=value.combined_type,
             )
@@ -266,10 +317,15 @@ class RuleCompiler:
         if value.is_array or value.type_hint not in ("dynamic", "dynbool"):
             return value
         return Value(
-            F.nullif(R.numeric_coerce(value.col), F.lit("")),
+            S.call("nullif", R.numeric_coerce(value.sql), "''"),
             type_hint=value.type_hint,
             combined_type=value.combined_type,
         )
+
+    def _stage_udf(self, col: Column) -> str:
+        if self._stage is None:
+            raise SpecError("custom transforms compile only inside a table projection")
+        return self._stage.udf(col)
 
     # ------------------------------------------------------- rule form dispatch
 
@@ -278,13 +334,13 @@ class RuleCompiler:
             if isinstance(rule, list):
                 rendered = [R.render_literal(v) for v in rule]
                 return Value(
-                    F.array(*[F.lit(v) for v in rendered]),
+                    S.call("array", *[S.lit(v) for v in rendered]),
                     is_array=True,
                     type_hint="str",
                 )
             # P1 constant rule
             return Value(
-                F.lit(R.render_literal(rule)),
+                S.lit(R.render_literal(rule)),
                 type_hint=_unify_literal_types([rule]),
             )
         if "field" in rule:
@@ -299,10 +355,10 @@ class RuleCompiler:
 
     def _compile_field_rule(self, rule: StrDict, attr: str | None) -> Value:
         if self._skip_rule(rule):
-            return Value(F.lit(None).cast("string"), type_hint="str")
+            return Value(NULL, type_hint="str")
 
         raw = self.source(rule["field"])
-        guard: Column | None = None
+        guard: str | None = None
         if "if" in rule:
             guard = self.compile_if(rule["if"])
 
@@ -318,7 +374,7 @@ class RuleCompiler:
             value, hint, is_array = self._compile_apply(rule, value)
 
         if not is_array:
-            value = F.nullif(value, F.lit(""))
+            value = S.call("nullif", value, "''")
 
         if "values" in rule and not is_array:
             if rule.get("type") == "enum_list":
@@ -337,56 +393,57 @@ class RuleCompiler:
                 hint = "str"
 
         if guard is not None:
-            value = F.when(guard, value)
+            value = S.when(guard, value)
         return Value(value, is_array=is_array, type_hint=hint)
 
-    def _compile_apply(self, rule: StrDict, value: Column) -> tuple[Column, str, bool]:
+    def _compile_apply(self, rule: StrDict, value: str) -> tuple[str, str, bool]:
         """P13 ``apply`` transform: named function with ``$field`` params
         (reference: get_value.py:61-107)."""
         spec_apply = rule["apply"]
         name = spec_apply["function"]
-        params: list[Any] = []
-        for p in spec_apply.get("params", []):
-            params.append(self._resolve_param(p))
-        fail_value = value if self.spec.return_unmatched else F.lit(None).cast("string")
+        params = [self._resolve_param(p) for p in spec_apply.get("params", [])]
+        fail_value = value if self.spec.return_unmatched else NULL
         return build_transform(
             name,
             value,
             params,
             fail_value=fail_value,
+            stage_udf=self._stage_udf,
             custom_transforms=self.custom_transforms,
             fail_is_passthrough=self.spec.return_unmatched,
         )
 
     def _resolve_param(self, p: Any) -> Any:
-        """``$field`` params become source Columns, lists resolve element-wise
+        """``$field`` params become source SQL, lists resolve element-wise
         (U3, reference: get_value.py:64-87)."""
         if isinstance(p, str) and p.startswith("$"):
-            return self.source(p[1:])
+            return S.Sql(self.source(p[1:]))
         if isinstance(p, list):
             return [self._resolve_param(x) for x in p]
         return p
 
     # -------------------------------------------------------------- values map
 
-    def _values_map(self, value: Column, rule: StrDict) -> tuple[Column, str]:
+    def _values_map(self, value: str, rule: StrDict) -> tuple[str, str]:
         """P3/P4/P5 value mapping (reference: convert_values,
         get_value.py:110-131)."""
         mapping: StrDict = rule["values"]
         lookup = value
         if rule.get("caseInsensitive"):
-            lookup = F.trim(F.lower(value))
+            lookup = S.call("trim", S.call("lower", value))
             mapping = {str(k).lower(): v for k, v in mapping.items()}
         passthrough = rule.get("ignoreMissingKey") or self.spec.return_unmatched
-        mapped = None
-        for k, v in mapping.items():
-            rendered = F.lit(R.render_literal(v))
-            cond = lookup == F.lit(str(k))
-            mapped = F.when(cond, rendered) if mapped is None else mapped.when(cond, rendered)
-        if mapped is None:
-            mapped = lookup if passthrough else F.lit(None).cast("string")
-        elif passthrough:
-            mapped = mapped.otherwise(lookup)
+        if passthrough:
+            unmapped = lookup
+        else:  # no ELSE: unmapped keys are null, as is every key of an empty map
+            unmapped = None if mapping else NULL
+        mapped = S.case(
+            [
+                (f"({lookup} = {S.lit(str(k))})", S.lit(R.render_literal(v)))
+                for k, v in mapping.items()
+            ],
+            unmapped,
+        )
         hint = _unify_literal_types(list(mapping.values()))
         has_bool = any(isinstance(v, bool) for v in mapping.values())
         if passthrough:
@@ -403,7 +460,7 @@ class RuleCompiler:
                 # closed map mixing bool with str/num literals: "False"
                 # renders are bool-provenance (falsy), everything else
                 # still needs the final numeric coercion
-                return F.nullif(mapped, F.lit("")), "dynbool"
+                return S.call("nullif", mapped, "''"), "dynbool"
             # closed output domain: when no rendered literal re-parses as a
             # number, the final int/float coercion is the identity — mark
             # the column str so the regex pass is skipped entirely
@@ -412,66 +469,52 @@ class RuleCompiler:
             ):
                 hint = "str"
         # post-map "" -> null (maps may deliberately send values to None)
-        return F.nullif(mapped, F.lit("")), hint
+        return S.call("nullif", mapped, "''"), hint
 
-    def _enum_list(self, value: Column, rule: StrDict) -> Column:
+    def _enum_list(self, value: str, rule: StrDict) -> str:
         """P6 enum_list: '[a, b]' -> per-element value mapping
         (reference: get_value.py:111-119)."""
-        elements = F.split(
-            F.regexp_replace(value, r"^\[+|\]+$", ""), ","
+        elements = S.call(
+            "split", S.call("regexp_replace", value, S.lit(r"^\[+|\]+$"), "''"), "','"
         )
         scalar_rule = {k: v for k, v in rule.items() if k != "type"}
-
-        def map_element(elem: Column) -> Column:
-            mapped, _ = self._values_map_on(F.trim(elem), scalar_rule)
-            return mapped
-
-        return F.when(
-            value.isNotNull(), F.transform(elements, map_element)
+        mapped, _ = self._values_map(S.call("trim", "__x"), scalar_rule)
+        return S.when(
+            S.is_not_null(value), S.call("transform", elements, f"__x -> {mapped}")
         )
-
-    def _values_map_on(self, lookup_value: Column, rule: StrDict) -> tuple[Column, str]:
-        return self._values_map(lookup_value, rule)
 
     # --------------------------------------------------------- unit conversion
 
-    def _unit_conversion(self, value: Column, rule: StrDict) -> Column:
+    def _unit_conversion(self, value: str, rule: StrDict) -> str:
         """P8: numeric value in source_unit converted to unit.  Conversion
         factors are derived at compile time (functions/units.py); the
         source_unit may itself be a rule yielding a per-row unit name
         (reference: get_value.py:200-218)."""
         target = rule["unit"]
         src = rule["source_unit"]
-        as_double = F.when(R.is_numeric_string(value), value.cast("double"))
-        parse_fail = value.isNotNull() & ~R.is_numeric_string(value)
-        fail_col = value if self.spec.return_unmatched else F.lit(None).cast("string")
+        numeric = R.is_numeric_string(value)
+        as_double = S.when(numeric, S.cast(value, "DOUBLE"))
+        parse_fail = S.and_(S.is_not_null(value), S.not_(numeric))
+        fail = value if self.spec.return_unmatched else NULL
 
-        def convert_with(unit_name: str) -> Column:
+        def convert_with(unit_name: str) -> str:
             scale, offset = U.conversion(unit_name, target)
-            return R.render_double(as_double * F.lit(scale) + F.lit(offset))
+            return R.render_double(f"(({as_double} * {S.lit(scale)}) + {S.lit(offset)})")
 
         if isinstance(src, str):
             converted = convert_with(src)
         else:
-            unit_col = self._compile_unhashed(src, None).col
-            candidate_units = self._possible_units(src)
-            converted = None
-            for u in candidate_units:
+            unit = self._compile_unhashed(src, None).sql
+            branches = []
+            for u in self._possible_units(src):
                 try:
-                    branch = convert_with(u)
+                    branches.append((f"({unit} = {S.lit(u)})", convert_with(u)))
                 except (U.UnknownUnitError, ValueError):
                     continue
-                cond = unit_col == F.lit(u)
-                converted = (
-                    F.when(cond, branch) if converted is None else converted.when(cond, branch)
-                )
             # non-string/unmapped source_unit: assume already in target unit
             # (reference logs and returns float(value), get_value.py:204-209)
-            fallback = R.render_double(as_double)
-            converted = fallback if converted is None else converted.otherwise(fallback)
-        return F.when(value.isNull(), F.lit(None).cast("string")).when(
-            parse_fail, fail_col
-        ).otherwise(converted)
+            converted = S.case(branches, R.render_double(as_double))
+        return S.case([(S.is_null(value), NULL), (parse_fail, fail)], converted)
 
     def _possible_units(self, unit_rule: StrDict) -> list[str]:
         """Candidate unit names a source_unit rule can produce: its values-map
@@ -482,7 +525,7 @@ class RuleCompiler:
 
     # ---------------------------------------------------------- date reformat
 
-    def _date_conversion(self, value: Column, rule: StrDict) -> Column:
+    def _date_conversion(self, value: str, rule: StrDict) -> str:
         """P9 date reformat, incl. implicit conversion for schema date fields
         using defaultDateFormat (reference: get_value.py:219-234)."""
         target_fmt = rule.get("date", "%Y-%m-%d")
@@ -493,12 +536,12 @@ class RuleCompiler:
             return value
         parse_pat = strftime_to_spark(source_fmt, for_parsing=True)
         fmt_pat = strftime_to_spark(target_fmt, for_parsing=False)
-        parsed = F.try_to_timestamp(value, F.lit(parse_pat))
-        reformatted = F.date_format(parsed, fmt_pat)
-        on_fail = value if self.spec.return_unmatched else F.lit(None).cast("string")
-        return F.when(value.isNull(), F.lit(None).cast("string")).when(
-            parsed.isNull(), on_fail
-        ).otherwise(reformatted)
+        parsed = S.call("try_to_timestamp", value, S.lit(parse_pat))
+        reformatted = S.call("date_format", parsed, S.lit(fmt_pat))
+        on_fail = value if self.spec.return_unmatched else NULL
+        return S.case(
+            [(S.is_null(value), NULL), (S.is_null(parsed), on_fail)], reformatted
+        )
 
     # ------------------------------------------------------------ combinedType
 
@@ -520,12 +563,10 @@ class RuleCompiler:
     def _stage_column(self, value: Value) -> Value:
         """Register a sub-value as a staging column and return a Value that
         references it by name (cheap to re-evaluate inside folds)."""
-        if self._stage is None:
+        if not self._stage_folds:
             return value
-        name = f"__adtl_stage_{len(self._stage)}__"
-        self._stage[name] = value.col
         return Value(
-            F.col(name),
+            self._stage.expr(value.sql),
             is_array=value.is_array,
             type_hint=value.type_hint,
             combined_type=value.combined_type,
@@ -536,43 +577,37 @@ class RuleCompiler:
         (reference: get_combined_type, get_value.py:315-385)."""
         ctype = rule["combinedType"]
         sub_rules = self._expand_field_patterns(rule["fields"])
-        stage, self._stage = self._stage, None  # sub-rules compile unstaged
-        sub_values = [self.compile_value(r, attr) for r in sub_rules]
-        self._stage = stage
+        # sub-rules inline their own folds; only this fold's inputs stage
+        folds, self._stage_folds = self._stage_folds, False
+        sub_values = [self._value(r, attr) for r in sub_rules]
+        self._stage_folds = folds
         sub_values = [self._stage_column(v) for v in sub_values]
 
         if ctype in ("all", "any", "min", "max"):
             # scalar sub-values, drop null and "".  Pure boolean/least/
             # greatest expressions — higher-order functions run interpreted
             # (~1us/row each) and are avoided in these hot folds.
-            cols = [v.col for v in sub_values]
-            valid = [c.isNotNull() & (c != "") for c in cols]
-            any_valid = reduce(lambda a, b: a | b, valid)
+            cols = [v.sql for v in sub_values]
+            valid = [_non_empty(c) for c in cols]
+            any_valid = S.or_(*valid)
             if ctype == "any":
-                hit = reduce(
-                    lambda a, b: a | b,
-                    [
-                        v & truthy(s.col, s.type_hint)
-                        for v, s in zip(valid, sub_values)
-                    ],
+                hit = S.or_(
+                    *[S.and_(v, truthy(s.sql, s.type_hint)) for v, s in zip(valid, sub_values)]
                 )
                 result = R.render_bool(hit)
                 result_hint = "bool"
             elif ctype == "all":
-                hit = reduce(
-                    lambda a, b: a & b,
-                    [
-                        ~v | truthy(s.col, s.type_hint)
+                hit = S.and_(
+                    *[
+                        S.or_(S.not_(v), truthy(s.sql, s.type_hint))
                         for v, s in zip(valid, sub_values)
-                    ],
+                    ]
                 )
                 result = R.render_bool(hit)
                 result_hint = "bool"
             else:
                 hints = {v.type_hint for v in sub_values}
-                result = self._min_max_scalars(
-                    cols, valid, ctype, hints=hints
-                )
+                result = self._min_max_scalars(cols, valid, ctype, hints=hints)
                 if hints == {"int"}:
                     result_hint = "int"
                 elif hints == {"float"}:
@@ -584,7 +619,7 @@ class RuleCompiler:
                 else:
                     result_hint = "dynamic"
             return Value(
-                F.when(any_valid, result),
+                S.when(any_valid, result),
                 type_hint=result_hint,
                 combined_type=ctype,
             )
@@ -592,9 +627,9 @@ class RuleCompiler:
         if ctype == "firstNonNull" and not any(v.is_array for v in sub_values):
             # scalar-only: exactly a coalesce (first non-null in rule order)
             return Value(
-                F.coalesce(*[v.col for v in sub_values])
+                S.call("coalesce", *[v.sql for v in sub_values])
                 if len(sub_values) > 1
-                else sub_values[0].col,
+                else sub_values[0].sql,
                 type_hint="dynamic",
                 combined_type=ctype,
             )
@@ -605,82 +640,67 @@ class RuleCompiler:
                 "excludeWhen rule should be 'none', 'false-like', or a list"
             )
 
+        def flatten(parts: list[str]) -> str:
+            flat = S.call("concat", *parts) if len(parts) > 1 else parts[0]
+            return S.call("array_distinct", flat) if ctype == "set" else flat
+
         all_scalar = not any(v.is_array for v in sub_values)
         if ctype in ("list", "set") and all_scalar:
             # scalar-only fold without higher-order functions: HOFs have no
             # codegen, and ONE of them in a Project forces the whole stage
             # interpreted — conditional single-element arrays + concat keep
             # the plan inside whole-stage codegen
-            empty = F.array().cast("array<string>")
+            empty = "CAST(array() AS ARRAY<STRING>)"
             parts = []
             for v in sub_values:
-                keep = self._exclude_keep(v.col, exclude, v.type_hint)
-                parts.append(
-                    F.when(keep, F.array(v.col)).otherwise(empty)
-                    if keep is not None
-                    else F.array(v.col)
-                )
-            flat = F.concat(*parts) if len(parts) > 1 else parts[0]
-            if ctype == "set":
-                flat = F.array_distinct(flat)
-            return Value(flat, is_array=True, type_hint="str", combined_type=ctype)
+                keep = self._exclude_keep(v.sql, exclude, v.type_hint)
+                one = S.call("array", v.sql)
+                parts.append(one if keep is None else S.case([(keep, one)], empty))
+            return Value(flatten(parts), is_array=True, type_hint="str", combined_type=ctype)
 
         # list-producing folds flatten arrays and scalars together
-        parts = [
-            v.col if v.is_array else F.array(v.col) for v in sub_values
-        ]
+        parts = [v.sql if v.is_array else S.call("array", v.sql) for v in sub_values]
 
         if ctype == "firstNonNull":
-            flat = F.concat(*parts) if len(parts) > 1 else parts[0]
-            non_null = F.filter(flat, lambda x: x.isNotNull())
+            flat = S.call("concat", *parts) if len(parts) > 1 else parts[0]
+            non_null = S.call("filter", flat, "__x -> (__x IS NOT NULL)")
             return Value(
-                F.element_at(non_null, 1), type_hint="dynamic", combined_type=ctype
+                S.call("element_at", non_null, "1"),
+                type_hint="dynamic",
+                combined_type=ctype,
             )
         if ctype in ("list", "set"):
             # excludeWhen filters per PART (not on the concatenated array) so
             # false-like truthiness sees each sub-value's own type hint —
             # elementwise predicates commute with concat, so semantics match
-            if exclude == "none":
-                parts = [F.filter(p, lambda x: x.isNotNull()) for p in parts]
-            elif exclude == "false-like":
+            if exclude is not None:
                 parts = [
-                    F.filter(p, lambda x, h=v.type_hint: truthy(x, h))
+                    S.call("filter", p, f"__x -> {self._exclude_keep('__x', exclude, v.type_hint)}")
                     for p, v in zip(parts, sub_values)
                 ]
-            elif isinstance(exclude, list):
-                rendered = [R.render_literal(v) for v in exclude]
-                parts = [
-                    F.filter(p, lambda x: x.isNull() | ~x.isin(*rendered))
-                    for p in parts
-                ]
-            flat = F.concat(*parts) if len(parts) > 1 else parts[0]
-            if ctype == "set":
-                flat = F.array_distinct(flat)
-            return Value(flat, is_array=True, type_hint="str", combined_type=ctype)
+            return Value(flatten(parts), is_array=True, type_hint="str", combined_type=ctype)
         raise SpecError(f"unknown combinedType: {ctype!r}")
 
     @staticmethod
-    def _exclude_keep(
-        col: Column, exclude: Any, hint: str = "dynamic"
-    ) -> Column | None:
+    def _exclude_keep(x: str, exclude: Any, hint: str = "dynamic") -> str | None:
         """Element-keep predicate for excludeWhen on a scalar sub-value;
         None means keep unconditionally."""
         if exclude == "none":
-            return col.isNotNull()
+            return S.is_not_null(x)
         if exclude == "false-like":
-            return truthy(col, hint)
+            return truthy(x, hint)
         if isinstance(exclude, list):
             rendered = [R.render_literal(v) for v in exclude]
-            return col.isNull() | ~col.isin(*rendered)
+            return S.or_(S.is_null(x), S.not_(S.isin(x, rendered)))
         return None
 
     @staticmethod
     def _min_max_scalars(
-        cols: list[Column],
-        valid: list[Column],
+        cols: list[str],
+        valid: list[str],
         ctype: str,
         hints: set[str] | None = None,
-    ) -> Column:
+    ) -> str:
         """Python min/max over the valid dynamic values: numeric when every
         valid value parses as a number, else lexicographic — expressed with
         least/greatest (null-skipping) and plain boolean folds so the whole
@@ -694,53 +714,42 @@ class RuleCompiler:
         ``"7.0"``); the rule-position tiebreak reproduces Python's
         keep-first-of-equals for ``min(7, 7.0)``-style ties.  All-int folds
         compare as long — doubles lose ordering above 2**53."""
-        pick = F.least if ctype == "min" else F.greatest
+        pick = "least" if ctype == "min" else "greatest"
         idx_sign = 1 if ctype == "min" else -1
 
-        def fold(cast_to: str | None) -> Column:
-            branch = [
-                F.when(v, c.cast(cast_to) if cast_to else c)
-                for v, c in zip(valid, cols)
-            ]
-            if len(branch) == 1:
-                return branch[0]
-            return pick(*branch)
+        def pick_of(branch: list[str]) -> str:
+            return branch[0] if len(branch) == 1 else S.call(pick, *branch)
 
-        def fold_numeric() -> Column:
+        def fold(cast_to: str | None) -> str:
+            return pick_of(
+                [S.when(v, S.cast(c, cast_to) if cast_to else c) for v, c in zip(valid, cols)]
+            )
+
+        def fold_numeric() -> str:
             branch = [
-                F.when(
+                S.when(
                     v,
-                    F.struct(
-                        c.cast("double").alias("k"),
-                        F.lit(i * idx_sign).alias("i"),
-                        c.alias("o"),
+                    S.named_struct(
+                        [("k", S.cast(c, "DOUBLE")), ("i", S.lit(i * idx_sign)), ("o", c)]
                     ),
                 )
                 for i, (v, c) in enumerate(zip(valid, cols))
             ]
-            picked = branch[0] if len(branch) == 1 else pick(*branch)
-            return picked["o"]
+            return S.field(pick_of(branch), "o")
 
+        as_long = S.cast(fold("BIGINT"), "STRING")
         if hints is not None:
             if hints == {"int"}:
-                return fold("long").cast("string")
+                return as_long
             if hints <= {"int", "float"}:
                 return fold_numeric()
             if hints <= {"str", "bool"}:
                 return fold(None)
-        all_int = reduce(
-            lambda a, b: a & b,
-            [~v | R.is_int_string(c) for v, c in zip(valid, cols)],
+        all_int = S.and_(*[S.or_(S.not_(v), R.is_int_string(c)) for v, c in zip(valid, cols)])
+        all_num = S.and_(
+            *[S.or_(S.not_(v), R.is_numeric_string(c)) for v, c in zip(valid, cols)]
         )
-        all_num = reduce(
-            lambda a, b: a & b,
-            [~v | R.is_numeric_string(c) for v, c in zip(valid, cols)],
-        )
-        return (
-            F.when(all_int, fold("long").cast("string"))
-            .when(all_num, fold_numeric())
-            .otherwise(fold(None))
-        )
+        return S.case([(all_int, as_long), (all_num, fold_numeric())], fold(None))
 
     # ---------------------------------------------------------------- generate
 
@@ -751,25 +760,28 @@ class RuleCompiler:
         method = gen["type"]
         if method == "datetime":
             return Value(
-                F.date_format(
-                    F.current_timestamp(), "yyyy-MM-dd'T'HH:mm:ssxxx"
+                S.call(
+                    "date_format",
+                    "current_timestamp()",
+                    S.lit("yyyy-MM-dd'T'HH:mm:ssxxx"),
                 ),
                 type_hint="str",
             )
         if method == "uuid5":
             parts = [
-                F.lower(
-                    F.coalesce(F.nullif(self.source(f), F.lit("")), F.lit("None"))
+                S.call(
+                    "lower",
+                    S.call("coalesce", S.call("nullif", self.source(f), "''"), "'None'"),
                 )
                 for f in gen["values"]
             ]
-            seed = F.concat_ws("|", *parts)
-            return Value(uuid5_column(self._namespace, seed), type_hint="str")
+            seed = S.call("concat_ws", "'|'", *parts)
+            return Value(uuid5_sql(self._namespace, seed), type_hint="str")
         raise SpecError(f"unknown generation method: {method!r}")
 
     # -------------------------------------------------------------- predicates
 
-    def compile_if(self, rule: StrDict, can_skip: bool = False) -> Column:
+    def compile_if(self, rule: StrDict, can_skip: bool = False) -> str:
         """F1-F8 predicate compiler (reference: parse_if,
         get_value.py:244-312)."""
         keys = [k for k in rule if k not in _IF_FLAGS]
@@ -780,26 +792,20 @@ class RuleCompiler:
         key = keys[0]
 
         if key == "not" and isinstance(rule[key], dict):
-            return ~self.compile_if(rule[key], can_skip)
+            return S.not_(self.compile_if(rule[key], can_skip))
         if key == "any" and isinstance(rule[key], list):
-            return reduce(
-                lambda a, b: a | b,
-                [self.compile_if(r, can_skip) for r in rule[key]],
-            )
+            return S.or_(*[self.compile_if(r, can_skip) for r in rule[key]])
         if key == "all" and isinstance(rule[key], list):
-            return reduce(
-                lambda a, b: a & b,
-                [self.compile_if(r, can_skip) for r in rule[key]],
-            )
+            return S.and_(*[self.compile_if(r, can_skip) for r in rule[key]])
 
         if key not in self.columns:
             if can_skip or self.spec.field_can_skip(key):
-                return F.lit(False)
+                return "false"
             raise SpecError(f"if-rule column not found: {key!r}")
 
         attr = self.source(key)
         if "caseInsensitive" in rule:
-            attr = F.lower(attr)
+            attr = S.call("lower", attr)
 
         condition = rule[key]
         if isinstance(condition, dict):
@@ -810,46 +816,33 @@ class RuleCompiler:
         return self._compare(attr, "==", condition)
 
     @staticmethod
-    def _compare(attr: Column, op: str, literal: Any) -> Column:
+    def _compare(attr: str, op: str, literal: Any) -> str:
         """Cast-to-literal-type comparison: the row value is cast to the
         *literal's* Python type; a failed cast yields False
         (reference: get_value.py:271-312)."""
         if op == "=~":
             # re.match: case-insensitive, anchored at start only
-            return attr.rlike("(?i)^(?:" + str(literal) + ")")
+            return S.rlike(attr, "(?i)^(?:" + str(literal) + ")")
 
         if isinstance(literal, bool):
-            lhs: Column = attr != ""  # bool(str) truthiness
-            rhs = F.lit(literal)
-            castable = F.lit(True)
+            lhs = f"({attr} != '')"  # bool(str) truthiness
+            rhs = S.lit(literal)
+            castable = "true"
         elif isinstance(literal, int):
-            lhs = attr.cast("long")
-            rhs = F.lit(literal)
+            lhs = S.cast(attr, "BIGINT")
+            rhs = S.lit(literal)
             castable = R.is_int_string(attr)
         elif isinstance(literal, float):
-            lhs = attr.cast("double")
-            rhs = F.lit(literal)
+            lhs = S.cast(attr, "DOUBLE")
+            rhs = S.lit(literal)
             castable = R.is_float_string(attr)
         else:
             lhs = attr
-            rhs = F.lit(str(literal))
-            castable = F.lit(True)
-
-        if op == ">":
-            cmp = lhs > rhs
-        elif op == ">=":
-            cmp = lhs >= rhs
-        elif op == "<":
-            cmp = lhs < rhs
-        elif op == "<=":
-            cmp = lhs <= rhs
-        elif op == "!=":
-            cmp = lhs != rhs
-        elif op in ("=", "=="):
-            cmp = lhs == rhs
-        else:  # pragma: no cover
+            rhs = S.lit(str(literal))
+            castable = "true"
+        if op not in (">", ">=", "<", "<=", "!=", "=", "=="):  # pragma: no cover
             raise SpecError(f"unrecognized operand: {op!r}")
-        return castable & cmp
+        return S.and_(castable, f"({lhs} {'=' if op == '==' else op} {rhs})")
 
     # ------------------------------------------------------------ schema casts
 
@@ -861,7 +854,7 @@ class RuleCompiler:
         return {"integer": "int", "number": "float", "string": "str"}.get(first, "dynamic")
 
     @staticmethod
-    def _schema_coerce(col: Column, coerce_type: str | list[str]) -> Column:
+    def _schema_coerce(x: str, coerce_type: str | list[str]) -> str:
         """P11 schema-directed cast; failure keeps the value unchanged
         (reference: util.py:12-40).  integer falls back to round-half-even of
         the float parse, matching Python's ``int(round(float(v)))``."""
@@ -869,15 +862,11 @@ class RuleCompiler:
         target = next((t for t in types if t in ("string", "integer", "number")), None)
         if target is None or target == "string":
             # str() of the canonical value is the value itself
-            return col
+            return x
         if target == "integer":
-            return (
-                F.when(R.is_int_string(col), R.render_long(col))
-                .when(
-                    R.is_float_string(col),
-                    F.bround(col.cast("double")).cast("long").cast("string"),
-                )
-                .otherwise(col)
+            rounded = S.cast(S.cast(S.call("bround", S.cast(x, "DOUBLE")), "BIGINT"), "STRING")
+            return S.case(
+                [(R.is_int_string(x), R.render_long(x)), (R.is_float_string(x), rounded)], x
             )
         # number
-        return F.when(R.is_float_string(col), R.render_double(col)).otherwise(col)
+        return S.case([(R.is_float_string(x), R.render_double(x))], x)

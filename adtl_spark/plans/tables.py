@@ -36,13 +36,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adtl_spark.functions import render as R
-from adtl_spark.plans.compiler import RuleCompiler, Value, truthy
+from adtl_spark.functions import sql as S
+from adtl_spark.plans.compiler import RuleCompiler, Stage, Value, truthy
 from adtl_spark.session import scan_parallel
 from adtl_spark.spec import CompiledSpec
 
 ROW_ID = "__adtl_row_id__"
 ROW_POS = "__adtl_row_pos__"  # oneToMany: the block's position within its row
 ORDER_KEYS = (ROW_ID, ROW_POS)
+_ROW_ID = S.ident(ROW_ID)
 
 
 _CTR_MASK = (1 << 33) - 1  # monotonic id: partition index << 33 | counter
@@ -204,55 +206,40 @@ def _schema_type(spec: CompiledSpec, table: str, attr: str) -> Any:
 
 
 def _constant_table(spec: CompiledSpec, table: str, spark: SparkSession) -> DataFrame:
-    """Literal columns over a one-row range: one partition, one task, and
-    no local rows for Python workers to unpickle.  Columns are ``string``,
-    or ``array<string>`` for list values."""
-    row = {
-        k: R.render_literal(v) if not isinstance(v, list) else [R.render_literal(x) for x in v]
-        for k, v in spec.table_specs[table].items()
-    }
+    """Literal ``string`` columns over a one-row range: one partition, one
+    task, and no local rows for Python workers to unpickle.  The spec model
+    admits only scalar constants."""
+    row = {k: R.render_literal(v) for k, v in spec.table_specs[table].items()}
     # CASE WHEN over the range's id keeps the columns nullable, like every
     # other table's; a bare literal would be planned (and written) NOT NULL
-    first_row = F.col("id") == 0
-    cols = []
-    for f in spec.fieldnames[table]:
-        v = row.get(f)
-        if isinstance(v, list):
-            value = F.array(*[F.lit(x) for x in v]).cast("array<string>")
-        else:
-            value = F.lit(v).cast("string")
-        cols.append(F.when(first_row, value).alias(f))
-    return spark.range(1, numPartitions=1).select(*cols)
+    return spark.range(1, numPartitions=1).selectExpr(
+        *[
+            S.alias(S.when("(`id` = 0)", S.cast(S.lit(row.get(f)), "STRING")), f)
+            for f in spec.fieldnames[table]
+        ]
+    )
 
 
-def _wide_cell(value: Value) -> Column:
+def _wide_cell(value: Value) -> str:
     """Wide-table cells drop empty lists (parser.py:547: ``value != []``)."""
     if value.is_array:
-        return F.when(F.size(value.col) > 0, value.col)
-    return value.col
-
-
-def _with_stage(df: DataFrame, stage: dict[str, Column]) -> DataFrame:
-    """Widen df with the compiler's staging columns (combinedType sub-values
-    materialized once so fold expressions reference cheap column refs)."""
-    if not stage:
-        return df
-    return df.select(F.col("*"), *[c.alias(n) for n, c in stage.items()])
+        return S.when(f"({S.call('size', value.sql)} > 0)", value.sql)
+    return value.sql
 
 
 def _one_to_one_table(
     spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
 ) -> DataFrame:
-    stage: dict[str, Column] = {}
+    stage = Stage()
     cols = []
     for attr in spec.fieldnames[table]:
         rule = spec.table_specs[table][attr]
         value = compiler.compile_value(
             rule, attr, _schema_type(spec, table, attr), stage=stage
         )
-        cols.append(_wide_cell(value).alias(attr))
-    keys = [ROW_ID] if ROW_ID in df.columns else []  # streaming: no row id
-    return _with_stage(df, stage).select(*keys, *cols)
+        cols.append(S.alias(_wide_cell(value), attr))
+    keys = [_ROW_ID] if ROW_ID in df.columns else []  # streaming: no row id
+    return stage.apply(df).selectExpr(*keys, *cols)
 
 
 # ---------------------------------------------------------------- groupBy kind
@@ -266,18 +253,18 @@ def _group_by_table(
     aggregation = meta.get("aggregation")
     table_spec = spec.table_specs[table]
 
-    stage: dict[str, Column] = {}
+    stage = Stage()
     values: dict[str, Value] = {}
-    row_cols: list[Column] = [F.col(ROW_ID)]
+    row_cols = [_ROW_ID]
     for attr, rule in table_spec.items():
         v = compiler.compile_value(
             rule, attr, _schema_type(spec, table, attr), stage=stage
         )
         values[attr] = v
-        row_cols.append(_wide_cell(v).alias(attr))
-    projected = _with_stage(df, stage).select(*row_cols)
+        row_cols.append(S.alias(_wide_cell(v), attr))
+    projected = stage.apply(df).selectExpr(*row_cols)
 
-    aggs: list[Column] = [F.min(F.col(ROW_ID)).alias(ROW_ID)]
+    aggs = [F.expr(S.alias(S.call("min", _ROW_ID), ROW_ID))]
     for attr, v in values.items():
         if attr == group_field:
             continue
@@ -287,46 +274,48 @@ def _group_by_table(
             if isinstance(rule, dict) and aggregation == "applyCombinedType"
             else None
         )
-        aggs.append(_aggregate_attr(attr, v, combined).alias(attr))
+        aggs.append(F.expr(S.alias(_aggregate_attr(attr, v, combined), attr)))
 
     # a group's first row id orders groups by first encounter (file order)
     # — the reference's insertion-ordered dict yields exactly this
     # (parser.py:619-637)
-    grouped = projected.groupBy(F.col(group_field)).agg(*aggs)
-    return grouped.select(ROW_ID, group_field, *[a for a in values if a != group_field])
+    grouped = projected.groupBy(group_field).agg(*aggs)
+    others = [S.ident(a) for a in values if a != group_field]
+    return grouped.selectExpr(_ROW_ID, S.ident(group_field), *others)
 
 
-def _aggregate_attr(attr: str, value: Value, combined: str | None) -> Column:
+def _aggregate_attr(attr: str, value: Value, combined: str | None) -> str:
     """One aggregate expression reproducing group_attrs semantics
     (parser.py:559-617) for a single attribute."""
-    col = F.col(attr)
-    valid = (
-        (col.isNotNull() & (F.size(col) > 0))
-        if value.is_array
-        else (col.isNotNull() & (col != ""))
-    )
-    cell = F.when(valid, col)  # nulls are ignored by all aggregates below
-    rid = F.when(valid, F.col(ROW_ID))
+    col = S.ident(attr)
+    if value.is_array:
+        valid = S.and_(S.is_not_null(col), f"({S.call('size', col)} > 0)")
+    else:
+        valid = S.and_(S.is_not_null(col), f"({col} != '')")
+    cell = S.when(valid, col)  # nulls are ignored by all aggregates below
+    rid = S.when(valid, _ROW_ID)
 
     if combined in ("all", "any"):
         # truthiness only over valid cells — null must stay null so the
         # bool_and/bool_or aggregate ignores it instead of folding False
-        flag = F.when(cell.isNotNull(), truthy(cell, value.type_hint))
-        fold = F.bool_and(flag) if combined == "all" else F.bool_or(flag)
-        return R.render_bool(fold)
+        flag = S.when(S.is_not_null(cell), truthy(cell, value.type_hint))
+        return R.render_bool(S.call("bool_and" if combined == "all" else "bool_or", flag))
     if combined in ("min", "max"):
         return _dynamic_min_max(cell, value, combined, rid)
+    has_valid = f"({S.call('count', cell)} > 0)"
     if combined == "set":
-        flat = F.flatten(F.collect_list(cell))
-        return F.when(F.count(cell) > 0, F.array_sort(F.array_distinct(flat)))
+        flat = S.call("flatten", S.call("collect_list", cell))
+        return S.when(has_valid, S.call("array_sort", S.call("array_distinct", flat)))
     if combined == "list":
-        ordered = F.array_sort(F.collect_list(F.when(valid, F.struct(F.col(ROW_ID).alias("rid"), col.alias("v")))))
-        return F.when(F.count(cell) > 0, F.flatten(F.transform(ordered, lambda s: s["v"])))
+        keyed = S.when(valid, S.named_struct([("rid", _ROW_ID), ("v", col)]))
+        ordered = S.call("array_sort", S.call("collect_list", keyed))
+        values = S.call("transform", ordered, f"__s -> {S.field('__s', 'v')}")
+        return S.when(has_valid, S.call("flatten", values))
     if combined == "firstNonNull":
-        return F.min_by(col, rid)
+        return S.call("min_by", col, rid)
     # default: lastNotNull — keep the last valid value in file order
     # (A2; reference warns on conflicting overwrites, parser.py:603-614)
-    return F.max_by(col, rid)
+    return S.call("max_by", col, rid)
 
 
 def group_conflicts(
@@ -340,21 +329,19 @@ def group_conflicts(
     meta = spec.tables[table]
     group_field = meta["groupBy"]
     table_spec = spec.table_specs[table]
-    stage: dict[str, Column] = {}
+    stage = Stage()
     cols = []
     plain_attrs = []
     for attr, rule in table_spec.items():
         if attr == group_field:
-            cols.append(
-                compiler.compile_value(rule, attr, stage=stage).col.alias(attr)
-            )
+            cols.append(S.alias(compiler.compile_value(rule, attr, stage=stage).sql, attr))
             continue
         if isinstance(rule, dict) and "combinedType" in rule:
             continue  # folds aggregate by design; only plain attrs can clash
         v = compiler.compile_value(rule, attr, stage=stage)
         plain_attrs.append(attr)
-        cols.append(_wide_cell(v).alias(attr))
-    projected = _with_stage(df, stage).select(*cols)
+        cols.append(S.alias(_wide_cell(v), attr))
+    projected = stage.apply(df).selectExpr(*cols)
     per_group = projected.groupBy(group_field).agg(
         *[
             F.count_distinct(F.when(F.col(a) != "", F.col(a))).alias(a)
@@ -375,9 +362,7 @@ def group_conflicts(
     return df.sparkSession.createDataFrame(rows, schema)
 
 
-def _dynamic_min_max(
-    cell: Column, value: Value, combined: str, rid: Column
-) -> Column:
+def _dynamic_min_max(cell: str, value: Value, combined: str, rid: str) -> str:
     """Python min()/max() over a group's dynamic values: numeric when every
     value parses as a number, lexicographic otherwise (ISO dates compare
     correctly either way).
@@ -385,35 +370,27 @@ def _dynamic_min_max(
     Numeric aggregation keeps the WINNING CELL's own canonical render
     (``str(min(7, 9.5))`` is ``"7"``) and breaks double-ties on the
     earliest row in file order — Python's keep-first-of-equals."""
-    lo = combined == "min"
+    pick = "min" if combined == "min" else "max"
 
-    def numeric_keep_render() -> Column:
-        tie = rid if lo else -rid
-        keyed = F.when(
-            cell.isNotNull(),
-            F.struct(
-                cell.cast("double").alias("k"),
-                tie.alias("t"),
-                cell.alias("o"),
-            ),
+    def numeric_keep_render() -> str:
+        tie = rid if pick == "min" else f"(- {rid})"
+        keyed = S.when(
+            S.is_not_null(cell),
+            S.named_struct([("k", S.cast(cell, "DOUBLE")), ("t", tie), ("o", cell)]),
         )
-        return (F.min(keyed) if lo else F.max(keyed))["o"]
+        return S.field(S.call(pick, keyed), "o")
 
+    as_long = S.cast(S.call(pick, S.cast(cell, "BIGINT")), "STRING")
     if value.type_hint == "int":
-        agg = F.min(cell.cast("long")) if lo else F.max(cell.cast("long"))
-        return agg.cast("string")
+        return as_long
     if value.type_hint in ("float", "num"):
         return numeric_keep_render()
     if value.type_hint in ("str", "bool"):
-        return F.min(cell) if lo else F.max(cell)
-    all_int = F.bool_and(R.is_int_string(cell))
-    all_num = F.bool_and(R.is_numeric_string(cell))
-    as_str = F.min(cell) if lo else F.max(cell)
-    as_long = F.min(cell.cast("long")) if lo else F.max(cell.cast("long"))
-    return (
-        F.when(all_int, as_long.cast("string"))
-        .when(all_num, numeric_keep_render())
-        .otherwise(as_str)
+        return S.call(pick, cell)
+    all_int = S.call("bool_and", R.is_int_string(cell))
+    all_num = S.call("bool_and", R.is_numeric_string(cell))
+    return S.case(
+        [(all_int, as_long), (all_num, numeric_keep_render())], S.call(pick, cell)
     )
 
 
@@ -431,11 +408,11 @@ def _one_to_many_table(
                 fieldnames.append(attr)
 
     # decide one static type per attr across all blocks
-    compiled_blocks: list[tuple[Column, dict[str, Value]]] = []
+    compiled_blocks: list[tuple[str, dict[str, Value]]] = []
     attr_is_array: dict[str, bool] = {f: False for f in fieldnames}
     attr_mixed: dict[str, bool] = {f: False for f in fieldnames}
     seen_attr: dict[str, bool] = {f: False for f in fieldnames}
-    stage: dict[str, Column] = {}
+    stage = Stage()
     for block in blocks:
         pred = compiler.compile_if(block["if"])
         vals: dict[str, Value] = {}
@@ -452,31 +429,28 @@ def _one_to_many_table(
             seen_attr[attr] = True
         compiled_blocks.append((pred, vals))
 
-    def cell(vals: dict[str, Value], attr: str) -> Column:
+    def cell(vals: dict[str, Value], attr: str) -> str:
         v = vals.get(attr)
         want_array = attr_is_array[attr] and not attr_mixed[attr]
         if v is None:
-            t = "array<string>" if want_array else "string"
-            return F.lit(None).cast(t)
+            return "CAST(NULL AS ARRAY<STRING>)" if want_array else S.NULL_STRING
         if attr_mixed[attr] and v.is_array:
-            return R.render_array_python(v.col)  # mixed scalar/list attr
-        return v.col
+            return R.render_array_python(v.sql)  # mixed scalar/list attr
+        return v.sql
 
     structs = [
-        F.when(pred, F.struct(*[cell(vals, a).alias(a) for a in fieldnames]))
+        S.when(pred, S.named_struct([(a, cell(vals, a)) for a in fieldnames]))
         for pred, vals in compiled_blocks
     ]
-    blocks_arr = F.filter(F.array(*structs), lambda s: s.isNotNull())
+    blocks_arr = S.call("filter", S.call("array", *structs), "__b -> (__b IS NOT NULL)")
+    fields = [S.alias(S.field("`__row__`", a), a) for a in fieldnames]
     if ROW_ID not in df.columns:  # streaming source: no row id, no ordering
-        exploded = _with_stage(df, stage).select(
-            F.explode(blocks_arr).alias("__row__")
-        )
-        return exploded.select(*[F.col(f"__row__.`{a}`").alias(a) for a in fieldnames])
+        exploded = stage.apply(df).selectExpr(S.alias(S.call("explode", blocks_arr), "__row__"))
+        return exploded.selectExpr(*fields)
     # posexplode keeps the block position so (row, block) file order can be
     # restored after the parallelizing repartition
-    exploded = _with_stage(df, stage).select(
-        F.col(ROW_ID), F.posexplode(blocks_arr).alias(ROW_POS, "__row__")
+    exploded = stage.apply(df).selectExpr(
+        _ROW_ID,
+        f"{S.call('posexplode', blocks_arr)} AS ({S.ident(ROW_POS)}, `__row__`)",
     )
-    return exploded.select(
-        ROW_ID, ROW_POS, *[F.col(f"__row__.`{a}`").alias(a) for a in fieldnames]
-    )
+    return exploded.selectExpr(_ROW_ID, S.ident(ROW_POS), *fields)

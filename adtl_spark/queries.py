@@ -337,12 +337,12 @@ def p14_uuid5(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver records the rows-only check."""
     import uuid as uuid_mod
 
-    from adtl_spark.plans.compiler import uuid5_column
+    from adtl_spark.plans.compiler import uuid5_sql
 
     c = _t(spark, sf_dir, "customer")
     ns = uuid_mod.uuid5(uuid_mod.NAMESPACE_DNS, "adtl_spark.queries")
-    seed = F.concat_ws("|", F.lower("c_name"), F.lower("c_mktsegment"))
-    return c.select("c_custkey", uuid5_column(ns, seed).alias("row_uuid"))
+    seed = "concat_ws('|', lower(c_name), lower(c_mktsegment))"
+    return c.select("c_custkey", F.expr(uuid5_sql(ns, seed)).alias("row_uuid"))
 
 
 # ----------------------------------------------- spec engine on typed tables

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from adtl_spark.functions import render as R
+from adtl_spark.functions import sql as S
 from adtl_spark.spec import StrDict
 
 
@@ -109,14 +110,15 @@ def _csv_render(df: DataFrame) -> DataFrame:
     True/False for csv.DictWriter parity."""
     cols = []
     for field in df.schema.fields:
-        c = F.col(field.name)
+        c = S.ident(field.name)
         if field.dataType.typeName() == "array":
-            cols.append(R.render_array_python(c).alias(field.name))
+            c = R.render_array_python(c)
         elif field.dataType.typeName() == "boolean":
-            cols.append(R.render_bool(c).alias(field.name))
+            c = R.render_bool(c)
         else:
-            cols.append(c.cast("string").alias(field.name))
-    return df.select(*cols)
+            c = S.cast(c, "STRING")
+        cols.append(S.alias(c, field.name))
+    return df.selectExpr(*cols)
 
 
 def write_csv_single(df: DataFrame, output: str | None = None) -> str | None:

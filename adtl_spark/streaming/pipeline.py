@@ -4,7 +4,7 @@ The reference engine is batch-only (full materialization,
 src/adtl/parser.py:709-725).  Two streaming capabilities are added here:
 
 1. **Streaming spec execution** — an adtl spec's row-local phase (oneToOne
-   and oneToMany tables) is shuffle-free, so the same compiled Column plan
+   and oneToMany tables) is shuffle-free, so the same compiled plan
    runs unchanged on a streaming DataFrame: ``readStream`` -> the exact
    projection/explode the batch path builds -> ``writeStream``.  groupBy
    tables need stateful semantics (lastNotNull over unbounded keys) and are

@@ -6,8 +6,9 @@ The reference validates each output row with fastjsonschema and annotates
 a ``oneOf`` discriminator get per-discriminator validators
 (src/adtl/util.py:43-98).
 
-Here the supported keyword set compiles to boolean Columns evaluated in the
-same single pass as the projection: type / enum / const / required /
+Here the supported keyword set compiles to boolean Spark SQL expressions
+(``adtl_spark.functions.sql``) evaluated in the same single pass as the
+projection — one ``selectExpr`` per table: type / enum / const / required /
 pattern / format:date / min-max(+exclusive) / multipleOf / length bounds /
 item bounds / uniqueItems / items.enum, plus the draft-07 combinators
 ``anyOf`` / ``allOf`` / ``oneOf`` / ``not`` compiled RECURSIVELY — the
@@ -18,7 +19,8 @@ Properties using keywords outside that set fall back to an Arrow-batched
 ``jsonschema`` Draft-7 check per property (SURVEY §7.4.8): rendered cells
 are decoded to their dynamic-typed Python values (what the reference's row
 dicts hold at validation time, parser.py:736-757) and validated in
-pandas-UDF batches.  Without the ``jsonschema`` package the long tail
+pandas-UDF batches; each such check is a staged column a projection before
+the validator's computes.  Without the ``jsonschema`` package the long tail
 degrades to a WARNING naming the ignored keywords — never a silent skip.
 Error messages are this engine's own wording; parity is on validity and
 counts, not message text (the reference's messages come from
@@ -39,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from adtl_spark.functions import render as R
+from adtl_spark.functions import sql as S
+from adtl_spark.plans.tables import order_keys
 from adtl_spark.spec import CompiledSpec, StrDict
 
 # keywords the native compiler fully covers (closed under combinator
@@ -52,188 +56,159 @@ _NATIVE_KEYWORDS = {
     "description", "title", "default", "examples", "category", "PrimaryKey",
 }
 
-# keywords that compare the cell as a number
-_NUMERIC_KEYWORDS = {
-    "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum", "multipleOf",
-}
+# keywords that compare the cell as a number: (keyword, operator, message)
+_BOUNDS = (
+    ("minimum", "<", "must be bigger than or equal to"),
+    ("maximum", ">", "must be smaller than or equal to"),
+    ("exclusiveMinimum", "<=", "must be bigger than"),
+    ("exclusiveMaximum", ">=", "must be smaller than"),
+)
+_NUMERIC_KEYWORDS = {k for k, _, _ in _BOUNDS} | {"multipleOf"}
 
 
-def _type_check(col: Column, is_array_col: bool, expected: str | list[str]) -> Column:
+def _type_check(x: str, is_array_col: bool, expected: str | list[str]) -> str:
     types = [expected] if isinstance(expected, str) else list(expected)
     checks = []
     for t in types:
         if t == "null":
-            checks.append(col.isNull())
+            checks.append(S.is_null(x))
         elif t == "array":
-            checks.append(F.lit(is_array_col))
+            checks.append(S.lit(is_array_col))
         elif is_array_col:
-            checks.append(F.lit(False))
+            checks.append("false")
         elif t == "integer":
-            checks.append(R.is_int_string(col))
+            checks.append(R.is_int_string(x))
         elif t == "number":
-            checks.append(R.is_numeric_string(col))
+            checks.append(R.is_numeric_string(x))
         elif t == "boolean":
-            checks.append(col.isin("True", "False"))
+            checks.append(S.isin(x, ["True", "False"]))
         elif t == "string":
-            checks.append(~R.is_numeric_string(col) & ~col.isin("True", "False"))
+            checks.append(
+                S.and_(S.not_(R.is_numeric_string(x)), S.not_(S.isin(x, ["True", "False"])))
+            )
         else:
-            checks.append(F.lit(True))
-    out = checks[0]
-    for c in checks[1:]:
-        out = out | c
-    return out
+            checks.append("true")
+    return S.or_(*checks)
 
 
 def _keyword_checks(
-    col: Column, is_arr: bool, prop: StrDict, label: str
-) -> list[tuple[Column, str]]:
+    x: str, is_arr: bool, prop: StrDict, label: str
+) -> list[tuple[str, str]]:
     """Unguarded (violation, message) pairs for the flat native keywords —
     callers add the presence guard once at the top level."""
-    checks: list[tuple[Column, str]] = []
+    checks: list[tuple[str, str]] = []
 
     if "type" in prop:
-        ok = _type_check(col, is_arr, prop["type"])
-        checks.append((~ok, f"{label} must be {prop['type']}"))
+        ok = _type_check(x, is_arr, prop["type"])
+        checks.append((S.not_(ok), f"{label} must be {prop['type']}"))
     if "enum" in prop and not is_arr:
         rendered = [R.render_literal(v) for v in prop["enum"]]
-        checks.append(
-            (~col.isin(*rendered), f"{label} must be one of {prop['enum']}")
-        )
+        checks.append((S.not_(S.isin(x, rendered)), f"{label} must be one of {prop['enum']}"))
     if "const" in prop and not is_arr:
         checks.append(
             (
-                col != F.lit(R.render_literal(prop["const"])),
+                f"({x} != {S.lit(R.render_literal(prop['const']))})",
                 f"{label} must be same as const definition: {prop['const']}",
             )
         )
     if "pattern" in prop and not is_arr:
         checks.append(
-            (~col.rlike(prop["pattern"]), f"{label} must match pattern {prop['pattern']}")
+            (S.not_(S.rlike(x, prop["pattern"])), f"{label} must match pattern {prop['pattern']}")
         )
     if prop.get("format") == "date" and not is_arr:
-        parsed = F.try_to_timestamp(col, F.lit("yyyy-M-d"))
-        checks.append((parsed.isNull(), f"{label} must be date"))
+        parsed = S.call("try_to_timestamp", x, "'yyyy-M-d'")
+        checks.append((S.is_null(parsed), f"{label} must be date"))
 
     if not is_arr and not _NUMERIC_KEYWORDS.isdisjoint(prop):
-        num = F.when(R.is_numeric_string(col), col.cast("double"))
-    if "minimum" in prop and not is_arr:
-        checks.append(
-            (
-                num.isNotNull() & (num < float(prop["minimum"])),
-                f"{label} must be bigger than or equal to {prop['minimum']}",
+        num = S.when(R.is_numeric_string(x), S.cast(x, "DOUBLE"))
+        for keyword, op, text in _BOUNDS:
+            if keyword in prop:
+                bound = S.lit(float(prop[keyword]))
+                checks.append(
+                    (
+                        S.and_(S.is_not_null(num), f"({num} {op} {bound})"),
+                        f"{label} {text} {prop[keyword]}",
+                    )
+                )
+        if "multipleOf" in prop:
+            # draft-07: the quotient must be integral; compute in double like
+            # every validator does (exact for the int-valued cases that matter)
+            quotient = f"({num} / {S.lit(float(prop['multipleOf']))})"
+            integral = S.cast(S.call("floor", quotient), "DOUBLE")
+            checks.append(
+                (
+                    S.and_(S.is_not_null(num), f"({quotient} != {integral})"),
+                    f"{label} must be multiple of {prop['multipleOf']}",
+                )
             )
-        )
-    if "maximum" in prop and not is_arr:
-        checks.append(
-            (
-                num.isNotNull() & (num > float(prop["maximum"])),
-                f"{label} must be smaller than or equal to {prop['maximum']}",
-            )
-        )
-    if "exclusiveMinimum" in prop and not is_arr:
-        checks.append(
-            (
-                num.isNotNull() & (num <= float(prop["exclusiveMinimum"])),
-                f"{label} must be bigger than {prop['exclusiveMinimum']}",
-            )
-        )
-    if "exclusiveMaximum" in prop and not is_arr:
-        checks.append(
-            (
-                num.isNotNull() & (num >= float(prop["exclusiveMaximum"])),
-                f"{label} must be smaller than {prop['exclusiveMaximum']}",
-            )
-        )
-    if "multipleOf" in prop and not is_arr:
-        k = float(prop["multipleOf"])
-        # draft-07: the quotient must be integral; compute in double like
-        # every validator does (exact for the int-valued cases that matter)
-        quotient = num / F.lit(k)
-        checks.append(
-            (
-                num.isNotNull() & (quotient != F.floor(quotient).cast("double")),
-                f"{label} must be multiple of {prop['multipleOf']}",
-            )
-        )
     if "minLength" in prop and not is_arr:
         checks.append(
             (
-                F.length(col) < int(prop["minLength"]),
+                f"({S.call('length', x)} < {int(prop['minLength'])})",
                 f"{label} must be longer than or equal to {prop['minLength']} characters",
             )
         )
     if "maxLength" in prop and not is_arr:
         checks.append(
             (
-                F.length(col) > int(prop["maxLength"]),
+                f"({S.call('length', x)} > {int(prop['maxLength'])})",
                 f"{label} must be shorter than or equal to {prop['maxLength']} characters",
             )
         )
     if "minItems" in prop and is_arr:
         checks.append(
             (
-                F.size(col) < int(prop["minItems"]),
+                f"({S.call('size', x)} < {int(prop['minItems'])})",
                 f"{label} must contain at least {prop['minItems']} items",
             )
         )
     if "maxItems" in prop and is_arr:
         checks.append(
             (
-                F.size(col) > int(prop["maxItems"]),
+                f"({S.call('size', x)} > {int(prop['maxItems'])})",
                 f"{label} must contain at most {prop['maxItems']} items",
             )
         )
     if "items" in prop and is_arr and "enum" in prop.get("items", {}):
         rendered = [R.render_literal(v) for v in prop["items"]["enum"]]
-        bad = F.exists(col, lambda x: ~x.isin(*rendered))
+        bad = S.call("exists", x, f"__v -> {S.not_(S.isin('__v', rendered))}")
         checks.append((bad, f"{label}[] must be one of {prop['items']['enum']}"))
     if prop.get("uniqueItems") and is_arr:
-        dup = F.size(col) != F.size(F.array_distinct(col))
+        dup = f"({S.call('size', x)} != {S.call('size', S.call('array_distinct', x))})"
         checks.append((dup, f"{label} must contain unique items"))
     return checks
 
 
-def _satisfied(col: Column, is_arr: bool, prop: StrDict) -> Column:
+def _satisfied(x: str, is_arr: bool, prop: StrDict) -> str:
     """True when the value satisfies ``prop`` — flat keywords AND nested
     combinators, recursively.  The native keyword set is closed under this
     recursion, so arbitrary anyOf/allOf/oneOf/not trees compile to pure
     boolean expression trees (no Python in the row path)."""
-    violations = [v for v, _ in _keyword_checks(col, is_arr, prop, "x")]
-    violations += [v for v, _ in _combinator_checks(col, is_arr, prop, "x")]
-    ok = F.lit(True)
-    for v in violations:
-        # a violation expression may be null (e.g. numeric compare on a
-        # non-numeric cell) — null means "not violated" here
-        ok = ok & ~F.coalesce(v, F.lit(False))
-    return ok
+    violations = [v for v, _ in _keyword_checks(x, is_arr, prop, "x")]
+    violations += [v for v, _ in _combinator_checks(x, is_arr, prop, "x")]
+    # a violation expression may be null (e.g. numeric compare on a
+    # non-numeric cell) — null means "not violated" here
+    return S.and_("true", *[S.not_(S.call("coalesce", v, "false")) for v in violations])
 
 
 def _combinator_checks(
-    col: Column, is_arr: bool, prop: StrDict, label: str
-) -> list[tuple[Column, str]]:
+    x: str, is_arr: bool, prop: StrDict, label: str
+) -> list[tuple[str, str]]:
     """draft-07 combinators, compiled recursively via :func:`_satisfied`."""
-    checks: list[tuple[Column, str]] = []
+    checks: list[tuple[str, str]] = []
     if "anyOf" in prop:
-        oks = [_satisfied(col, is_arr, o) for o in prop["anyOf"]]
-        any_ok = oks[0]
-        for o in oks[1:]:
-            any_ok = any_ok | o
-        checks.append((~any_ok, f"{label} must be valid by one of anyOf definition"))
+        any_ok = S.or_(*[_satisfied(x, is_arr, o) for o in prop["anyOf"]])
+        checks.append((S.not_(any_ok), f"{label} must be valid by one of anyOf definition"))
     if "allOf" in prop:
-        oks = [_satisfied(col, is_arr, o) for o in prop["allOf"]]
-        all_ok = oks[0]
-        for o in oks[1:]:
-            all_ok = all_ok & o
-        checks.append((~all_ok, f"{label} must be valid by all of allOf definition"))
+        all_ok = S.and_(*[_satisfied(x, is_arr, o) for o in prop["allOf"]])
+        checks.append((S.not_(all_ok), f"{label} must be valid by all of allOf definition"))
     if "oneOf" in prop:
-        count = None
-        for o in prop["oneOf"]:
-            term = _satisfied(col, is_arr, o).cast("int")
-            count = term if count is None else count + term
-        checks.append((count != 1, f"{label} must be valid exactly by one definition"))
+        terms = [S.cast(_satisfied(x, is_arr, o), "INT") for o in prop["oneOf"]]
+        count = reduce(lambda a, b: f"({a} + {b})", terms)
+        checks.append((f"({count} != 1)", f"{label} must be valid exactly by one definition"))
     if "not" in prop:
         checks.append(
-            (_satisfied(col, is_arr, prop["not"]), f"{label} must NOT be valid by not definition")
+            (_satisfied(x, is_arr, prop["not"]), f"{label} must NOT be valid by not definition")
         )
     return checks
 
@@ -261,12 +236,11 @@ def _decode_cell(v: Any) -> Any:
     return s
 
 
-def _fallback_check(
-    attr: str, prop: StrDict, is_arr: bool
-) -> tuple[Column, str] | None:
-    """Arrow-batched Draft-7 validation for a property using keywords the
-    native compiler does not cover.  Returns None when the ``jsonschema``
-    package is unavailable (caller downgrades to a warning)."""
+def _fallback_check(attr: str, prop: StrDict) -> Column | None:
+    """Arrow-batched Draft-7 validity of ``attr`` for a property using
+    keywords the native compiler does not cover.  Returns None when the
+    ``jsonschema`` package is unavailable (caller downgrades to a
+    warning)."""
     try:
         from jsonschema import Draft7Validator
     except ImportError:
@@ -290,9 +264,7 @@ def _fallback_check(
     # functionType passed explicitly: string annotations (from __future__
     # import annotations) defeat pandas_udf's hint inference
     _check = F.pandas_udf(_check_batch, "boolean", F.PandasUDFType.SCALAR)
-
-    violation = _check(F.col(attr)) == F.lit(False)
-    return (violation, f"data.{attr} must be valid by schema definition")
+    return _check(F.col(attr))
 
 
 def _property_checks(
@@ -300,20 +272,29 @@ def _property_checks(
     prop: StrDict,
     df_columns: list[str],
     array_cols: set[str],
-) -> list[tuple[Column, str]]:
-    """(violation_condition, message) pairs for one schema property."""
+    udfs: dict[str, Column],
+) -> list[tuple[str, str]]:
+    """(violation_condition, message) pairs for one schema property.  A
+    jsonschema fallback check is added to ``udfs`` as a staged column."""
     if attr not in df_columns:
         return []
-    col = F.col(attr)
+    x = S.ident(attr)
     is_arr = attr in array_cols
-    present = col.isNotNull()
+    present = S.is_not_null(x)
 
     unsupported = set(prop) - _NATIVE_KEYWORDS
     if unsupported:
-        fb = _fallback_check(attr, prop, is_arr)
+        fb = _fallback_check(attr, prop)
         if fb is not None:
-            cond, msg = fb
-            return [(present & F.coalesce(cond, F.lit(False)), msg)]
+            name = f"__adtl_check_{len(udfs)}__"
+            udfs[name] = fb
+            violation = f"({S.ident(name)} = false)"
+            return [
+                (
+                    S.and_(present, S.call("coalesce", violation, "false")),
+                    f"data.{attr} must be valid by schema definition",
+                )
+            ]
         warnings.warn(
             f"validation: property {attr!r} uses unsupported keyword(s) "
             f"{sorted(unsupported)} and the 'jsonschema' package is not "
@@ -321,24 +302,21 @@ def _property_checks(
             UserWarning,
         )
 
-    checks = _keyword_checks(col, is_arr, prop, f"data.{attr}")
-    checks += _combinator_checks(col, is_arr, prop, f"data.{attr}")
-    return [(present & F.coalesce(cond, F.lit(False)), msg) for cond, msg in checks]
+    checks = _keyword_checks(x, is_arr, prop, f"data.{attr}")
+    checks += _combinator_checks(x, is_arr, prop, f"data.{attr}")
+    return [(S.and_(present, S.call("coalesce", c, "false")), msg) for c, msg in checks]
 
 
 def _subschema_violations(
-    schema: StrDict, df: DataFrame, array_cols: set[str]
-) -> list[tuple[Column, str]]:
-    checks: list[tuple[Column, str]] = []
+    schema: StrDict, columns: list[str], array_cols: set[str], udfs: dict[str, Column]
+) -> list[tuple[str, str]]:
+    checks: list[tuple[str, str]] = []
     for req in schema.get("required", []):
-        if req in df.columns:
-            cond = F.col(req).isNull()
-        else:
-            cond = F.lit(True)
+        cond = S.is_null(S.ident(req)) if req in columns else "true"
         checks.append((cond, f"data must contain ['{req}'] properties"))
     for attr, prop in schema.get("properties", {}).items():
         if isinstance(prop, dict):
-            checks.extend(_property_checks(attr, prop, df.columns, array_cols))
+            checks.extend(_property_checks(attr, prop, columns, array_cols, udfs))
     return checks
 
 
@@ -385,79 +363,93 @@ def annotate_validation(
     schema = spec.schemas.get(table)
     if schema is None:
         return df
-    array_cols = {
-        f.name for f in df.schema.fields if f.dataType.typeName() == "array"
-    }
+    fields = df.schema.fields
+    columns = [f.name for f in fields]
+    array_cols = {f.name for f in fields if f.dataType.typeName() == "array"}
+    udfs: dict[str, Column] = {}
 
     meta = spec.tables[table]
+    error = None
     if meta.get("kind") == "oneToMany" and meta.get("discriminator") and "oneOf" in schema:
         expanded = _discriminator_subschemas(schema, meta["discriminator"])
         if expanded is not None:
-            disc_col = F.col(meta["discriminator"])
+            disc = S.ident(meta["discriminator"])
             # each option's checks compiled once, selected by its keys;
             # unknown and null discriminators fall through to the message
             cases = [
-                (disc_col.isin(*keys), _first_error(_subschema_violations(sub, df, array_cols)))
+                (
+                    S.isin(disc, keys),
+                    _first_error(_subschema_violations(sub, columns, array_cols, udfs)),
+                )
                 for keys, sub in expanded
             ]
-            unknown_msg = F.concat(
-                F.lit("No validator found for attribute '"),
-                F.coalesce(disc_col, F.lit("None")),
-                F.lit(f"' in table '{table}'"),
+            unknown_msg = S.call(
+                "concat",
+                S.lit("No validator found for attribute '"),
+                S.call("coalesce", disc, "'None'"),
+                S.lit(f"' in table '{table}'"),
             )
-            return _attach(df, _first_match(cases, unknown_msg))
-
-    error = _first_error(_subschema_violations(schema, df, array_cols))
-    return _attach(df, error)
-
-
-def _first_match(cases: list[tuple[Column, Column]], default: Column) -> Column:
-    """CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ... ELSE default END."""
-    out = None
-    for cond, value in cases:
-        out = F.when(cond, value) if out is None else out.when(cond, value)
-    return default if out is None else out.otherwise(default)
-
-
-def _first_error(checks: list[tuple[Column, str]]) -> Column:
-    return _first_match(
-        [(cond, F.lit(msg)) for cond, msg in checks], F.lit(None).cast("string")
+            error = S.case(cases, unknown_msg)
+    if error is None:
+        error = _first_error(_subschema_violations(schema, columns, array_cols, udfs))
+    if udfs:
+        df = df.select(F.col("*"), *[c.alias(n) for n, c in udfs.items()])
+    # adtl_valid / adtl_error prepended in one projection; staged checks
+    # are dropped again
+    return df.selectExpr(
+        S.alias(S.is_null(error), "adtl_valid"),
+        S.alias(error, "adtl_error"),
+        *[S.ident(c) for c in columns],
     )
 
 
-def _attach(df: DataFrame, error: Column) -> DataFrame:
-    """Prepend adtl_valid / adtl_error in one projection."""
-    return df.select(
-        error.isNull().alias("adtl_valid"), error.alias("adtl_error"), *df.columns
+def _first_error(checks: list[tuple[str, str]]) -> str:
+    """The message of the first violated check, else NULL."""
+    return S.case([(cond, S.lit(msg)) for cond, msg in checks], S.NULL_STRING)
+
+
+def _histogram(name: str, df: DataFrame) -> DataFrame:
+    """``df``'s rows counted per ``adtl_error`` (its null key holds the
+    valid rows), with each message's first row in output order: the least
+    of its order keys, or, in a frame that carries none (already sorted,
+    or a constant table's one row), of its monotonic ids."""
+    keys = order_keys(df)
+    if not keys:
+        df = df.withColumn("__adtl_pos__", F.monotonically_increasing_id())
+        keys = ["__adtl_pos__"]
+    # (row id, block position) packed into one decimal, which keeps the
+    # aggregate hash-based: a min over a struct plans a sort aggregate
+    pos = F.col(keys[0]).cast("decimal(38,0)") * F.lit(1 << 32)
+    if len(keys) > 1:
+        pos = pos + F.col(keys[1])
+    return (
+        df.groupBy("adtl_error")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
+            F.min(pos).alias("first"),
+        )
+        .select(F.lit(name).alias("table"), "adtl_error", "n", "valid", "first")
     )
 
 
 def validation_report(tables: dict[str, DataFrame]) -> dict[str, Any]:
     """S9 validation counters: totals + error histogram per table
     (reference: parser.py:845-863, cli.py:78-90) — one error histogram
-    per validated table, all of them computed by a single action."""
+    per validated table, all of them computed by a single action.  A
+    table's messages come in the order of their first rows, as the
+    reference's ``Counter`` over the rows gives them."""
     report: dict[str, Any] = {"total": {}, "total_valid": {}, "validation_errors": {}}
     names = [name for name, df in tables.items() if "adtl_valid" in df.columns]
     if not names:
         return report
-    # grouped by adtl_error alone (its null key holds the valid rows): a
-    # table's messages then come back in the order a groupBy of its error
-    # column gives, which adding adtl_valid to the key would change
-    histograms = [
-        tables[name]
-        .groupBy("adtl_error")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
-        )
-        .select(F.lit(name).alias("table"), "adtl_error", "n", "valid")
-        for name in names
-    ]
+    histograms = [_histogram(name, tables[name]) for name in names]
     for name in names:
         report["total"][name] = 0
         report["total_valid"][name] = 0
         report["validation_errors"][name] = {}
-    for table, error, n, valid in reduce(DataFrame.union, histograms).collect():
+    rows = reduce(DataFrame.union, histograms).collect()
+    for table, error, n, valid, first in sorted(rows, key=lambda r: r.first):
         report["total"][table] += n
         report["total_valid"][table] += valid or 0
         if error is not None:

@@ -2261,3 +2261,24 @@ def test_semantic_dedup_auto_k_scales_with_corpus(spark):
     }
     assert auto == explicit
     assert len(set(auto.values())) > 1  # actually clustered
+
+
+def test_jpeg_dht_with_overflowing_counts_is_rejected():
+    """A DHT whose code counts overflow the code space fails with a named
+    error instead of decoding wrong symbols from an overgrown table."""
+    import numpy as np
+
+    from adtl_spark.operators import jpeg_lite as J
+
+    full = [0, 4] + [0] * 14  # four 2-bit codes: the whole code space
+    J._HuffTree(full, [0, 1, 2, 3])
+    for bits in ([3] + [0] * 15, [0, 5] + [0] * 14, [1, 2, 1] + [0] * 13):
+        with pytest.raises(ValueError, match="invalid Huffman table"):
+            J._HuffTree(bits, list(range(sum(bits))))
+
+    gray = np.arange(64, dtype=np.uint8).tobytes()
+    good = J.encode_jpeg(8, 8, gray, quality=90, gray=True)
+    assert J.decode_jpeg(good)
+    bad_dht = J._dht_segment(0, 0, [0, 5] + [0] * 14, [0, 1, 2, 3, 4])
+    with pytest.raises(ValueError, match="invalid Huffman table"):
+        J.decode_jpeg(good[:2] + bad_dht + good[2:])

@@ -777,16 +777,15 @@ def test_shared_source_columns_keep_plans_equal(spark, tmp_path, monkeypatch):
         assert shared.table(table).sameSemantics(fresh.table(table)), table
 
 
-def test_warm_parse_py4j_round_trips(spark, tmp_path):
-    """Pins the py4j call and reflection commands Python sends for one
-    warm parse of the golden spec.  gc stays off while counting: py4j's object
-    deletions ride on garbage collection and are not counted anyway."""
+def _warm_parse_commands(spark, spec, csv) -> int:
+    """py4j call and reflection commands Python sends for one warm parse.
+    gc stays off while counting: py4j's object deletions ride on garbage
+    collection and are not counted anyway."""
     import collections
     import gc
 
     import py4j.clientserver as cs
 
-    spec, csv = _golden_parse(spark, tmp_path)
     for _ in range(2):
         Parser(spec, spark=spark).parse(csv)
     counts = collections.Counter()
@@ -804,4 +803,47 @@ def test_warm_parse_py4j_round_trips(spark, tmp_path):
     finally:
         cs.ClientServerConnection.send_command = real
         gc.enable()
-    assert counts["c"] + counts["r"] <= 3950, dict(counts)
+    return counts["c"] + counts["r"]
+
+
+def test_warm_parse_py4j_round_trips(spark, tmp_path, clinical_study):
+    """Rules and schema checks compile to one SQL expression per output
+    column, so a warm parse costs O(columns) round trips, not O(expression
+    nodes): pinned on the benchmark's study spec and on the golden spec."""
+    study = clinical_study(3, 50, tmp_path / "study")
+    n = _warm_parse_commands(spark, str(study.spec_path), str(study.csv_path))
+    assert n <= 1500, n
+    n = _warm_parse_commands(spark, *_golden_parse(spark, tmp_path))
+    assert n <= 211, n  # 201 measured, plus 5%
+
+
+def test_sql_literals_round_trip(spark):
+    """Every literal kind the SQL renderer emits parses back to the value
+    and the data type ``F.lit`` gives it, under Spark's default
+    ``escapedStringLiterals=false``; quoted identifiers round-trip too."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from adtl_spark.functions import render as R
+    from adtl_spark.functions import sql as S
+
+    values = [
+        "it's", 'say "hi"', "back\\slash", "\\'", "trailing\\", R.INT_REGEX,
+        R.FLOAT_REGEX, r"(?i)\bword\b", r"^\[+|\]+$", "ünïcødé ☃ 日本", "line\nbreak\ttab",
+        "", "%_", 2**40, -(2**40), 2**31, 7, -3, 0, 1e-5, -0.0, 1.5, 1e300, -2.5e-8,
+        True, False, None, b"\x00\xff",
+    ]
+    df = spark.range(1)
+    by_lit = df.select(*[F.lit(v).alias(f"c{i}") for i, v in enumerate(values)])
+    by_sql = df.selectExpr(*[S.alias(S.lit(v), f"c{i}") for i, v in enumerate(values)])
+    assert by_sql.schema == by_lit.schema
+    got, want = by_sql.first(), by_lit.first()
+    for i, v in enumerate(values):
+        assert got[i] == want[i] == v or v is None and got[i] is None, (v, got[i])
+        if isinstance(v, float):
+            assert math.copysign(1, got[i]) == math.copysign(1, v), v
+
+    name = "we`ird na.me"
+    named = spark.createDataFrame([("x",)], [name])
+    assert named.selectExpr(S.ident(name)).columns == [name]

@@ -1,4 +1,4 @@
-"""Property-based tests (hypothesis): the compiled Column semantics must
+"""Property-based tests (hypothesis): the compiled expression semantics must
 match a direct Python model of the reference behaviour on arbitrary
 strings — the dynamic-typing edge cases no hand-written fixture covers.
 
@@ -40,9 +40,10 @@ def py_numeric_coerce(v: str):
             return v
 
 
-def spark_eval(spark, values, col_fn):
+def spark_eval(spark, values, sql_fn):
+    """``sql_fn`` (SQL text of column ``x`` -> SQL text) over ``values``."""
     df = spark.createDataFrame([(v,) for v in values], ["x"])
-    return [r[0] for r in df.select(col_fn(F.col("x")).alias("out")).collect()]
+    return [r[0] for r in df.select(F.expr(sql_fn("x")).alias("out")).collect()]
 
 
 @pytest.fixture(scope="module")
@@ -108,7 +109,7 @@ def test_predicate_cast_semantics(spark, compiler, values, literal, op):
 
     pred = compiler.compile_if({"x": {op: literal}})
     df = spark.createDataFrame([(v,) for v in values], ["x"])
-    got = [r[0] for r in df.select(pred.alias("p")).collect()]
+    got = [r[0] for r in df.select(F.expr(pred).alias("p")).collect()]
     for v, g in zip(values, got):
         e = expected(v)
         if isinstance(literal, int) and not (-(2**62) < literal < 2**62):
@@ -194,7 +195,7 @@ def test_date_reformat_matches_strptime(spark, y, m, d, fmt, junk):
     comp = RuleCompiler(spec, ["x"])
     val = comp.compile_value({"field": "x", "source_date": fmt, "date": "%Y-%m-%d"})
     df = spark.createDataFrame([(v,) for v in values], ["x"])
-    got = [r[0] for r in df.select(val.col.alias("out")).collect()]
+    got = [r[0] for r in df.select(F.expr(val.sql).alias("out")).collect()]
     for v, g in zip(values, got):
         e = expected(v)
         # Spark's parser is stricter about some junk shapes that strptime

@@ -285,6 +285,16 @@ def test_bad_if_operator_payload_rejected():
     )
 
 
+def test_list_constant_rejected():
+    """A constant table admits only scalars, as the reference's model does:
+    a list value fails at load time, naming its path."""
+    _expect_load_error(
+        _doc({"dataset": "d", "tags": ["a", "b"]}, kind="constant"),
+        "tab.tags",
+        "valid dictionary",
+    )
+
+
 def test_widened_forms_accepted():
     """The documented widenings load cleanly: numeric constants, False
     flags, float comparisons, nested combinators, generate-only rules."""

@@ -235,8 +235,12 @@ def test_discriminator_options_pinned(spark, tmp_path):
 
 
 def _report_two_aggregates_per_table(tables):
-    """The report as two separate aggregations per table (totals, then the
-    error histogram) — the oracle for the single-action report."""
+    """The report as separate computations per table — totals by an
+    aggregation, the error histogram as the reference's ``Counter`` over
+    the rows in output order (messages in first-occurrence order) — the
+    oracle for the single-action report."""
+    from collections import Counter
+
     from pyspark.sql import functions as F
 
     report = {"total": {}, "total_valid": {}, "validation_errors": {}}
@@ -249,13 +253,8 @@ def _report_two_aggregates_per_table(tables):
         ).collect()[0]
         report["total"][name] = counts["total"]
         report["total_valid"][name] = counts["valid"] or 0
-        errors = (
-            df.filter(F.col("adtl_error").isNotNull())
-            .groupBy("adtl_error")
-            .count()
-            .collect()
-        )
-        report["validation_errors"][name] = {r["adtl_error"]: r["count"] for r in errors}
+        errors = Counter(r["adtl_error"] for r in df.collect() if r["adtl_error"])
+        report["validation_errors"][name] = dict(errors)
     return report
 
 
@@ -354,3 +353,31 @@ def test_report_is_one_collect(spark, tmp_path, monkeypatch):
         report = validation_report(tables)
         assert len(calls) == 1
         assert set(report["total"]) == {"subject", "empty", "obs"}
+
+
+def test_study_report_order_is_first_occurrence(spark, tmp_path, clinical_study):
+    """The study report is byte-equal under two shuffle-partition counts,
+    and each table's messages come in the order a ``Counter`` over the
+    table's rows in output order gives them (the reference's order)."""
+    from collections import Counter
+
+    study = clinical_study(3, 300, tmp_path / "study")
+    reports = []
+    counters = {}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for partitions in ("3", "13"):
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+            with Parser(str(study.spec_path), spark=spark).parse(str(study.csv_path)) as p:
+                reports.append(json.dumps(p.build_report()))
+                for table in p.report["validation_errors"]:
+                    rows = p.table(table).collect()
+                    counters[table] = Counter(r["adtl_error"] for r in rows if r["adtl_error"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert reports[0] == reports[1]
+    errors = json.loads(reports[0])["validation_errors"]
+    assert set(errors) == {"subject", "observation", "visit"}
+    assert sum(len(e) for e in errors.values()) > 3  # several messages to order
+    for table, histogram in errors.items():
+        assert list(histogram.items()) == list(counters[table].items()), table
