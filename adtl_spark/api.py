@@ -14,7 +14,8 @@ from typing import Any, Callable, Iterable
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
-from adtl_spark.plans.tables import build_all_tables, order_keys
+from adtl_spark.functions.render import decode
+from adtl_spark.plans.tables import build_all_tables, in_row_order, order_keys
 from adtl_spark.session import get_spark
 from adtl_spark.sources.io import (
     dataframe_from_rows,
@@ -129,7 +130,11 @@ class Parser:
         self, source: DataFrame, skip_validation: bool = False
     ) -> "Parser":
         """Spark-native entry: parse an existing DataFrame (columns are cast
-        to string by the rule compiler)."""
+        to string by the rule compiler).  This is also the streaming entry:
+        over a streaming source the row-local tables (oneToOne, oneToMany)
+        are streaming DataFrames, ready for ``writeStream``; the constant
+        tables are left out, and a groupBy table raises
+        ``StreamingUnsupportedError`` (see ``plans.tables``)."""
         return self._run(source, skip_validation)
 
     def _run(self, source: DataFrame, skip_validation: bool) -> "Parser":
@@ -144,7 +149,9 @@ class Parser:
             }
         self._unsorted = tables
         self._uncached = [df for df in tables.values() if order_keys(df)]
-        self.data = {name: self._sorted(df) for name, df in tables.items()}
+        self.data = {
+            name: in_row_order(df, self.ordered_output) for name, df in tables.items()
+        }
         self.report_available = not skip_validation
         return self
 
@@ -154,14 +161,6 @@ class Parser:
         planning."""
         while self._uncached:
             self._cached.append(self._uncached.pop().persist())
-
-    def _sorted(self, df: DataFrame) -> DataFrame:
-        """``df`` in the reference's row order (when ``ordered_output``),
-        without its order-key columns."""
-        keys = order_keys(df)
-        if keys and self.ordered_output:
-            df = df.orderBy(*keys)
-        return df.drop(*keys)
 
     # ------------------------------------------------------------------ sinks
 
@@ -183,7 +182,7 @@ class Parser:
             for k, v in d.items():
                 if v is None:
                     continue
-                out[k] = _restore_dynamic(v) if typed else v
+                out[k] = decode(v) if typed else v
             yield out
 
     def write_csv(self, table: str, output: str | None = None) -> str | None:
@@ -291,24 +290,6 @@ def _unpersist_all(frames: list[DataFrame]) -> None:
         df = frames.pop()
         if df.sparkSession.sparkContext is SparkContext._active_spark_context:
             df.unpersist()
-
-
-def _restore_dynamic(v: Any):
-    if isinstance(v, list):
-        return [_restore_dynamic(x) for x in v]
-    if not isinstance(v, str):
-        return v
-    if v == "True":
-        return True
-    if v == "False":
-        return False
-    try:
-        return int(v)
-    except ValueError:
-        try:
-            return float(v)
-        except ValueError:
-            return v
 
 
 def parse(

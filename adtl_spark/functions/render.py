@@ -18,15 +18,14 @@ domains exercised by its test corpus.  Divergence: Java renders doubles
 outside [1e-3, 1e7) in scientific notation where Python may not; such
 magnitudes do not occur in the reference fixtures.
 
-A typed (non-bit-compat) mode is available in the table materializer for
-parquet-native pipelines where a JSON schema pins column types.
-
 The builders below take and return Spark SQL expression text
 (``adtl_spark.functions.sql``); wrap a result in ``F.expr`` where a
 ``Column`` is needed.
 """
 
 from __future__ import annotations
+
+from typing import Any
 
 from adtl_spark.functions import sql as S
 
@@ -95,6 +94,25 @@ def render_literal(value: object) -> str | None:
             except ValueError:
                 return value
     return str(value)
+
+
+def decode(v: Any) -> Any:
+    """The dynamic Python value a canonical cell holds: "True"/"False"
+    become bools, then int, then float, else the string stays; list cells
+    (lists or numpy arrays) decode element-wise; other values pass as
+    they are."""
+    if isinstance(v, str):
+        if v in ("True", "False"):
+            return v == "True"
+        for parse in (int, float):
+            try:
+                return parse(v)
+            except ValueError:
+                pass
+        return v
+    if v is not None and not isinstance(v, dict) and hasattr(v, "__iter__"):
+        return [decode(x) for x in v]
+    return v
 
 
 def repr_element(x: str) -> str:

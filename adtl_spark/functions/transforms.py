@@ -115,8 +115,9 @@ def t_word_substitute_set(value: str, params: list, fail: str) -> BuildResult:
     found = S.call("filter", S.call("array", *branches), "__w -> (__w IS NOT NULL)")
     matches = S.call("array_sort", S.call("array_distinct", found))
     no_match = f"({S.call('size', matches)} = 0)"
-    if _FAIL_IS_PASSTHROUGH.get():
-        # returnUnmatched: unmatched values pass through as the raw string, so
+    if fail != NULL:
+        # returnUnmatched (the compiler then passes the value itself as
+        # ``fail``): unmatched values pass through as the raw string, so
         # the whole column is stringly-rendered (mixed-type cell parity with
         # the reference's list-or-str cells)
         rendered = S.case(
@@ -420,23 +421,6 @@ _BUILTINS: dict[str, Callable[[str, list, str], BuildResult]] = {
 }
 
 
-class _PassthroughFlag:
-    """Whether fail_value is a passthrough (returnUnmatched) — set by
-    build_transform for builders whose output shape depends on it."""
-
-    def __init__(self) -> None:
-        self._value = False
-
-    def get(self) -> bool:
-        return self._value
-
-    def set(self, value: bool) -> None:
-        self._value = value
-
-
-_FAIL_IS_PASSTHROUGH = _PassthroughFlag()
-
-
 def build_transform(
     name: str,
     value: str,
@@ -444,7 +428,6 @@ def build_transform(
     fail_value: str,
     stage_udf: Callable[[Column], str],
     custom_transforms: dict[str, Callable] | None = None,
-    fail_is_passthrough: bool = False,
 ) -> BuildResult:
     """Dispatch an ``apply`` rule to a native builder, falling back to a UDF
     wrapper for user-supplied transforms (U1,
@@ -452,7 +435,6 @@ def build_transform(
     into a column a preceding projection computes, and returns the SQL
     that references it."""
     custom_transforms = custom_transforms or {}
-    _FAIL_IS_PASSTHROUGH.set(fail_is_passthrough)
     if name in custom_transforms:
         return _wrap_custom(custom_transforms[name], value, params, fail_value, stage_udf)
     if name in _BUILTINS:

@@ -91,9 +91,9 @@ class Value:
 
 @dataclass
 class Stage:
-    """Columns computed ahead of a table's rule projection, which its SQL
-    references by name: Python UDF results first (SQL text cannot call an
-    unregistered UDF), then combinedType sub-values.  Fold expressions
+    """Columns computed ahead of a table's rule (or validator) projection,
+    which its SQL references by name: Python UDF results first (SQL text
+    cannot call an unregistered UDF), then combinedType sub-values.  Fold expressions
     reference their input many times inside higher-order functions, which
     Spark evaluates interpreted and without common-subexpression
     elimination — inlining a full rule expression there multiplies its cost
@@ -410,7 +410,6 @@ class RuleCompiler:
             fail_value=fail_value,
             stage_udf=self._stage_udf,
             custom_transforms=self.custom_transforms,
-            fail_is_passthrough=self.spec.return_unmatched,
         )
 
     def _resolve_param(self, p: Any) -> Any:

@@ -23,9 +23,10 @@ and a ``(file, split offset, id)`` composite struct for globbed multi-file
 reads (see ``attach_row_id``) — the reference reads exactly one CSV, so the
 multi-file order is this engine's extension, defined as sorted-path order.
 Tables do not sort themselves: each keeps its order keys (``ORDER_KEYS``)
-as columns, and the caller sorts on them and drops them.  ``api.Parser``
-does so on top of its cached tables, so consumers that need no order (the
-validation report) read the tables without a sort.
+as columns.  ``in_row_order`` sorts on them and drops them; ``api.Parser``
+applies it on top of its cached tables, so consumers that need no order
+(the validation report) read the tables without a sort, and place rows
+with ``row_position``.
 """
 
 from __future__ import annotations
@@ -45,6 +46,11 @@ ROW_ID = "__adtl_row_id__"
 ROW_POS = "__adtl_row_pos__"  # oneToMany: the block's position within its row
 ORDER_KEYS = (ROW_ID, ROW_POS)
 _ROW_ID = S.ident(ROW_ID)
+_ROW_SEQ = "__adtl_pos__"  # row_position of a frame without order keys
+
+
+class StreamingUnsupportedError(ValueError):
+    """A spec table with no streaming shape was compiled over a stream."""
 
 
 _CTR_MASK = (1 << 33) - 1  # monotonic id: partition index << 33 | counter
@@ -160,21 +166,52 @@ def order_keys(df: DataFrame) -> list[str]:
     return [k for k in ORDER_KEYS if k in df.columns]
 
 
+def in_row_order(df: DataFrame, ordered: bool = True) -> DataFrame:
+    """``df`` without its order-key columns, sorted on them first when
+    ``ordered`` (a global range exchange)."""
+    keys = order_keys(df)
+    if keys and ordered:
+        df = df.orderBy(*keys)
+    return df.drop(*keys)
+
+
+def row_position(df: DataFrame) -> tuple[DataFrame, Column]:
+    """``df`` and each row's position in output order, as one
+    ``decimal(38,0)``: the row id and the block position packed together
+    (a min over it stays a hash aggregate; over a struct it plans a sort
+    aggregate).  A frame without order keys (already sorted, or a constant
+    table's one row) gets a monotonic id column to stand for them."""
+    keys = order_keys(df)
+    if not keys:
+        df = df.withColumn(_ROW_SEQ, F.monotonically_increasing_id())
+        keys = [_ROW_SEQ]
+    pos = F.col(keys[0]).cast("decimal(38,0)") * F.lit(1 << 32)
+    if len(keys) > 1:
+        pos = pos + F.col(keys[1])
+    return df, pos
+
+
 def build_all_tables(
     spec: CompiledSpec,
     df: DataFrame,
     spark: SparkSession,
     custom_transforms: dict[str, Callable] | None = None,
 ) -> dict[str, DataFrame]:
-    """One unsorted plan per table.  Over a non-streaming source every
-    non-constant table carries its ``order_keys`` columns; sorting on them
-    restores the reference's row order, at the cost of a global range
-    exchange that consumers which need no order can skip."""
+    """One unsorted plan per table, over a batch or a streaming source.
+    Over a batch source every non-constant table carries its
+    ``order_keys`` columns; sorting on them restores the reference's row
+    order, at the cost of a global range exchange that consumers which
+    need no order can skip.  A streaming source has no file order: its
+    tables carry no order keys, the constant tables are left out (one
+    literal row has no streaming shape), and a groupBy table raises
+    ``StreamingUnsupportedError`` (its file-order aggregates would need
+    unbounded state)."""
     compiler = RuleCompiler(
         spec, df.columns, custom_transforms, dtypes=dict(df.dtypes)
     )
+    streaming = df.isStreaming
     out: dict[str, DataFrame] = {}
-    if not df.isStreaming:
+    if not streaming:
         # row id BEFORE any exchange (it encodes file order), then spread a
         # low-split scan across all cores — the rule projection is the
         # engine's hot loop and must not run on one task just because the
@@ -185,10 +222,16 @@ def build_all_tables(
     for table, meta in spec.tables.items():
         kind = meta.get("kind")
         if kind == "constant":
-            out[table] = _constant_table(spec, table, spark)
+            if not streaming:
+                out[table] = _constant_table(spec, table, spark)
         elif kind == "oneToMany":
             out[table] = _one_to_many_table(spec, table, df, compiler)
         elif meta.get("groupBy"):
+            if streaming:
+                raise StreamingUnsupportedError(
+                    f"table {table!r}: groupBy tables need unbounded state "
+                    "(lastNotNull over all history) and cannot stream; run batch"
+                )
             out[table] = _group_by_table(spec, table, df, compiler)
         else:
             out[table] = _one_to_one_table(spec, table, df, compiler)
@@ -245,6 +288,23 @@ def _one_to_one_table(
 # ---------------------------------------------------------------- groupBy kind
 
 
+def _group_rows(
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
+) -> tuple[DataFrame, dict[str, Value]]:
+    """A groupBy table's rows before grouping: the row id and one cell per
+    attribute, with the compiled value of each attribute."""
+    stage = Stage()
+    values: dict[str, Value] = {}
+    row_cols = [_ROW_ID]
+    for attr, rule in spec.table_specs[table].items():
+        v = compiler.compile_value(
+            rule, attr, _schema_type(spec, table, attr), stage=stage
+        )
+        values[attr] = v
+        row_cols.append(S.alias(_wide_cell(v), attr))
+    return stage.apply(df).selectExpr(*row_cols), values
+
+
 def _group_by_table(
     spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
 ) -> DataFrame:
@@ -252,17 +312,7 @@ def _group_by_table(
     group_field = meta["groupBy"]
     aggregation = meta.get("aggregation")
     table_spec = spec.table_specs[table]
-
-    stage = Stage()
-    values: dict[str, Value] = {}
-    row_cols = [_ROW_ID]
-    for attr, rule in table_spec.items():
-        v = compiler.compile_value(
-            rule, attr, _schema_type(spec, table, attr), stage=stage
-        )
-        values[attr] = v
-        row_cols.append(S.alias(_wide_cell(v), attr))
-    projected = stage.apply(df).selectExpr(*row_cols)
+    projected, values = _group_rows(spec, table, df, compiler)
 
     aggs = [F.expr(S.alias(S.call("min", _ROW_ID), ROW_ID))]
     for attr, v in values.items():
@@ -323,41 +373,30 @@ def group_conflicts(
 ) -> DataFrame:
     """Verbose-mode overwrite detection (reference: parser.py:603-614 warns
     per group when a lastNotNull attribute has conflicting values).  Spark
-    shape: one aggregation returning, per attribute, how many groups carry
-    more than one distinct value — the actionable summary instead of a
-    per-row warning stream."""
-    meta = spec.tables[table]
-    group_field = meta["groupBy"]
-    table_spec = spec.table_specs[table]
-    stage = Stage()
-    cols = []
-    plain_attrs = []
-    for attr, rule in table_spec.items():
-        if attr == group_field:
-            cols.append(S.alias(compiler.compile_value(rule, attr, stage=stage).sql, attr))
-            continue
-        if isinstance(rule, dict) and "combinedType" in rule:
-            continue  # folds aggregate by design; only plain attrs can clash
-        v = compiler.compile_value(rule, attr, stage=stage)
-        plain_attrs.append(attr)
-        cols.append(S.alias(_wide_cell(v), attr))
-    projected = stage.apply(df).selectExpr(*cols)
+    shape: one aggregation over the table's rows before grouping
+    (``df`` carries the row id), returning, per attribute, how many groups
+    carry more than one distinct value — the actionable summary instead
+    of a per-row warning stream."""
+    group_field = spec.tables[table]["groupBy"]
+    plain_attrs = [
+        attr
+        for attr, rule in spec.table_specs[table].items()
+        # combinedType attrs fold by design; only plain attrs can clash
+        if attr != group_field and not (isinstance(rule, dict) and "combinedType" in rule)
+    ]
+    schema = "attribute string, n_conflicting_groups long"
+    if not plain_attrs:
+        return df.sparkSession.createDataFrame([], schema)
+    projected, _ = _group_rows(spec, table, df, compiler)
     per_group = projected.groupBy(group_field).agg(
         *[
             F.count_distinct(F.when(F.col(a) != "", F.col(a))).alias(a)
             for a in plain_attrs
         ]
     )
-    counts = per_group.select(
-        [
-            F.sum((F.col(a) > 1).cast("long")).alias(a)
-            for a in plain_attrs
-        ]
-    )
-    schema = "attribute string, n_conflicting_groups long"
-    if not plain_attrs:
-        return df.sparkSession.createDataFrame([], schema)
-    row = counts.collect()[0]
+    row = per_group.select(
+        [F.sum((F.col(a) > 1).cast("long")).alias(a) for a in plain_attrs]
+    ).collect()[0]
     rows = [(a, int(row[a] or 0)) for a in plain_attrs]
     return df.sparkSession.createDataFrame(rows, schema)
 

@@ -5,10 +5,12 @@ src/adtl/parser.py:709-725).  Two streaming capabilities are added here:
 
 1. **Streaming spec execution** — an adtl spec's row-local phase (oneToOne
    and oneToMany tables) is shuffle-free, so the same compiled plan
-   runs unchanged on a streaming DataFrame: ``readStream`` -> the exact
-   projection/explode the batch path builds -> ``writeStream``.  groupBy
-   tables need stateful semantics (lastNotNull over unbounded keys) and are
-   rejected with a clear error rather than silently wrong results.
+   runs unchanged on a streaming DataFrame: ``readStream`` ->
+   ``Parser.parse_dataframe`` (the exact projection/explode the batch path
+   builds) -> ``writeStream``.  groupBy tables need stateful semantics
+   (lastNotNull over unbounded keys) and are rejected with
+   ``plans.tables.StreamingUnsupportedError`` rather than silently wrong
+   results.
 
 2. **Windowed event aggregation** — watermarked tumbling-window counts over
    an event stream, the canonical late-data-tolerant rollup.
@@ -19,37 +21,6 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from adtl_spark.plans.compiler import RuleCompiler
-from adtl_spark.plans.tables import _one_to_many_table, _one_to_one_table
-from adtl_spark.spec import CompiledSpec
-
-
-class StreamingUnsupportedError(ValueError):
-    pass
-
-
-def stream_tables(spec: CompiledSpec, stream_df: DataFrame) -> dict[str, DataFrame]:
-    """Compile the spec against a *streaming* DataFrame.  Row-local tables
-    (oneToOne / oneToMany) stream as-is; groupBy tables raise — their
-    file-order lastNotNull semantics have no bounded-state streaming
-    equivalent."""
-    compiler = RuleCompiler(spec, stream_df.columns, dtypes=dict(stream_df.dtypes))
-    out: dict[str, DataFrame] = {}
-    for table, meta in spec.tables.items():
-        kind = meta.get("kind")
-        if kind == "constant":
-            continue  # no streaming shape for a constant single row
-        if kind == "groupBy" or meta.get("groupBy"):
-            raise StreamingUnsupportedError(
-                f"table {table!r}: groupBy tables need unbounded state "
-                "(lastNotNull over all history) and cannot stream; run batch"
-            )
-        if kind == "oneToMany":
-            out[table] = _one_to_many_table(spec, table, stream_df, compiler)
-        else:
-            out[table] = _one_to_one_table(spec, table, stream_df, compiler)
-    return out
 
 
 def wet_ingest_stream(

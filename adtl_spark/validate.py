@@ -42,7 +42,8 @@ from pyspark.sql import functions as F
 
 from adtl_spark.functions import render as R
 from adtl_spark.functions import sql as S
-from adtl_spark.plans.tables import order_keys
+from adtl_spark.plans.compiler import Stage
+from adtl_spark.plans.tables import row_position
 from adtl_spark.spec import CompiledSpec, StrDict
 
 # keywords the native compiler fully covers (closed under combinator
@@ -213,29 +214,6 @@ def _combinator_checks(
     return checks
 
 
-def _decode_cell(v: Any) -> Any:
-    """Rendered canonical string -> the dynamic-typed Python value the
-    reference's row dict holds at validation time."""
-    if v is None:
-        return None
-    if not isinstance(v, str) and hasattr(v, "__iter__"):
-        return [_decode_cell(x) for x in v]  # list cells (incl. numpy arrays)
-    s = str(v)
-    if s == "True":
-        return True
-    if s == "False":
-        return False
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    try:
-        return float(s)
-    except ValueError:
-        pass
-    return s
-
-
 def _fallback_check(attr: str, prop: StrDict) -> Column | None:
     """Arrow-batched Draft-7 validity of ``attr`` for a property using
     keywords the native compiler does not cover.  Returns None when the
@@ -257,7 +235,7 @@ def _fallback_check(attr: str, prop: StrDict) -> Column | None:
                 return None  # absent: presence handled by `required`
             if not isinstance(v, str) and hasattr(v, "__len__") and len(v) == 0:
                 return None
-            return bool(validator.is_valid(_decode_cell(v)))
+            return bool(validator.is_valid(R.decode(v)))
 
         return values.map(one).astype("object")
 
@@ -272,10 +250,10 @@ def _property_checks(
     prop: StrDict,
     df_columns: list[str],
     array_cols: set[str],
-    udfs: dict[str, Column],
+    stage: Stage,
 ) -> list[tuple[str, str]]:
     """(violation_condition, message) pairs for one schema property.  A
-    jsonschema fallback check is added to ``udfs`` as a staged column."""
+    jsonschema fallback check is a ``stage`` column."""
     if attr not in df_columns:
         return []
     x = S.ident(attr)
@@ -286,9 +264,7 @@ def _property_checks(
     if unsupported:
         fb = _fallback_check(attr, prop)
         if fb is not None:
-            name = f"__adtl_check_{len(udfs)}__"
-            udfs[name] = fb
-            violation = f"({S.ident(name)} = false)"
+            violation = f"({stage.udf(fb)} = false)"
             return [
                 (
                     S.and_(present, S.call("coalesce", violation, "false")),
@@ -308,7 +284,7 @@ def _property_checks(
 
 
 def _subschema_violations(
-    schema: StrDict, columns: list[str], array_cols: set[str], udfs: dict[str, Column]
+    schema: StrDict, columns: list[str], array_cols: set[str], stage: Stage
 ) -> list[tuple[str, str]]:
     checks: list[tuple[str, str]] = []
     for req in schema.get("required", []):
@@ -316,7 +292,7 @@ def _subschema_violations(
         checks.append((cond, f"data must contain ['{req}'] properties"))
     for attr, prop in schema.get("properties", {}).items():
         if isinstance(prop, dict):
-            checks.extend(_property_checks(attr, prop, columns, array_cols, udfs))
+            checks.extend(_property_checks(attr, prop, columns, array_cols, stage))
     return checks
 
 
@@ -366,7 +342,7 @@ def annotate_validation(
     fields = df.schema.fields
     columns = [f.name for f in fields]
     array_cols = {f.name for f in fields if f.dataType.typeName() == "array"}
-    udfs: dict[str, Column] = {}
+    stage = Stage()
 
     meta = spec.tables[table]
     error = None
@@ -379,7 +355,7 @@ def annotate_validation(
             cases = [
                 (
                     S.isin(disc, keys),
-                    _first_error(_subschema_violations(sub, columns, array_cols, udfs)),
+                    _first_error(_subschema_violations(sub, columns, array_cols, stage)),
                 )
                 for keys, sub in expanded
             ]
@@ -391,12 +367,10 @@ def annotate_validation(
             )
             error = S.case(cases, unknown_msg)
     if error is None:
-        error = _first_error(_subschema_violations(schema, columns, array_cols, udfs))
-    if udfs:
-        df = df.select(F.col("*"), *[c.alias(n) for n, c in udfs.items()])
+        error = _first_error(_subschema_violations(schema, columns, array_cols, stage))
     # adtl_valid / adtl_error prepended in one projection; staged checks
     # are dropped again
-    return df.selectExpr(
+    return stage.apply(df).selectExpr(
         S.alias(S.is_null(error), "adtl_valid"),
         S.alias(error, "adtl_error"),
         *[S.ident(c) for c in columns],
@@ -410,18 +384,8 @@ def _first_error(checks: list[tuple[str, str]]) -> str:
 
 def _histogram(name: str, df: DataFrame) -> DataFrame:
     """``df``'s rows counted per ``adtl_error`` (its null key holds the
-    valid rows), with each message's first row in output order: the least
-    of its order keys, or, in a frame that carries none (already sorted,
-    or a constant table's one row), of its monotonic ids."""
-    keys = order_keys(df)
-    if not keys:
-        df = df.withColumn("__adtl_pos__", F.monotonically_increasing_id())
-        keys = ["__adtl_pos__"]
-    # (row id, block position) packed into one decimal, which keeps the
-    # aggregate hash-based: a min over a struct plans a sort aggregate
-    pos = F.col(keys[0]).cast("decimal(38,0)") * F.lit(1 << 32)
-    if len(keys) > 1:
-        pos = pos + F.col(keys[1])
+    valid rows), with the least ``row_position`` of each message's rows."""
+    df, pos = row_position(df)
     return (
         df.groupBy("adtl_error")
         .agg(

@@ -627,7 +627,7 @@ def main() -> None:
     print(json.dumps(full))
     # Optional full-record sink: the per-query dict outgrew any
     # line-capture window (238+ entries), so the durable copy goes to a
-    # file when requested (the committed docs/bench_runs/*.json records)
+    # file when requested
     out = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out:
         with open(out, "w") as f:

@@ -847,3 +847,55 @@ def test_sql_literals_round_trip(spark):
     name = "we`ird na.me"
     named = spark.createDataFrame([("x",)], [name])
     assert named.selectExpr(S.ident(name)).columns == [name]
+
+
+def _internal_names(source: str) -> list[int]:
+    """Line numbers of string literals (f-string parts included) that
+    begin with an engine-internal column name, ``__adtl_…`` — never a
+    docstring or a comment."""
+    import ast
+
+    tree = ast.parse(source)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docstrings
+        and node.value.lstrip("`").startswith("__adtl_")
+    ]
+
+
+def test_internal_name_scanner_ignores_docstrings_and_comments():
+    src = (
+        'def f(df):\n'
+        '    """__adtl_row_id__ orders the rows."""\n'
+        '    # "__adtl_pos__" would too\n'
+        '    n = f"__adtl_check_{len(df)}__"\n'
+        '    return df.select("`__adtl_row_id__`", "a__adtl_")\n'
+    )
+    assert _internal_names(src) == [4, 5]
+
+
+def test_internal_columns_are_named_only_in_plans():
+    """Staged columns (``plans.compiler.Stage``) and row-order columns
+    (``plans.tables``) are named by their owners in ``adtl_spark/plans``;
+    every other module goes through those owners."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "adtl_spark"
+    bad = [
+        f"{path.relative_to(pkg)}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        if pkg / "plans" not in path.parents
+        for line in _internal_names(path.read_text())
+    ]
+    assert bad == []

@@ -205,7 +205,13 @@ def _n_files(d) -> int:
 def test_reliable_mode_matches_default(spark, tmp_path, monkeypatch, case):
     """Under spark.adtl.reliableCheckpoint the operator returns the rows
     of default mode, its cuts write checkpoint files, and not one of
-    them is an executor-local checkpoint."""
+    them is an executor-local checkpoint.
+
+    The checkpoint cleaner deletes a cut's files once the cut frame is
+    unreferenced and a JVM GC runs, which can happen before ``run``
+    returns (``append_to_search_index`` drops its cut before the query
+    job), so the test keeps every reliable cut referenced until the
+    files are counted."""
     run = PARITY_CASES[case]
     ckpt = tmp_path / "ckpt"
     spark.sparkContext.setCheckpointDir(str(ckpt))
@@ -214,20 +220,29 @@ def test_reliable_mode_matches_default(spark, tmp_path, monkeypatch, case):
 
     df_cls = type(spark.range(1))
     local_cuts = []
-    orig = df_cls.localCheckpoint
+    reliable_cuts = []
+    orig_local = df_cls.localCheckpoint
+    orig_reliable = df_cls.checkpoint
 
     def recording_local_checkpoint(self, *a, **kw):
         local_cuts.append(1)
-        return orig(self, *a, **kw)
+        return orig_local(self, *a, **kw)
+
+    def keeping_checkpoint(self, *a, **kw):
+        cut_df = orig_reliable(self, *a, **kw)
+        reliable_cuts.append(cut_df)
+        return cut_df
 
     before = _n_files(ckpt)
     monkeypatch.setattr(df_cls, "localCheckpoint", recording_local_checkpoint)
+    monkeypatch.setattr(df_cls, "checkpoint", keeping_checkpoint)
     spark.conf.set(RELIABLE_CKPT_CONF, "true")
     try:
         got = sorted(map(tuple, run(spark, tmp_path, "reliable")))
     finally:
         spark.conf.unset(RELIABLE_CKPT_CONF)
     assert got == want
+    assert reliable_cuts
     assert _n_files(ckpt) > before
     assert local_cuts == []
 

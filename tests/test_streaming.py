@@ -1,17 +1,17 @@
 """Structured Streaming: spec execution on a stream + windowed/session
 aggregations, driven end-to-end through the rate/memory machinery."""
 
+import json
 import tempfile
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from adtl_spark.spec import CompiledSpec
+from adtl_spark.api import Parser
+from adtl_spark.plans.tables import StreamingUnsupportedError
 from adtl_spark.streaming.pipeline import (
-    StreamingUnsupportedError,
     sessionize_stream,
-    stream_tables,
     windowed_event_counts,
 )
 
@@ -24,29 +24,30 @@ def _run_stream_to_memory(df, name, timeout=60):
         q.stop()
 
 
-def test_spec_streams_one_to_one(spark, tmp_path):
+def _csv_source(spark, tmp_path, text, stream=True):
+    """``text`` as the one CSV file of a folder, read as a stream or as a
+    batch."""
     src = tmp_path / "stream_src"
-    src.mkdir()
-    (src / "part1.csv").write_text("sid,sex\nS1,1\nS2,2\n")
-    spec = CompiledSpec(
-        {
-            "adtl": {
-                "name": "s",
-                "description": "",
-                "tables": {"subject": {"kind": "oneToOne"}},
-            },
-            "subject": {
-                "subject_id": {"field": "sid"},
-                "sex": {"field": "sex", "values": {"1": "male", "2": "female"}},
-            },
-        }
-    )
-    stream = (
-        spark.readStream.schema("sid string, sex string")
-        .option("header", True)
-        .csv(str(src))
-    )
-    tables = stream_tables(spec, stream)
+    src.mkdir(exist_ok=True)
+    (src / "part1.csv").write_text(text)
+    reader = spark.readStream if stream else spark.read
+    return reader.schema("sid string, sex string").option("header", True).csv(str(src))
+
+
+def test_spec_streams_one_to_one(spark, tmp_path):
+    spec = {
+        "adtl": {
+            "name": "s",
+            "description": "",
+            "tables": {"subject": {"kind": "oneToOne"}},
+        },
+        "subject": {
+            "subject_id": {"field": "sid"},
+            "sex": {"field": "sex", "values": {"1": "male", "2": "female"}},
+        },
+    }
+    stream = _csv_source(spark, tmp_path, "sid,sex\nS1,1\nS2,2\n")
+    tables = Parser(spec, spark=spark).parse_dataframe(stream).data
     assert set(tables) == {"subject"}
     _run_stream_to_memory(tables["subject"], "subj_stream")
     rows = {r["subject_id"]: r["sex"] for r in spark.sql("SELECT * FROM subj_stream").collect()}
@@ -54,25 +55,78 @@ def test_spec_streams_one_to_one(spark, tmp_path):
 
 
 def test_spec_streaming_rejects_groupby(spark):
-    spec = CompiledSpec(
-        {
-            "adtl": {
-                "name": "s",
-                "description": "",
-                "tables": {
-                    "subject": {
-                        "kind": "groupBy",
-                        "groupBy": "sid",
-                        "aggregation": "lastNotNull",
-                    }
-                },
+    spec = {
+        "adtl": {
+            "name": "s",
+            "description": "",
+            "tables": {
+                "subject": {
+                    "kind": "groupBy",
+                    "groupBy": "sid",
+                    "aggregation": "lastNotNull",
+                }
             },
-            "subject": {"sid": {"field": "sid"}},
-        }
-    )
+        },
+        "subject": {"sid": {"field": "sid"}},
+    }
     stream = spark.readStream.format("rate").load().selectExpr("CAST(value AS STRING) AS sid")
     with pytest.raises(StreamingUnsupportedError):
-        stream_tables(spec, stream)
+        Parser(spec, spark=spark).parse_dataframe(stream)
+
+
+def test_spec_stream_omits_constants_and_rejects_groupby_among_tables(spark, tmp_path):
+    """The batch and the streaming parse share one table dispatch: a stream
+    leaves out the constant table the batch parse returns, streams the
+    row-local tables with their validation, and a groupBy table anywhere
+    in the spec raises the named error."""
+    schema = tmp_path / "subject.json"
+    schema.write_text(json.dumps({"properties": {"subject_id": {"pattern": "^S1$"}}}))
+    spec = {
+        "adtl": {
+            "name": "s",
+            "description": "",
+            "tables": {
+                "meta": {"kind": "constant"},
+                "subject": {"kind": "oneToOne", "schema": str(schema)},
+                "obs": {"kind": "oneToMany", "discriminator": "name"},
+            },
+        },
+        "meta": {"source": "stream"},
+        "subject": {"subject_id": {"field": "sid"}},
+        "obs": [
+            {"name": "sex", "if": {"sex": {"!=": ""}}, "value": {"field": "sex"}},
+            {"name": "id", "if": {"sid": {"!=": ""}}, "value": {"field": "sid"}},
+        ],
+    }
+    text = "sid,sex\nS1,1\nS2,\n"
+    batch = Parser(spec, spark=spark).parse_dataframe(
+        _csv_source(spark, tmp_path, text, stream=False)
+    )
+    assert set(batch.data) == {"meta", "subject", "obs"}
+
+    stream = _csv_source(spark, tmp_path, text)
+    tables = Parser(spec, spark=spark).parse_dataframe(stream).data
+    assert set(tables) == {"subject", "obs"}
+    assert all(df.isStreaming for df in tables.values())
+    _run_stream_to_memory(tables["subject"], "subject_stream")
+    valid = {
+        r["subject_id"]: r["adtl_valid"]
+        for r in spark.sql("SELECT * FROM subject_stream").collect()
+    }
+    assert valid == {"S1": True, "S2": False}
+    _run_stream_to_memory(tables["obs"], "obs_stream")
+    rows = sorted(
+        (r["name"], r["value"]) for r in spark.sql("SELECT * FROM obs_stream").collect()
+    )
+    batch_rows = sorted((r["name"], r["value"]) for r in batch.data["obs"].collect())
+    assert rows == batch_rows == [("id", "S1"), ("id", "S2"), ("sex", "1")]
+
+    spec["adtl"]["tables"]["visit"] = {
+        "kind": "groupBy", "groupBy": "sid", "aggregation": "lastNotNull"
+    }
+    spec["visit"] = {"sid": {"field": "sid"}, "sex": {"field": "sex"}}
+    with pytest.raises(StreamingUnsupportedError, match="'visit'"):
+        Parser(spec, spark=spark).parse_dataframe(stream)
 
 
 def _event_stream_df(spark, tmp_path):

@@ -381,3 +381,19 @@ def test_study_report_order_is_first_occurrence(spark, tmp_path, clinical_study)
     assert sum(len(e) for e in errors.values()) > 3  # several messages to order
     for table, histogram in errors.items():
         assert list(histogram.items()) == list(counters[table].items()), table
+
+
+def test_decode_restores_dynamic_values():
+    """One decoder serves ``Parser.read_table`` (Python lists) and the
+    jsonschema fallback (pandas cells, numpy arrays for list cells)."""
+    import numpy as np
+
+    from adtl_spark.functions.render import decode
+
+    assert decode("True") is True and decode("False") is False
+    assert decode(" 7 ") == 7 and isinstance(decode("7"), int)
+    assert decode("2.50") == 2.5 and decode("1e-5") == 1e-5
+    assert decode("abc") == "abc" and decode("") == ""
+    assert decode(["1", "x", ["False"]]) == [1, "x", [False]]
+    assert decode(np.array(["1", "2.5"], dtype=object)) == [1, 2.5]
+    assert decode(None) is None and decode(3) == 3
