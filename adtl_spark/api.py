@@ -11,11 +11,16 @@ import weakref
 from pathlib import Path
 from typing import Any, Callable, Iterable
 
-from pyspark import SparkContext
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from adtl_spark.functions.render import decode
-from adtl_spark.plans.tables import build_all_tables, in_row_order, order_keys
+from adtl_spark.plans.tables import (
+    StreamingUnsupportedError,
+    build_all_tables,
+    in_row_order,
+    order_keys,
+)
 from adtl_spark.session import get_spark
 from adtl_spark.sources.io import (
     dataframe_from_rows,
@@ -134,7 +139,9 @@ class Parser:
         over a streaming source the row-local tables (oneToOne, oneToMany)
         are streaming DataFrames, ready for ``writeStream``; the constant
         tables are left out, and a groupBy table raises
-        ``StreamingUnsupportedError`` (see ``plans.tables``)."""
+        ``StreamingUnsupportedError`` (see ``plans.tables``).  A streaming
+        parse has no report: ``report_available`` is False and
+        ``build_report()`` raises ``StreamingUnsupportedError``."""
         return self._run(source, skip_validation)
 
     def _run(self, source: DataFrame, skip_validation: bool) -> "Parser":
@@ -152,7 +159,7 @@ class Parser:
         self.data = {
             name: in_row_order(df, self.ordered_output) for name, df in tables.items()
         }
-        self.report_available = not skip_validation
+        self.report_available = not (skip_validation or source.isStreaming)
         return self
 
     def _cache(self) -> None:
@@ -233,13 +240,29 @@ class Parser:
         return cols
 
     def save(self, output: str | None = None, format: str = "csv") -> None:
+        """Write every table to ``{output}-{table}.{format}``, all tables at
+        once: one thread per table, each in the caller's job group.  Waits
+        for every write, then re-raises the first failed table's error."""
+        writers = {"parquet": self.write_parquet, "csv": self.write_csv}
+        if format not in writers:
+            raise ValueError(f"'Parser.save()': Invalid format: {format}")
+        self._cache()
+        errors: dict[str, BaseException] = {}
+
+        def run(table: str) -> None:
+            try:
+                writers[format](table, f"{output}-{table}.{format}")
+            except BaseException as e:
+                errors[table] = e
+
+        threads = [InheritableThread(run, args=(t,)) for t in self.tables]
+        for thread in threads:
+            thread.start()
+        for thread in threads:
+            thread.join()
         for table in self.tables:
-            if format == "parquet":
-                self.write_parquet(table, f"{output}-{table}.parquet")
-            elif format == "csv":
-                self.write_csv(table, f"{output}-{table}.csv")
-            else:
-                raise ValueError(f"'Parser.save()': Invalid format: {format}")
+            if table in errors:
+                raise errors[table]
 
     def conflicts(self, table: str, source: DataFrame | None = None) -> DataFrame:
         """Verbose-mode overwrite summary for a groupBy table: attributes
@@ -262,6 +285,11 @@ class Parser:
     # ----------------------------------------------------------------- report
 
     def build_report(self) -> dict[str, Any]:
+        if any(df.isStreaming for df in self._unsorted.values()):
+            raise StreamingUnsupportedError(
+                "a streaming parse has no validation report: its tables "
+                "are unbounded; write them with writeStream instead"
+            )
         # counts need no row order: group the cached tables, no sort
         self._cache()
         self.report = validation_report(self._unsorted)

@@ -10,7 +10,10 @@ target scale factor, then the timed run measures steady-state execution
 would be the majority of several queries' wall time and would drown the
 signal the benchmark exists to track.  The warmup runs at the TARGET sf
 (not a smaller one) because queries embedding data-derived literals (IVF
-centroids) generate a different codegen class per scale factor.  No
+centroids) generate a different codegen class per scale factor.
+``get_spark`` sizes Spark's codegen class cache (8192 entries, twice the
+~3,490 classes one pass of the full suite compiles at sf0.001), so the classes the untimed warm phase
+generates are still cached in the timed phase.  No
 cached state survives into the timed run: the dedup operators release
 their persisted intermediates after materializing, and the timed run
 rebuilds every plan from scratch (construction is INSIDE the timer — the
@@ -554,6 +557,8 @@ def main() -> None:
     # shuffle, Tungsten) is JVM-global and takes several queries to reach
     # steady state — measured: the first two queries read 9 s on their
     # SECOND execution in a cold JVM vs <2 s once the session is hot.
+    # The codegen classes this phase compiles stay cached for phase 2:
+    # get_spark's class cache holds the whole suite's.
     for name in jvm_queries:
         all_q[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         _release_leaked_blocks(spark)

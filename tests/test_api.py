@@ -173,6 +173,43 @@ def test_tables_keep_file_order_over_the_cache(spark, tmp_path):
     assert p.table("subject").columns == ["adtl_valid", "adtl_error", "subject_id", "age"]
 
 
+def test_save_writes_tables_concurrently_in_file_order(spark, tmp_path, monkeypatch):
+    """``save()`` writes each table from a thread of its own, waits for
+    every write and re-raises the first failed table's error in table
+    order; every table it wrote holds its rows in file order."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    import adtl_spark.api as api
+
+    real_write = api.write_parquet
+    threads = {}
+
+    def write(df, path):
+        table = Path(path).name.split("-", 1)[1].split(".")[0]
+        threads[table] = threading.get_ident()
+        if table in ("visit", "obs"):
+            raise RuntimeError(f"{table} failed")
+        real_write(df, path)
+
+    monkeypatch.setattr(api, "write_parquet", write)
+    csv = _write_csv(tmp_path / "data.csv")
+    out = str(tmp_path / "out")
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse(str(csv))
+        with pytest.raises(RuntimeError, match="visit failed"):
+            p.save(out, format="parquet")
+        assert set(threads) == {"subject", "visit", "obs", "metadata"}
+        assert len(set(threads.values())) == 4
+        assert threading.get_ident() not in threads.values()
+        for table in ("subject", "metadata"):
+            want = [r.asDict() for r in p.table(table).collect()]
+            files = sorted(Path(f"{out}-{table}.parquet").glob("*.parquet"))
+            got = [r for f in files for r in pq.read_table(f).to_pylist()]
+            assert got == want, table
+
+
 def test_reparse_releases_the_previous_cache(spark, tmp_path):
     _clear_caches(spark)
     p = Parser(_spec(tmp_path), spark=spark)

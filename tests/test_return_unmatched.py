@@ -132,3 +132,5 @@ def test_return_unmatched_parquet_rejected(spark, tmp_path):
     p = Parser(spec, spark=spark).parse_rows([{"x": "1"}], skip_validation=True)
     with pytest.raises(ValueError, match="parquet"):
         p.write_parquet("tab", str(tmp_path / "out.parquet"))
+    with pytest.raises(ValueError, match="parquet"):
+        p.save(str(tmp_path / "out"), format="parquet")

@@ -286,3 +286,32 @@ def test_reliable_cut_files_are_deleted_once_unreferenced(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "left: []" in proc.stdout, proc.stdout
+
+
+
+def test_warm_passes_reuse_generated_code(spark, tmp_path, clinical_study):
+    """``get_spark`` sizes Spark's JVM-wide codegen class cache above the
+    engine's working set, so the third parse, report and save of the
+    golden spec and of the study spec compiles no class.  One such pass
+    generates about 110 classes, more than Spark's default cache of 100
+    holds: under the default, each pass recompiles about 60 of them."""
+    from test_golden_csv import CSV, SPEC
+
+    from adtl_spark.api import Parser
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+    golden = tmp_path / "golden.csv"
+    golden.write_text(CSV)
+    study = clinical_study(3, 50, tmp_path / "study")
+    runs = [(SPEC, str(golden), "csv"), (str(study.spec_path), str(study.csv_path), "parquet")]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    counts = []
+    for i in range(3):
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        for j, (spec, csv, fmt) in enumerate(runs):
+            with Parser(spec, spark=spark) as parser:
+                parser.parse(csv)
+                parser.build_report()
+                parser.save(str(tmp_path / f"out{i}-{j}"), format=fmt)
+        counts.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+    assert counts[2] == 0, counts

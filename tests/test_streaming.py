@@ -129,6 +129,34 @@ def test_spec_stream_omits_constants_and_rejects_groupby_among_tables(spark, tmp
         Parser(spec, spark=spark).parse_dataframe(stream)
 
 
+def test_streaming_parse_has_no_report(spark, tmp_path):
+    """A streaming parse is validated row by row but has no report: it
+    says so, and ``build_report()`` raises the named error instead of
+    running a batch action over the stream."""
+    schema = tmp_path / "subject.json"
+    schema.write_text(json.dumps({"properties": {"subject_id": {"pattern": "^S1$"}}}))
+    spec = {
+        "adtl": {
+            "name": "s",
+            "description": "",
+            "tables": {"subject": {"kind": "oneToOne", "schema": str(schema)}},
+        },
+        "subject": {"subject_id": {"field": "sid"}},
+    }
+    parser = Parser(spec, spark=spark).parse_dataframe(
+        _csv_source(spark, tmp_path, "sid,sex\nS1,1\n")
+    )
+    assert parser.report_available is False
+    with pytest.raises(StreamingUnsupportedError, match="streaming parse"):
+        parser.build_report()
+    parser.show_report()  # prints nothing, raises nothing
+    batch = Parser(spec, spark=spark).parse_dataframe(
+        _csv_source(spark, tmp_path, "sid,sex\nS1,1\n", stream=False)
+    )
+    assert batch.report_available is True
+    assert batch.build_report()["total_valid"] == {"subject": 1}
+
+
 def _event_stream_df(spark, tmp_path):
     import json
 

@@ -6,7 +6,9 @@ For each named registry query, in ONE fresh session per query:
   * warm it ``--warm`` times untimed (JVM codegen + Python worker pool),
   * run it ``--timed`` times against the noop sink with the timer around
     construction + materialization (bench.py methodology),
-  * print per-run seconds and the min (steady state),
+  * print per-run seconds and the min (steady state), and beside them each
+    run's codegen compiles and summed compile ms (``CodegenMetrics``
+    deltas), so a query that recompiles its classes shows as compile-bound,
   * with --explain DIR, save ``df.explain('formatted')`` to DIR/<q>_<tag>.txt.
 
 Timings are isolated probes — comparable to the verdict's adjudication
@@ -24,6 +26,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from adtl_spark import queries as Q
 from adtl_spark.session import get_spark
+
+
+def _codegen_totals(spark) -> tuple[int, float]:
+    """Classes Spark has compiled in this JVM so far, and their summed
+    compile milliseconds."""
+    jvm = spark._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), generator.compileTime() / 1e6
 
 
 def main() -> None:
@@ -50,15 +61,23 @@ def main() -> None:
                 all_q[name](spark, args.sf_dir).write.mode(
                     "overwrite").format("noop").save()
                 _release_leaked_blocks(spark)
-            runs = []
+            runs, compiles, compile_ms = [], [], []
             for _ in range(args.timed):
                 spark.sparkContext.setJobDescription(f"profile:{name}")
+                n0, ms0 = _codegen_totals(spark)
                 t0 = time.time()
                 df = all_q[name](spark, args.sf_dir)
                 df.write.mode("overwrite").format("noop").save()
                 runs.append(round(time.time() - t0, 3))
+                n1, ms1 = _codegen_totals(spark)
+                compiles.append(n1 - n0)
+                compile_ms.append(round(ms1 - ms0, 1))
                 _release_leaked_blocks(spark)
-            print(f"{name}: runs={runs} min={min(runs)}", flush=True)
+            print(
+                f"{name}: runs={runs} min={min(runs)} "
+                f"compiles={compiles} compile_ms={compile_ms}",
+                flush=True,
+            )
             if args.explain:
                 os.makedirs(args.explain, exist_ok=True)
                 df = all_q[name](spark, args.sf_dir)
