@@ -19,7 +19,6 @@ from adtl_spark.plans.tables import (
     StreamingUnsupportedError,
     build_all_tables,
     in_row_order,
-    order_keys,
 )
 from adtl_spark.session import get_spark
 from adtl_spark.sources.io import (
@@ -61,8 +60,12 @@ class Parser:
     (source scan, rules, groupBy, validator).  A parse whose tables are
     only read through ``data`` caches nothing.  The cache sits below the
     row-order sort: the report reads it unsorted, and every ordered
-    consumer sorts on top of it.  Only tables with order keys are cached:
-    a constant table is one literal row, and a streaming table cannot be.
+    consumer sorts on top of it.  Every non-constant table of a batch
+    parse is cached: a constant table is one literal row, and a streaming
+    table cannot be.  A row-local table (oneToOne, oneToMany) of a small
+    single-file source needs no sort at all: it is built narrow over the
+    scan, so its cached partitions hold its rows in file order already
+    (see ``plans.tables``).
     The Parser owns the cache and releases it on the next ``parse*``, on
     ``close()`` (or leaving a ``with`` block), and when it is
     garbage-collected; tables obtained before then stay valid and
@@ -155,7 +158,11 @@ class Parser:
                 for name, df in tables.items()
             }
         self._unsorted = tables
-        self._uncached = [df for df in tables.values() if order_keys(df)]
+        self._uncached = [
+            df
+            for name, df in tables.items()
+            if self.tables[name].get("kind") != "constant" and not df.isStreaming
+        ]
         self.data = {
             name: in_row_order(df, self.ordered_output) for name, df in tables.items()
         }
@@ -280,7 +287,7 @@ class Parser:
             self.spec, source.columns, self.custom_transforms,
             dtypes=dict(source.dtypes),
         )
-        return group_conflicts(self.spec, table, attach_row_id(source), compiler)
+        return group_conflicts(self.spec, table, attach_row_id(source)[0], compiler)
 
     # ----------------------------------------------------------------- report
 

@@ -504,9 +504,11 @@ def _wrap_custom(
                     rendered.append(None)
         return pd.DataFrame({"failed": failed, "value": rendered})
 
-    # variadic signature defeats type-hint inference; pass the eval type
-    # explicitly (SCALAR pandas UDF)
-    run_udf = F.pandas_udf(run, returnType=out_type, functionType=F.PandasUDFType.SCALAR)
+    # pandas_udf infers a scalar pandas UDF from these hints; set as
+    # objects, since ``from __future__ import annotations`` would leave
+    # strings naming a local import
+    run.__annotations__ = {"series": pd.Series, "return": pd.DataFrame}
+    run_udf = F.pandas_udf(run, returnType=out_type)
     res = stage_udf(run_udf(F.expr(value), *[F.expr(p) for p in col_params]))
     return (
         S.case([(S.field(res, "failed"), fail_value)], S.field(res, "value")),

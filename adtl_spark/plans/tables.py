@@ -19,14 +19,20 @@ plan over the source DataFrame:
 File-order semantics: ``lastNotNull``/``firstNonNull``/``list`` depend on
 source row order (parser.py:590, 615).  A row id is captured at read time,
 before any shuffle: a plain monotonic id for single-file/non-file sources,
-and a ``(file, split offset, id)`` composite struct for globbed multi-file
-reads (see ``attach_row_id``) — the reference reads exactly one CSV, so the
-multi-file order is this engine's extension, defined as sorted-path order.
-Tables do not sort themselves: each keeps its order keys (``ORDER_KEYS``)
-as columns.  ``in_row_order`` sorts on them and drops them; ``api.Parser``
-applies it on top of its cached tables, so consumers that need no order
-(the validation report) read the tables without a sort, and place rows
-with ``row_position``.
+and a split-rank id for globbed multi-file reads (see ``attach_row_id``) —
+the reference reads exactly one CSV, so the multi-file order is this
+engine's extension, defined as sorted-path order.
+
+A small source is not spread across cores (see ``SPREAD_MIN_BYTES``): its
+tables run narrow over the scan.  A row-local table (oneToOne, oneToMany)
+built narrow over a plain monotonic id is in file order by construction,
+partition by partition, so it carries no order keys.  Every other table
+keeps its order keys (``ORDER_KEYS``) as columns: groupBy tables, and the
+row-local tables of a spread or multi-file source.  Tables do not sort
+themselves: ``in_row_order`` sorts on the keys and drops them, and
+``api.Parser`` applies it on top of its cached tables, so consumers that
+need no order (the validation report) read the tables without a sort,
+and place rows with ``row_position``.
 """
 
 from __future__ import annotations
@@ -55,6 +61,21 @@ class StreamingUnsupportedError(ValueError):
 
 _CTR_MASK = (1 << 33) - 1  # monotonic id: partition index << 33 | counter
 
+# Planned source size (plan statistics, no job) from which a batch source is
+# spread across all cores before its rules run.  Below it the rules run
+# narrow over the scan: fewer tasks, and no exchange for the row-local
+# tables to undo with a row-order sort.  Warm study passes
+# (tools/profile_query.py --study, 4-core host), narrow against spread,
+# median of 3 alternated pairs:
+#   subjects    5k    10k   12k   14k   17k   20k   100k
+#   CSV MB      1.07  2.14  2.57  3.0   3.6   4.3   21.4
+#   splits      1     1     1     1     1     2     4
+#   narrow     -8%   -5%   +8%   +5%   +15%  +15%  -7%
+# The crossover is between 2.1 and 2.6 MB; a source with as many splits as
+# cores is parallel without the spread, but at 2 MiB and above the spread
+# is kept.
+SPREAD_MIN_BYTES = 2 << 20
+
 
 def _file_splits(df: DataFrame) -> list[tuple[int, str, int]] | None:
     """(partition index, file path, byte offset) for every split of a
@@ -73,12 +94,21 @@ def _file_splits(df: DataFrame) -> list[tuple[int, str, int]] | None:
         return None
 
 
-def attach_row_id(df: DataFrame) -> DataFrame:
-    """Stable per-row LONG id capturing file order; must run before any
-    shuffle.
+def attach_row_id(df: DataFrame) -> tuple[DataFrame, bool]:
+    """``df`` with its file-order row id, and whether that id is the plain
+    ``monotonically_increasing_id`` (see ``_split_rank_id``).  Must run
+    before any shuffle."""
+    rank_id = _split_rank_id(df)
+    if rank_id is None:
+        return df.withColumn(ROW_ID, F.monotonically_increasing_id()), True
+    return df.withColumn(ROW_ID, rank_id), False
 
-    Single file (or non-file source): ``monotonically_increasing_id`` —
-    Spark's split ordering makes it consistent with file order.
+
+def _split_rank_id(df: DataFrame) -> Column | None:
+    """Stable per-row LONG id capturing the file order of a multi-file
+    read, or None when the plain ``monotonically_increasing_id`` already
+    does: a single file (or a non-file source), whose splits Spark orders
+    by offset.
 
     Multi-file reads need more: Spark packs splits into partitions ordered
     by SIZE, not path, so the raw id interleaves files.  The driver
@@ -104,16 +134,15 @@ def attach_row_id(df: DataFrame) -> DataFrame:
     ``input_file_name``.  "File order" for a glob is defined as
     sorted-path order, each file in its own row order.
     """
-    mid = F.monotonically_increasing_id()
     try:
         files = df.inputFiles()
     except Exception:
         files = []
     if len(files) <= 1:
-        return df.withColumn(ROW_ID, mid)
+        return None
     splits = _file_splits(df)
     if not splits:
-        return df.withColumn(ROW_ID, mid)
+        return None
 
     ranked = sorted(splits, key=lambda s: (s[1], s[2]))
     rank_of = {key: i for i, key in enumerate(ranked)}
@@ -133,7 +162,7 @@ def attach_row_id(df: DataFrame) -> DataFrame:
         F.spark_partition_id() + 1,
     )
 
-    ctr = mid.bitwiseAND(F.lit(_CTR_MASK))
+    ctr = F.monotonically_increasing_id().bitwiseAND(F.lit(_CTR_MASK))
     if multi_pids:
         pairs: list[Column] = []
         for key, r in rank_of.items():
@@ -156,7 +185,7 @@ def attach_row_id(df: DataFrame) -> DataFrame:
     # query ~2.3x slower on every run (it pins the generated code on a
     # permanently-deoptimized path; without it the same plan JITs to the
     # plain-id speed after the first run)
-    return df.withColumn(ROW_ID, F.shiftleft(rank, 33).bitwiseOR(ctr))
+    return F.shiftleft(rank, 33).bitwiseOR(ctr)
 
 
 def order_keys(df: DataFrame) -> list[str]:
@@ -168,7 +197,9 @@ def order_keys(df: DataFrame) -> list[str]:
 
 def in_row_order(df: DataFrame, ordered: bool = True) -> DataFrame:
     """``df`` without its order-key columns, sorted on them first when
-    ``ordered`` (a global range exchange)."""
+    ``ordered`` (a global range exchange).  A frame without order keys is
+    returned as it is: a row-local table built narrow is in row order
+    already, and a constant table is one row."""
     keys = order_keys(df)
     if keys and ordered:
         df = df.orderBy(*keys)
@@ -179,8 +210,9 @@ def row_position(df: DataFrame) -> tuple[DataFrame, Column]:
     """``df`` and each row's position in output order, as one
     ``decimal(38,0)``: the row id and the block position packed together
     (a min over it stays a hash aggregate; over a struct it plans a sort
-    aggregate).  A frame without order keys (already sorted, or a constant
-    table's one row) gets a monotonic id column to stand for them."""
+    aggregate).  A frame without order keys is in output order partition
+    by partition (a row-local table built narrow, a sorted frame, or a
+    constant table's one row), so a monotonic id column stands for them."""
     keys = order_keys(df)
     if not keys:
         df = df.withColumn(_ROW_SEQ, F.monotonically_increasing_id())
@@ -191,6 +223,13 @@ def row_position(df: DataFrame) -> tuple[DataFrame, Column]:
     return df, pos
 
 
+def _planned_bytes(df: DataFrame) -> int:
+    """``df``'s size as its optimized plan estimates it: no job.  A source
+    that cannot tell (an RDD) reports Long.MaxValue."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
 def build_all_tables(
     spec: CompiledSpec,
     df: DataFrame,
@@ -198,8 +237,14 @@ def build_all_tables(
     custom_transforms: dict[str, Callable] | None = None,
 ) -> dict[str, DataFrame]:
     """One unsorted plan per table, over a batch or a streaming source.
-    Over a batch source every non-constant table carries its
-    ``order_keys`` columns; sorting on them restores the reference's row
+
+    A batch source gets its row id, then is spread across all cores when
+    its planned size reaches ``SPREAD_MIN_BYTES`` (a source whose plan
+    cannot tell its size counts as large); below that, every table runs
+    narrow over the scan.  A groupBy table carries its ``order_keys``
+    columns, and so does a row-local table unless it is built narrow over
+    a plain monotonic row id: then its partitions hold its rows in file
+    order already.  Sorting on the keys restores the reference's row
     order, at the cost of a global range exchange that consumers which
     need no order can skip.  A streaming source has no file order: its
     tables carry no order keys, the constant tables are left out (one
@@ -211,21 +256,25 @@ def build_all_tables(
     )
     streaming = df.isStreaming
     out: dict[str, DataFrame] = {}
+    keyed = False  # whether the row-local tables carry order keys
     if not streaming:
-        # row id BEFORE any exchange (it encodes file order), then spread a
-        # low-split scan across all cores — the rule projection is the
-        # engine's hot loop and must not run on one task just because the
-        # local file has one row group.  The row id restores file order
-        # afterwards; hashing on the unique row id avoids round-robin's
-        # defensive pre-shuffle sort.
-        df = scan_parallel(attach_row_id(df), by=F.col(ROW_ID))
+        spread = _planned_bytes(df) >= SPREAD_MIN_BYTES
+        # row id BEFORE any exchange: it encodes file order
+        df, plain_id = attach_row_id(df)
+        if spread:
+            # the rule projection is the engine's hot loop: on a large
+            # source it must not run on one task just because the file has
+            # one split.  Hashing on the unique row id avoids round-robin's
+            # defensive pre-shuffle sort.
+            df = scan_parallel(df, by=F.col(ROW_ID))
+        keyed = spread or not plain_id
     for table, meta in spec.tables.items():
         kind = meta.get("kind")
         if kind == "constant":
             if not streaming:
                 out[table] = _constant_table(spec, table, spark)
         elif kind == "oneToMany":
-            out[table] = _one_to_many_table(spec, table, df, compiler)
+            out[table] = _one_to_many_table(spec, table, df, compiler, keyed)
         elif meta.get("groupBy"):
             if streaming:
                 raise StreamingUnsupportedError(
@@ -234,7 +283,7 @@ def build_all_tables(
                 )
             out[table] = _group_by_table(spec, table, df, compiler)
         else:
-            out[table] = _one_to_one_table(spec, table, df, compiler)
+            out[table] = _one_to_one_table(spec, table, df, compiler, keyed)
     return out
 
 
@@ -271,7 +320,7 @@ def _wide_cell(value: Value) -> str:
 
 
 def _one_to_one_table(
-    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler, keyed: bool
 ) -> DataFrame:
     stage = Stage()
     cols = []
@@ -281,7 +330,7 @@ def _one_to_one_table(
             rule, attr, _schema_type(spec, table, attr), stage=stage
         )
         cols.append(S.alias(_wide_cell(value), attr))
-    keys = [_ROW_ID] if ROW_ID in df.columns else []  # streaming: no row id
+    keys = [_ROW_ID] if keyed else []
     return stage.apply(df).selectExpr(*keys, *cols)
 
 
@@ -437,7 +486,7 @@ def _dynamic_min_max(cell: str, value: Value, combined: str, rid: str) -> str:
 
 
 def _one_to_many_table(
-    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler
+    spec: CompiledSpec, table: str, df: DataFrame, compiler: RuleCompiler, keyed: bool
 ) -> DataFrame:
     blocks = spec.table_specs[table]
     fieldnames = list(spec.fieldnames[table])
@@ -483,11 +532,11 @@ def _one_to_many_table(
     ]
     blocks_arr = S.call("filter", S.call("array", *structs), "__b -> (__b IS NOT NULL)")
     fields = [S.alias(S.field("`__row__`", a), a) for a in fieldnames]
-    if ROW_ID not in df.columns:  # streaming source: no row id, no ordering
+    if not keyed:  # explode keeps each row's blocks in spec order, in place
         exploded = stage.apply(df).selectExpr(S.alias(S.call("explode", blocks_arr), "__row__"))
         return exploded.selectExpr(*fields)
     # posexplode keeps the block position so (row, block) file order can be
-    # restored after the parallelizing repartition
+    # restored by a sort
     exploded = stage.apply(df).selectExpr(
         _ROW_ID,
         f"{S.call('posexplode', blocks_arr)} AS ({S.ident(ROW_POS)}, `__row__`)",

@@ -239,10 +239,11 @@ def _fallback_check(attr: str, prop: StrDict) -> Column | None:
 
         return values.map(one).astype("object")
 
-    # functionType passed explicitly: string annotations (from __future__
-    # import annotations) defeat pandas_udf's hint inference
-    _check = F.pandas_udf(_check_batch, "boolean", F.PandasUDFType.SCALAR)
-    return _check(F.col(attr))
+    # pandas_udf infers its kind from type hints, which ``from __future__
+    # import annotations`` leaves as strings naming a local import: give it
+    # the objects
+    _check_batch.__annotations__ = {"values": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_check_batch, "boolean")(F.col(attr))
 
 
 def _property_checks(
@@ -368,8 +369,11 @@ def annotate_validation(
             error = S.case(cases, unknown_msg)
     if error is None:
         error = _first_error(_subschema_violations(schema, columns, array_cols, stage))
-    # adtl_valid / adtl_error prepended in one projection; staged checks
-    # are dropped again
+    # staged, the error chain runs once per row: CollapseProject does not
+    # inline a non-cheap column that the next projection reads twice.
+    # adtl_valid / adtl_error are prepended in one projection; staged
+    # columns are dropped again
+    error = stage.expr(error)
     return stage.apply(df).selectExpr(
         S.alias(S.is_null(error), "adtl_valid"),
         S.alias(error, "adtl_error"),
@@ -382,37 +386,44 @@ def _first_error(checks: list[tuple[str, str]]) -> str:
     return S.case([(cond, S.lit(msg)) for cond, msg in checks], S.NULL_STRING)
 
 
-def _histogram(name: str, df: DataFrame) -> DataFrame:
-    """``df``'s rows counted per ``adtl_error`` (its null key holds the
-    valid rows), with the least ``row_position`` of each message's rows."""
+def _positioned(name: str, df: DataFrame) -> DataFrame:
+    """``df``'s rows as (table, adtl_error, valid, position): the input of
+    the report's one aggregate."""
     df, pos = row_position(df)
-    return (
-        df.groupBy("adtl_error")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
-            F.min(pos).alias("first"),
-        )
-        .select(F.lit(name).alias("table"), "adtl_error", "n", "valid", "first")
+    return df.select(
+        F.lit(name).alias("table"),
+        "adtl_error",
+        F.col("adtl_valid").cast("int").alias("valid"),
+        pos.alias("position"),
     )
 
 
 def validation_report(tables: dict[str, DataFrame]) -> dict[str, Any]:
     """S9 validation counters: totals + error histogram per table
-    (reference: parser.py:845-863, cli.py:78-90) — one error histogram
-    per validated table, all of them computed by a single action.  A
-    table's messages come in the order of their first rows, as the
+    (reference: parser.py:845-863, cli.py:78-90).  The validated tables'
+    rows are unioned and counted per (table, ``adtl_error``) — its null
+    key holds the valid rows — by one aggregate, with the least
+    ``row_position`` of each message's rows: one shuffle and one action.
+    A table's messages come in the order of their first rows, as the
     reference's ``Counter`` over the rows gives them."""
     report: dict[str, Any] = {"total": {}, "total_valid": {}, "validation_errors": {}}
     names = [name for name, df in tables.items() if "adtl_valid" in df.columns]
     if not names:
         return report
-    histograms = [_histogram(name, tables[name]) for name in names]
     for name in names:
         report["total"][name] = 0
         report["total_valid"][name] = 0
         report["validation_errors"][name] = {}
-    rows = reduce(DataFrame.union, histograms).collect()
+    rows = (
+        reduce(DataFrame.union, [_positioned(name, tables[name]) for name in names])
+        .groupBy("table", "adtl_error")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("valid").alias("valid"),
+            F.min("position").alias("first"),
+        )
+        .collect()
+    )
     for table, error, n, valid, first in sorted(rows, key=lambda r: r.first):
         report["total"][table] += n
         report["total_valid"][table] += valid or 0

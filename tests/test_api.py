@@ -14,6 +14,7 @@ from pathlib import Path
 import pytest
 
 from adtl_spark.api import Parser
+from adtl_spark.plans.tables import ROW_ID, ROW_POS, order_keys
 
 N_SUBJECTS = 60
 VISITS = 3
@@ -72,9 +73,9 @@ def _spec(tmp_path):
     return spec
 
 
-def _write_csv(path: Path, shift: int = 0) -> Path:
+def _write_csv(path: Path, shift: int = 0, subjects: range = range(N_SUBJECTS)) -> Path:
     lines = ["sid,age,day,temp"]
-    for s in range(N_SUBJECTS):
+    for s in subjects:
         for d in range(VISITS):
             age = "" if d else str((s * 7 + shift) % 140)
             temp = "" if (s + d) % 5 == 0 else f"{34 + (s * d) % 5}.5"
@@ -153,14 +154,11 @@ def test_second_consumer_reads_no_source(spark, tmp_path, report_first):
                        "metadata": 1}
 
 
-def test_tables_keep_file_order_over_the_cache(spark, tmp_path):
-    csv = _write_csv(tmp_path / "data.csv")
-    with Parser(_spec(tmp_path), spark=spark) as p:
-        p.parse(str(csv))
-        p.build_report()  # fills the cache first
-        subjects = [r["subject_id"] for r in p.read_table("subject")]
-        visits = [(r["subject_id"], r["day"]) for r in p.read_table("visit")]
-        obs = [(r["subject_id"], r["name"]) for r in p.read_table("obs", typed=False)]
+def _assert_file_order(p):
+    """Every table of a parse of ``_write_csv``'s rows reads in file order."""
+    subjects = [r["subject_id"] for r in p.read_table("subject")]
+    visits = [(r["subject_id"], r["day"]) for r in p.read_table("visit")]
+    obs = [(r["subject_id"], r["name"]) for r in p.read_table("obs", typed=False)]
     assert subjects == [f"S{s:03d}" for s in range(N_SUBJECTS)]
     assert visits == [(f"S{s:03d}", d) for s in range(N_SUBJECTS) for d in range(VISITS)]
     want_obs = []
@@ -170,7 +168,118 @@ def test_tables_keep_file_order_over_the_cache(spark, tmp_path):
                 want_obs.append((f"S{s:03d}", "temp"))
             want_obs.append((f"S{s:03d}", "day"))
     assert obs == want_obs
+
+
+def _keys(p) -> dict[str, list[str]]:
+    return {name: order_keys(df) for name, df in p._unsorted.items()}
+
+
+def test_tables_keep_file_order_over_the_cache(spark, tmp_path):
+    csv = _write_csv(tmp_path / "data.csv")
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse(str(csv))
+        p.build_report()  # fills the cache first
+        _assert_file_order(p)
+        # a small single file runs narrow: only the groupBy table sorts
+        assert _keys(p) == {"subject": [ROW_ID], "visit": [], "obs": [], "metadata": []}
     assert p.table("subject").columns == ["adtl_valid", "adtl_error", "subject_id", "age"]
+
+
+def test_narrow_parse_keeps_file_order_over_several_splits(spark, tmp_path):
+    """A narrow parse of one file split into several scan partitions keeps
+    file order: the plain row id orders the splits by offset, and the
+    row-local tables keep them in that order with no sort."""
+    csv = _write_csv(tmp_path / "data.csv")
+    confs = {"spark.sql.files.maxPartitionBytes": "1k", "spark.sql.files.openCostInBytes": "1"}
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        with Parser(_spec(tmp_path), spark=spark) as p:
+            p.parse(str(csv))
+            assert p.table("visit").rdd.getNumPartitions() >= 3
+            assert _keys(p)["visit"] == _keys(p)["obs"] == []
+            _assert_file_order(p)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_multi_file_source_keeps_the_sort(spark, tmp_path):
+    """A glob over two files carries split-rank row ids, so its row-local
+    tables keep their order keys and sort into sorted-path order.  The
+    second file is the larger: Spark packs it first."""
+    _write_csv(tmp_path / "part-0.csv", subjects=range(0, 10))
+    _write_csv(tmp_path / "part-1.csv", subjects=range(10, N_SUBJECTS))
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse(str(tmp_path / "*.csv"))
+        assert _keys(p)["visit"] == [ROW_ID]
+        assert _keys(p)["obs"] == [ROW_ID, ROW_POS]
+        _assert_file_order(p)
+
+
+def _parquet_rows(prefix: str, table: str) -> list[dict]:
+    """A written table's rows, its part files read in name order."""
+    import pyarrow.parquet as pq
+
+    files = sorted(Path(f"{prefix}-{table}.parquet").glob("*.parquet"))
+    return [row for f in files for row in pq.read_table(f).to_pylist()]
+
+
+def _study_outputs(spark, study, out: str):
+    with Parser(str(study.spec_path), spark=spark) as p:
+        p.parse(str(study.csv_path))
+        report = json.dumps(p.build_report())
+        keys = _keys(p)
+        p.save(out, format="parquet")
+    return keys, report, {t: _parquet_rows(out, t) for t in p.tables}
+
+
+def test_narrow_and_spread_parses_write_equal_output(spark, tmp_path, monkeypatch, clinical_study):
+    """The study at 500 subjects parses narrow; with the spread threshold at
+    0 the same source is spread across cores and every non-constant table
+    sorts.  Both write the same rows in file order and the same report."""
+    import csv
+
+    from adtl_spark.plans import tables
+
+    study = clinical_study(7, 500, tmp_path / "study")
+    narrow_keys, narrow_report, narrow_rows = _study_outputs(
+        spark, study, str(tmp_path / "narrow")
+    )
+    monkeypatch.setattr(tables, "SPREAD_MIN_BYTES", 0)
+    spread_keys, spread_report, spread_rows = _study_outputs(
+        spark, study, str(tmp_path / "spread")
+    )
+    assert narrow_keys["visit"] == narrow_keys["observation"] == []
+    assert spread_keys["visit"] == [ROW_ID]
+    assert spread_keys["observation"] == [ROW_ID, ROW_POS]
+    assert narrow_keys["subject"] == spread_keys["subject"] == [ROW_ID]
+    assert narrow_report == spread_report
+    assert narrow_rows == spread_rows
+    with open(study.csv_path, newline="") as fp:
+        source = [(r["sid"], r["visit_no"]) for r in csv.DictReader(fp)]
+    assert [(r["subject_id"], r["visit_no"]) for r in narrow_rows["visit"]] == source
+
+
+def test_narrow_study_plans_no_exchange_and_few_jobs(spark, tmp_path, clinical_study):
+    """On the narrow path the row-local tables plan no exchange, and
+    ``save`` after ``build_report`` (the benchmark's pass) runs at most six
+    jobs: one per row-local and constant table, three for the sorted
+    groupBy table."""
+    from test_plans import physical_plan
+
+    sc = spark.sparkContext
+    study = clinical_study(3, 500, tmp_path / "study")
+    group = f"narrow-save-{tmp_path.name}"
+    with Parser(str(study.spec_path), spark=spark) as p:
+        p.parse(str(study.csv_path))
+        for table in ("visit", "observation"):
+            assert "Exchange" not in physical_plan(p.table(table)), table
+        p.build_report()
+        _run_in_group(sc, group, lambda: p.save(str(tmp_path / "out"), format="parquet"))
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_save_writes_tables_concurrently_in_file_order(spark, tmp_path, monkeypatch):

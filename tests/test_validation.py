@@ -353,6 +353,49 @@ def test_report_is_one_collect(spark, tmp_path, monkeypatch):
         report = validation_report(tables)
         assert len(calls) == 1
         assert set(report["total"]) == {"subject", "empty", "obs"}
+    # over the unsorted tables, the one aggregate is the only shuffle
+    plan = calls[0]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, plan
+
+
+def test_error_chain_is_evaluated_once(spark, tmp_path):
+    """``adtl_valid`` and ``adtl_error`` read one staged error column:
+    every message literal appears once in the optimized plan, so
+    CollapseProject has not inlined the chain into both columns."""
+    p = _multi_table_parser(spark, tmp_path)
+    for table, message in (
+        ("subject", "data.age must be smaller than or equal to 120"),
+        ("obs", "No validator found for attribute '"),
+    ):
+        plan = p._unsorted[table]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count(message) == 1, (table, plan)
+
+
+def test_pandas_udfs_build_without_warnings(spark, tmp_path):
+    """The jsonschema fallback and a custom transformation both build
+    type-hinted pandas UDFs: no deprecation warning, and both still run."""
+    import warnings
+
+    pytest.importorskip("jsonschema")
+    mod = tmp_path / "custom.py"
+    mod.write_text("def shout(value):\n    return value.upper() if value else None\n")
+    schema = {"properties": {"v": {"if": {"pattern": "^A"}, "then": {"minLength": 3}}}}
+    spec = {
+        "adtl": {
+            "name": "u",
+            "description": "",
+            "tables": {"t": {"kind": "oneToOne", "schema": _write_schema(tmp_path, "t", schema)}},
+        },
+        "t": {"v": {"field": "v", "apply": {"function": "shout"}}},
+    }
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        p = Parser(spec, include_transform=str(mod), spark=spark)
+        p.parse_rows([{"v": s} for s in ["ab", "abc", "z"]])
+    assert [str(w.message) for w in caught] == []
+    got = [(r["v"], r["adtl_valid"]) for r in p.table("t").collect()]
+    assert got == [("AB", False), ("ABC", True), ("Z", True)]
 
 
 def test_study_report_order_is_first_occurrence(spark, tmp_path, clinical_study):
