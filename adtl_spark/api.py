@@ -62,8 +62,9 @@ class Parser:
     row-order sort: the report reads it unsorted, and every ordered
     consumer sorts on top of it.  Every non-constant table of a batch
     parse is cached: a constant table is one literal row, and a streaming
-    table cannot be.  A row-local table (oneToOne, oneToMany) of a small
-    single-file source needs no sort at all: it is built narrow over the
+    table cannot be.  A row-local table (oneToOne, oneToMany) of an
+    unspread single-file or non-file source (a small uncompressed CSV, a
+    ``parse_rows`` list) needs no sort at all: it is built narrow over the
     scan, so its cached partitions hold its rows in file order already
     (see ``plans.tables``).
     The Parser owns the cache and releases it on the next ``parse*``, on

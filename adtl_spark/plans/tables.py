@@ -23,16 +23,17 @@ and a split-rank id for globbed multi-file reads (see ``attach_row_id``) —
 the reference reads exactly one CSV, so the multi-file order is this
 engine's extension, defined as sorted-path order.
 
-A small source is not spread across cores (see ``SPREAD_MIN_BYTES``): its
-tables run narrow over the scan.  A row-local table (oneToOne, oneToMany)
-built narrow over a plain monotonic id is in file order by construction,
-partition by partition, so it carries no order keys.  Every other table
-keeps its order keys (``ORDER_KEYS``) as columns: groupBy tables, and the
-row-local tables of a spread or multi-file source.  Tables do not sort
-themselves: ``in_row_order`` sorts on the keys and drops them, and
-``api.Parser`` applies it on top of its cached tables, so consumers that
-need no order (the validation report) read the tables without a sort,
-and place rows with ``row_position``.
+A small uncompressed CSV source is not spread across cores (see
+``SPREAD_MIN_BYTES``): its tables run narrow over the scan.  A row-local
+table (oneToOne, oneToMany) built over an unspread source with a plain
+monotonic id is in file order by construction, partition by partition, so
+it carries no order keys.  Every other table keeps its order keys
+(``ORDER_KEYS``) as columns: groupBy tables, and the row-local tables of a
+spread or multi-file source.  Tables do not sort themselves:
+``in_row_order`` sorts on the keys and drops them, and ``api.Parser``
+applies it on top of its cached tables, so consumers that need no order
+(the validation report) read the tables without a sort, and place rows
+with ``row_position``.
 """
 
 from __future__ import annotations
@@ -61,19 +62,24 @@ class StreamingUnsupportedError(ValueError):
 
 _CTR_MASK = (1 << 33) - 1  # monotonic id: partition index << 33 | counter
 
-# Planned source size (plan statistics, no job) from which a batch source is
-# spread across all cores before its rules run.  Below it the rules run
-# narrow over the scan: fewer tasks, and no exchange for the row-local
-# tables to undo with a row-order sort.  Warm study passes
-# (tools/profile_query.py --study, 4-core host), narrow against spread,
-# median of 3 alternated pairs:
+# Planned size (plan statistics, no job) under which an uncompressed CSV
+# source runs its rules narrow over the scan instead of being spread across
+# cores: fewer tasks, and no exchange for the row-local tables to undo with
+# a row-order sort.  Warm study passes (tools/profile_query.py --study, one
+# uncompressed CSV file, 4-core host), narrow against spread, median of 3
+# alternated pairs:
 #   subjects    5k    10k   12k   14k   17k   20k   100k
 #   CSV MB      1.07  2.14  2.57  3.0   3.6   4.3   21.4
 #   splits      1     1     1     1     1     2     4
 #   narrow     -8%   -5%   +8%   +5%   +15%  +15%  -7%
 # The crossover is between 2.1 and 2.6 MB; a source with as many splits as
 # cores is parallel without the spread, but at 2 MiB and above the spread
-# is kept.
+# is kept.  At 2 cores narrow measured +3%, -6%, -5% at 5k, 10k, 12k:
+# the spread gains less on fewer cores.  More than 4 cores is unmeasured.
+# Only uncompressed CSV was measured: parquet, JSON and compressed CSV
+# report compressed or differently encoded bytes, which say little about
+# the rows the rules run over, so those sources keep the spread (see
+# ``_runs_narrow``).
 SPREAD_MIN_BYTES = 2 << 20
 
 
@@ -223,11 +229,16 @@ def row_position(df: DataFrame) -> tuple[DataFrame, Column]:
     return df, pos
 
 
-def _planned_bytes(df: DataFrame) -> int:
-    """``df``'s size as its optimized plan estimates it: no job.  A source
-    that cannot tell (an RDD) reports Long.MaxValue."""
+def _runs_narrow(df: DataFrame) -> bool:
+    """Whether a batch source's rules run narrow over its scan: an
+    uncompressed CSV file source (every input file named ``*.csv``; Spark
+    picks a codec by the file suffix) whose optimized plan estimates it
+    under ``SPREAD_MIN_BYTES`` (plan statistics, no job)."""
+    files = df.inputFiles()
+    if not files or not all(f.lower().endswith(".csv") for f in files):
+        return False
     stats = df._jdf.queryExecution().optimizedPlan().stats()
-    return int(stats.sizeInBytes())
+    return int(stats.sizeInBytes()) < SPREAD_MIN_BYTES
 
 
 def build_all_tables(
@@ -238,19 +249,19 @@ def build_all_tables(
 ) -> dict[str, DataFrame]:
     """One unsorted plan per table, over a batch or a streaming source.
 
-    A batch source gets its row id, then is spread across all cores when
-    its planned size reaches ``SPREAD_MIN_BYTES`` (a source whose plan
-    cannot tell its size counts as large); below that, every table runs
-    narrow over the scan.  A groupBy table carries its ``order_keys``
-    columns, and so does a row-local table unless it is built narrow over
-    a plain monotonic row id: then its partitions hold its rows in file
-    order already.  Sorting on the keys restores the reference's row
-    order, at the cost of a global range exchange that consumers which
-    need no order can skip.  A streaming source has no file order: its
-    tables carry no order keys, the constant tables are left out (one
-    literal row has no streaming shape), and a groupBy table raises
-    ``StreamingUnsupportedError`` (its file-order aggregates would need
-    unbounded state)."""
+    A batch source gets its row id.  A small uncompressed CSV source
+    (``_runs_narrow``) then runs every table narrow over the scan; any
+    other source goes through ``scan_parallel``, which spreads it across
+    all cores when its scan has few files.  A groupBy table carries its
+    ``order_keys`` columns, and so does a row-local table unless it is
+    built over an unspread source with a plain monotonic row id: then its
+    partitions hold its rows in file order already.  Sorting on the keys
+    restores the reference's row order, at the cost of a global range
+    exchange that consumers which need no order can skip.  A streaming
+    source has no file order: its tables carry no order keys, the constant
+    tables are left out (one literal row has no streaming shape), and a
+    groupBy table raises ``StreamingUnsupportedError`` (its file-order
+    aggregates would need unbounded state)."""
     compiler = RuleCompiler(
         spec, df.columns, custom_transforms, dtypes=dict(df.dtypes)
     )
@@ -258,16 +269,17 @@ def build_all_tables(
     out: dict[str, DataFrame] = {}
     keyed = False  # whether the row-local tables carry order keys
     if not streaming:
-        spread = _planned_bytes(df) >= SPREAD_MIN_BYTES
+        narrow = _runs_narrow(df)
         # row id BEFORE any exchange: it encodes file order
         df, plain_id = attach_row_id(df)
-        if spread:
-            # the rule projection is the engine's hot loop: on a large
-            # source it must not run on one task just because the file has
-            # one split.  Hashing on the unique row id avoids round-robin's
-            # defensive pre-shuffle sort.
-            df = scan_parallel(df, by=F.col(ROW_ID))
-        keyed = spread or not plain_id
+        # the rule projection is the engine's hot loop: on a large source
+        # it must not run on one task just because the file has one split.
+        # Hashing on the unique row id avoids round-robin's defensive
+        # pre-shuffle sort.  scan_parallel hands back ``df`` itself when it
+        # does not spread (no input files, or enough of them).
+        spread = df if narrow else scan_parallel(df, by=F.col(ROW_ID))
+        keyed = spread is not df or not plain_id
+        df = spread
     for table, meta in spec.tables.items():
         kind = meta.get("kind")
         if kind == "constant":

@@ -218,6 +218,48 @@ def test_multi_file_source_keeps_the_sort(spark, tmp_path):
         _assert_file_order(p)
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "csv.gz"])
+def test_small_non_csv_sources_keep_the_spread(spark, tmp_path, fmt):
+    """The narrow path's size threshold was measured on uncompressed CSV
+    only.  A small parquet or gzip CSV file is still spread across cores,
+    so its row-local tables keep their order keys and sort into file
+    order."""
+    import gzip
+
+    from adtl_spark.sources.io import read_csv_source
+
+    csv = _write_csv(tmp_path / "data.csv")
+    src = tmp_path / f"data.{fmt}"
+    if fmt == "parquet":
+        read_csv_source(spark, str(csv)).coalesce(1).write.parquet(str(src))
+    else:
+        with gzip.open(src, "wt") as fp:
+            fp.write(csv.read_text())
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse(str(src))
+        assert _keys(p)["visit"] == [ROW_ID]
+        assert _keys(p)["obs"] == [ROW_ID, ROW_POS]
+        _assert_file_order(p)
+
+
+def test_row_list_source_needs_no_sort(spark, tmp_path):
+    """A ``parse_rows`` source has no input files, so it is never spread:
+    its row-local tables carry no order keys, plan no exchange, and keep
+    the rows' order."""
+    import csv
+
+    from test_plans import physical_plan
+
+    with open(_write_csv(tmp_path / "data.csv"), newline="") as fp:
+        rows = [{k: v or None for k, v in r.items()} for r in csv.DictReader(fp)]
+    with Parser(_spec(tmp_path), spark=spark) as p:
+        p.parse_rows(rows)
+        assert _keys(p)["visit"] == _keys(p)["obs"] == []
+        for table in ("visit", "obs"):
+            assert "Exchange" not in physical_plan(p.table(table)), table
+        _assert_file_order(p)
+
+
 def _parquet_rows(prefix: str, table: str) -> list[dict]:
     """A written table's rows, its part files read in name order."""
     import pyarrow.parquet as pq
